@@ -1,40 +1,41 @@
-"""Distributed beam-search correction (D9) — all docs advance in lockstep.
+"""Distributed beam-search correction (D9).
 
 Reference lifecycle: per document, per flagged error, expand the beam with
 candidate substitutions, score, prune (correctionSentences.py:253-294).
-Spark-first re-expression:
+Two Spark engines run that one loop:
 
-- word probabilities are computed ONCE per document by an Arrow-batched
-  pandas UDF (the only Python in the loop); because the pinned scorer is
-  context-free per word, a substitution updates the sentence mean
-  INCREMENTALLY — so the entire beam loop below is pure Catalyst
-  arithmetic over nested arrays, no Python and no per-round shuffle;
-- the beam of ≤ beam_width² sentences lives in ONE ROW per document
-  (array<struct<words, probs, psum>>), so pruning and expansion are
-  array_sort/transform/aggregate expressions — the only exchange per round
-  is the broadcast of the candidate-batch table keyed by error word;
-- rounds are driven by the driver loop over the GLOBAL max error count
-  (SURVEY.md §7.2: bound the loop globally, mask finished docs — a doc
-  whose errors are exhausted passes through untouched);
-- ``localCheckpoint`` every few rounds truncates lineage (SURVEY.md §4.2).
+- the Arrow-batched path (``run_beam_udf``, and ``render_extract_correct``,
+  the flagship's fused stage): one mapInPandas stage runs
+  core/beam.correct_sentence per document — the very code the parity
+  oracle runs — through ONE worker-side corrector whose probability and
+  candidate memo (plus the SymSpell deletion index) persists across tasks;
+- the no-Python path (``run_beam_fold``): word probabilities come from one
+  Arrow-batched pandas UDF (``with_detection``); because the pinned scorer
+  is context-free per word, a substitution updates the sentence mean
+  INCREMENTALLY, so the whole beam loop is one Catalyst left fold over
+  nested arrays per document (array_sort/transform/aggregate), fed by the
+  candidate-batch table (operators/candidates.candidate_batches) through
+  one broadcast equi-join.
 
 Float parity with core/beam.py is bit-exact: identical expression shapes,
 identical left folds (see the FLOAT-PARITY CONTRACT there).
 """
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.text import sentence_words
 from ..functions.udfs import make_word_probs_array_udf
+from .extract import EXTRACT_SCHEMA, columnar, render_extract_row
+from .scorer_fit import CurrentFit
 
 BEAM_WIDTH = 3
-# checkpoint every round: the nested-array expansion expression is large
-# enough that letting plans accumulate costs more in Catalyst analysis
-# than the (tiny) per-round materialization job — measured 26.5s vs 60s
-# for 23 rounds at sf0.001
-CHECKPOINT_EVERY = 1
+CORRECTED_WORDS = T.StructField("corrected_words", T.ArrayType(T.StringType()), True)
 
 
 def _cmp(score_a: Column, text_a: Column, score_b: Column, text_b: Column) -> Column:
@@ -84,121 +85,6 @@ def distinct_error_words(detected: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def run_beam(
-    detected: DataFrame,
-    cand_agg: DataFrame,
-    beam_width: int = BEAM_WIDTH,
-    max_rounds: int | None = None,
-) -> DataFrame:
-    """detected → (url, ..., corrected_words). ``cand_agg`` from
-    operators/candidates.candidate_batches (broadcast every round)."""
-    detected = detected.localCheckpoint(eager=True)  # materialize the UDF pass once
-    max_err = detected.agg(F.max(F.size("errors"))).collect()[0][0] or 0
-    if max_rounds is not None:
-        max_err = min(max_err, max_rounds)
-
-    state = detected.withColumn(
-        "beams", F.array(F.struct(F.col("words"), F.col("probs"), F.col("psum")))
-    )
-    n = F.col("n").cast("double")
-
-    def beam_score(b):
-        return b["psum"] / n
-
-    def beam_text(b):
-        return F.concat_ws(" ", b["words"])
-
-    for round_no in range(max_err):
-        err = F.when(F.size("errors") > round_no, F.element_at("errors", round_no + 1))
-        state = state.withColumn("cur_err", err)
-        joined = state.join(
-            F.broadcast(cand_agg.withColumnRenamed("err_word", "cand_key")),
-            F.col("cur_err")["key"] == F.col("cand_key"),
-            "left",
-        )
-
-        pruned = F.slice(
-            F.array_sort(
-                F.col("beams"),
-                lambda a, b: _cmp(beam_score(a), beam_text(a), beam_score(b), beam_text(b)),
-            ),
-            1,
-            beam_width,
-        )
-        pos = F.col("cur_err")["pos"]
-        # within one candidate batch every sentence shares prefix+suffix,
-        # so full-text tie-break order == comparing cand_word + joiner
-        # (see core/beam.py) — entries are materialized only for the
-        # beam_width survivors, keeping the per-round expression small
-        sep = F.when(pos < F.col("n") - 1, F.lit(" ")).otherwise(F.lit(""))
-
-        def expand(b):
-            p_old = F.element_at(b["probs"], pos + 1)
-            with_psum = F.transform(
-                F.col("cands"),
-                lambda c: F.struct(
-                    c["word"].alias("word"),
-                    c["score"].alias("score"),
-                    c["p"].alias("p"),
-                    (b["psum"] - p_old + c["p"]).alias("psum2"),
-                ),
-            )
-            s_total = F.aggregate(with_psum, F.lit(0.0), lambda acc, x: acc + x["psum2"] / n)
-            scored = F.transform(
-                with_psum,
-                lambda x: F.struct(
-                    (x["score"] / F.col("w_total") + (x["psum2"] / n) / s_total).alias("total"),
-                    F.concat(x["word"], sep).alias("tie"),
-                    x["word"].alias("word"),
-                    x["p"].alias("p"),
-                    x["psum2"].alias("psum2"),
-                ),
-            )
-            top = F.slice(
-                F.array_sort(
-                    scored,
-                    lambda a, b2: _cmp(a["total"], a["tie"], b2["total"], b2["tie"]),
-                ),
-                1,
-                beam_width,
-            )
-            return F.transform(
-                top,
-                lambda t: F.struct(
-                    F.concat(
-                        F.slice(b["words"], 1, pos),
-                        F.array(t["word"]),
-                        F.slice(b["words"], pos + 2, F.col("n") - pos - 1),
-                    ).alias("words"),
-                    F.concat(
-                        F.slice(b["probs"], 1, pos),
-                        F.array(t["p"]),
-                        F.slice(b["probs"], pos + 2, F.col("n") - pos - 1),
-                    ).alias("probs"),
-                    t["psum2"].alias("psum"),
-                ),
-            )
-
-        new_beams = F.when(
-            F.col("cur_err").isNull() | F.col("cands").isNull(), F.col("beams")
-        ).otherwise(F.flatten(F.transform(pruned, expand)))
-
-        state = joined.withColumn("beams", new_beams).drop(
-            "cand_key", "cands", "w_total", "cur_err"
-        )
-        if (round_no + 1) % CHECKPOINT_EVERY == 0:
-            state = state.localCheckpoint(eager=True)
-
-    best = F.element_at(
-        F.array_sort(
-            F.col("beams"),
-            lambda a, b: _cmp(beam_score(a), beam_text(a), beam_score(b), beam_text(b)),
-        ),
-        1,
-    )
-    return state.withColumn("corrected_words", best["words"]).drop("beams")
-
-
 _ECANDS_TYPE = (
     "array<struct<pos:int,cands:array<struct<word:string,score:double,p:double>>,w_total:double>>"
 )
@@ -211,17 +97,14 @@ def run_beam_fold(
 ) -> DataFrame:
     """The ENTIRE beam loop as ONE Catalyst expression — no driver loop.
 
-    run_beam pays one broadcast join + one plan-analysis round per GLOBAL
-    max error count (the lockstep weakness). Here the candidate batches
-    for every error of a document are attached ONCE (explode → one
-    broadcast equi-join → collect_list sorted by position), and the loop
-    becomes ``F.aggregate(ecands, initial_beam, step)`` — a left fold
-    evaluated at ROW level, so each document runs exactly its own number
-    of beam steps, there is a single shuffle (the per-doc collect), a
-    single plan, and no per-round checkpoints.  The step expression is a
-    verbatim copy of run_beam's round body (same ops, same left folds),
-    so floats are bit-identical — tested against run_beam and the
-    single-node oracle."""
+    The candidate batches for every error of a document are attached ONCE
+    (explode → one broadcast equi-join → collect_list sorted by
+    position), and the loop becomes ``F.aggregate(ecands, initial_beam,
+    step)`` — a left fold evaluated at ROW level, so each document runs
+    exactly its own number of beam steps, with a single shuffle (the
+    per-doc collect) and a single plan.  The step mirrors the loop body
+    of core/beam.correct_sentence (same ops, same left folds), so floats
+    are bit-identical — tested per document against that reference."""
     state = detected.withColumn("_rid", F.monotonically_increasing_id()).localCheckpoint(
         eager=True
     )  # _rid is materialized INTO the checkpoint → stable across the two scans below
@@ -264,6 +147,10 @@ def run_beam_fold(
             1,
             beam_width,
         )
+        # within one candidate batch every sentence shares prefix+suffix,
+        # so full-text tie-break order == comparing cand_word + joiner
+        # (see core/beam.py) — entries are materialized only for the
+        # beam_width survivors, keeping the step expression small
         sep = F.when(pos < F.col("n") - 1, F.lit(" ")).otherwise(F.lit(""))
 
         def expand(b):
@@ -327,35 +214,7 @@ def run_beam_fold(
     return state.withColumn("corrected_words", best["words"]).drop("ecands", "_rid")
 
 
-def run_beam_tiered(
-    detected: DataFrame,
-    cand_agg: DataFrame,
-    beam_width: int = BEAM_WIDTH,
-    tiers: tuple[int, ...] = (2, 8, 32),
-) -> DataFrame:
-    """run_beam with the global-max-rounds weakness fixed: docs are split
-    by error count into tiers and each tier's lockstep loop runs only to
-    ITS ceiling — a single 500-error document forces 500 broadcast+plan
-    rounds over its (tiny) tier instead of over the whole dataset.
-    Zero-error docs bypass the loop entirely.  Byte-identical to run_beam
-    (extra rounds on finished docs are no-ops; tiering only removes
-    them) — tested."""
-    detected = detected.localCheckpoint(eager=True)
-    n_err = F.size("errors")
-    pieces = [
-        detected.filter(n_err == 0).withColumn("corrected_words", F.col("words"))
-    ]
-    bounds = [0, *tiers, None]
-    for lo, hi in zip(bounds, bounds[1:]):
-        cond = (n_err > lo) if hi is None else ((n_err > lo) & (n_err <= hi))
-        pieces.append(run_beam(detected.filter(cond), cand_agg, beam_width))
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-_WORKER_STATE: dict[tuple[int, int, int], tuple] = {}
+_WORKER_STATE = CurrentFit()
 
 
 def _worker_fns(scorer, lexicon, max_distance: int):
@@ -367,59 +226,84 @@ def _worker_fns(scorer, lexicon, max_distance: int):
     (core/candidates.build_deletion_index) makes candidate generation and
     word scoring a once-per-worker cost — 2.3× single-core on the flagship
     hot path, bit-identical results (the cached values are exactly what the
-    per-task code computed)."""
-    key = (id(scorer), id(lexicon), max_distance)
-    st = _WORKER_STATE.get(key)
-    if st is None:
-        from ..core.beam import candidate_batch
-        from ..core.candidates import build_deletion_index
+    per-task code computed).  Only the current (scorer, lexicon) pair is
+    kept: a new pipeline run frees the previous run's memo and index."""
+    return _WORKER_STATE.get(
+        (id(scorer), id(lexicon), max_distance), lambda: _memo_fns(scorer, lexicon, max_distance)
+    )
 
-        prob_cache: dict[str, float] = {}
-        cand_cache: dict[str, list] = {}
-        delidx_box: list = [None]  # built lazily on the first candidate miss
-        # bound the memoization for UNBOUNDED streams (the continuous
-        # crawl job): real corpora have vocabulary-bounded error words, but
-        # adversarial/garbled feeds do not — clear-on-cap keeps worker
-        # memory finite at a tiny amortized recompute cost (values are
-        # pure functions, so eviction never changes results)
-        PROB_CAP, CAND_CAP = 2_000_000, 200_000
 
-        def prob_fn(w: str) -> float:
-            p = prob_cache.get(w)
-            if p is None:
-                if len(prob_cache) >= PROB_CAP:
-                    prob_cache.clear()
-                p = scorer.word_prob(w)
-                prob_cache[w] = p
-            return p
+def _memo_fns(scorer, lexicon, max_distance: int):
+    from ..core.beam import candidate_batch
+    from ..core.candidates import build_deletion_index
 
-        def cand_fn(w: str) -> list:
-            batch = cand_cache.get(w)
-            if batch is None:
-                if delidx_box[0] is None:
-                    # a Bloom-backed lexicon (pipeline auto-switch above
-                    # the vocab threshold) is membership-only — no word
-                    # list to index, so candidate generation falls back to
-                    # probing deletion variants (core/candidates.
-                    # distance1_matches); False marks "checked, not
-                    # buildable" so we probe only once
-                    delidx_box[0] = (
-                        build_deletion_index(lexicon) if hasattr(lexicon, "__iter__") else False
-                    )
-                if len(cand_cache) >= CAND_CAP:
-                    cand_cache.clear()
-                batch = candidate_batch(
-                    w, scorer, lexicon, max_distance, delidx=delidx_box[0] or None
+    prob_cache: dict[str, float] = {}
+    cand_cache: dict[str, list] = {}
+    delidx_box: list = [None]  # built lazily on the first candidate miss
+    # bound the memoization for UNBOUNDED streams (the continuous
+    # crawl job): real corpora have vocabulary-bounded error words, but
+    # adversarial/garbled feeds do not — clear-on-cap keeps worker
+    # memory finite at a tiny amortized recompute cost (values are
+    # pure functions, so eviction never changes results)
+    PROB_CAP, CAND_CAP = 2_000_000, 200_000
+
+    def prob_fn(w: str) -> float:
+        p = prob_cache.get(w)
+        if p is None:
+            if len(prob_cache) >= PROB_CAP:
+                prob_cache.clear()
+            p = scorer.word_prob(w)
+            prob_cache[w] = p
+        return p
+
+    def cand_fn(w: str) -> list:
+        batch = cand_cache.get(w)
+        if batch is None:
+            if delidx_box[0] is None:
+                # a Bloom-backed lexicon (pipeline auto-switch above
+                # the vocab threshold) is membership-only — no word
+                # list to index, so candidate generation falls back to
+                # probing deletion variants (core/candidates.
+                # distance1_matches); False marks "checked, not
+                # buildable" so we probe only once
+                delidx_box[0] = (
+                    build_deletion_index(lexicon) if hasattr(lexicon, "__iter__") else False
                 )
-                cand_cache[w] = batch
-            return batch
+            if len(cand_cache) >= CAND_CAP:
+                cand_cache.clear()
+            batch = candidate_batch(
+                w, scorer, lexicon, max_distance, delidx=delidx_box[0] or None
+            )
+            cand_cache[w] = batch
+        return batch
 
-        st = (prob_fn, cand_fn)
-        # bound the registry: one entry per (scorer, lexicon) pair per job
-        if len(_WORKER_STATE) > 8:
-            _WORKER_STATE.clear()
-        _WORKER_STATE[key] = st
-    return st
+    return prob_fn, cand_fn
+
+
+def _worker_corrector(scorer_bc, lexicon_bc, max_distance: int, roulette_seed: int | None):
+    """Worker side of every Arrow-batched beam stage: ``correct(text,
+    enabled)`` → corrected words, the one place the Spark engines call
+    core/beam.correct_sentence.  Disabled rows get the deterministic
+    pass-through (split words).  ``roulette_seed`` flips W2 to the
+    reference's seeded roulette-wheel selection; each document derives its
+    rng from (seed, text), so the result is deterministic and independent
+    of partitioning."""
+    from ..core.beam import correct_sentence, roulette_rng
+
+    scorer, lexicon = scorer_bc.value, lexicon_bc.value
+    prob_fn, cand_fn = _worker_fns(scorer, lexicon, max_distance)
+
+    def correct(text: str, enabled=True) -> list[str]:
+        if not enabled:
+            return text.split()
+        rng = None if roulette_seed is None else roulette_rng(roulette_seed, text)
+        return correct_sentence(text, scorer, lexicon, prob_fn=prob_fn, cand_fn=cand_fn, rng=rng)
+
+    return correct
+
+
+def _with_corrected(fields) -> T.StructType:
+    return T.StructType([*fields, CORRECTED_WORDS])
 
 
 def run_beam_udf(
@@ -432,63 +316,58 @@ def run_beam_udf(
     roulette_seed: int | None = None,
 ) -> DataFrame:
     """Single-pass beam correction: one Arrow-batched mapInPandas stage
-    runs the ENTIRE pinned beam loop per document (core/beam.py — the very
-    code the parity oracle runs, so identity is by construction).
+    runs the ENTIRE pinned beam loop per document and appends
+    ``corrected_words`` to the input columns.
 
-    Scale rationale vs run_beam: the lockstep Catalyst loop pays one
-    broadcast join + plan round per GLOBAL max error count — a single
-    500-error document forces 500 rounds over the whole dataset. Here the
-    work is exactly per-document, embarrassingly parallel, with ZERO
+    The work is exactly per-document, embarrassingly parallel, with ZERO
     shuffles and no driver round-trips; scorer + lexicon are broadcast
     once per executor, and candidate batches are memoized per error word
-    within each task (the distinct-error-word dedup, executor-local).
-    This is the throughput path; run_beam remains the no-Python path.
+    in the worker (the distinct-error-word dedup, executor-local).  This
+    is the throughput path; ``run_beam_fold`` is the no-Python path.
 
     ``enabled_col``: optional boolean column — rows where it is false get
     the deterministic pass-through (corrected = split words), keeping the
     whole flagship a SINGLE stage instead of a two-branch union that would
-    recompute the upstream extraction twice.
-
-    ``roulette_seed`` flips W2 to the reference's seeded roulette-wheel
-    selection (core/beam.roulette_select); each document derives its rng
-    from (seed, text) so the result is deterministic and independent of
-    partitioning — flag-gated, deterministic top-k stays the default."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..core.beam import correct_sentence, roulette_rng
-
-    out_fields = ", ".join(f"{f.name}: {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema = f"struct<{out_fields}, corrected_words: array<string>>"
+    recompute the upstream extraction twice.  ``roulette_seed``: see
+    ``_worker_corrector`` (flag-gated; deterministic top-k is the
+    default)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        scorer = scorer_bc.value
-        lexicon = lexicon_bc.value
-        prob_fn, cand_fn = _worker_fns(scorer, lexicon, max_distance)
-
-        def passthrough(text: str) -> list[str]:
-            return text.split()
-
+        correct = _worker_corrector(scorer_bc, lexicon_bc, max_distance, roulette_seed)
         for pdf in batches:
-            pdf = pdf.copy()
-            corr = [
-                correct_sentence(
-                    t,
-                    scorer,
-                    lexicon,
-                    prob_fn=prob_fn,
-                    cand_fn=cand_fn,
-                    rng=None if roulette_seed is None else roulette_rng(roulette_seed, t),
-                )
-                if (enabled_col is None or en)
-                else passthrough(t)
-                for t, en in zip(
-                    pdf[text_col],
-                    pdf[enabled_col] if enabled_col is not None else pdf[text_col],
-                )
-            ]
-            pdf["corrected_words"] = corr
+            enabled = pdf[enabled_col] if enabled_col is not None else [True] * len(pdf)
+            pdf["corrected_words"] = [correct(t, en) for t, en in zip(pdf[text_col], enabled)]
             yield pdf
 
-    return df.mapInPandas(run, schema)
+    return df.mapInPandas(run, _with_corrected(df.schema.fields))
+
+
+# every EXTRACT_SCHEMA column but html_bytes (the last), plus corrected_words
+FUSED_SCHEMA = _with_corrected(EXTRACT_SCHEMA.fields[:-1])
+
+
+def render_extract_correct(
+    docs: DataFrame,
+    scorer_bc,
+    lexicon_bc,
+    max_distance: int = 1,
+    roulette_seed: int | None = None,
+) -> DataFrame:
+    """ONE Arrow-batched stage running the whole per-doc lifecycle:
+    synthetic render → extraction → (correctable ? beam-correct :
+    deterministic pass-through). Exactly ``render_and_extract`` +
+    ``run_beam_udf`` (same row helper, same worker corrector) minus the
+    intermediate Arrow round trip and the html_bytes column the pipeline
+    never uses — tests assert the equality."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        correct = _worker_corrector(scorer_bc, lexicon_bc, max_distance, roulette_seed)
+        for pdf in batches:
+            rows = []
+            for r in zip(pdf["doc_id"], pdf["text"], pdf["lang"]):
+                url, ts, lang, doc_id, kind, text, spans, _ = render_extract_row(*r)
+                enabled = lang == "en" and kind != "pdf_stub"
+                rows.append((url, ts, lang, doc_id, kind, text, spans, correct(text, enabled)))
+            yield columnar(rows, FUSED_SCHEMA)
+
+    return docs.select("doc_id", "text", "lang").mapInPandas(run, FUSED_SCHEMA)

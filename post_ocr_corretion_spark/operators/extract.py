@@ -8,6 +8,10 @@ when only text is needed — SURVEY.md §4): the operator selects exactly the
 columns it consumes, so a downstream projection prunes the parquet scan.
 Per-batch counters (pages, html bytes, extracted chars, pdf stubs) feed
 the lineage table (io/snapshots.py).
+
+Every Arrow-batched body that extracts — ``extract``, ``render_and_extract``
+and the flagship's fused stage (operators/correction.render_extract_correct)
+— builds its rows with ``extract_row`` and its batches with ``columnar``.
 """
 from __future__ import annotations
 
@@ -18,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..core.extraction import extract_document
+from ..datagen.webpages import make_page
 
 EXTRACT_SCHEMA = T.StructType(
     [
@@ -41,6 +46,26 @@ EXTRACT_SCHEMA = T.StructType(
 )
 
 
+def extract_row(url, warc_ts, lang, doc_id, html: bytes) -> tuple:
+    """One page → one EXTRACT_SCHEMA row, as a tuple in field order."""
+    text, sp, kind = extract_document(html)
+    return (url, warc_ts, lang, doc_id, kind, text, [{"start": s, "end": e} for s, e in sp], len(html))
+
+
+def render_extract_row(doc_id, text: str, lang: str) -> tuple:
+    """Synthetic render (datagen/webpages.make_page) + ``extract_row``."""
+    doc_id = int(doc_id)
+    page = make_page(doc_id, text, lang)
+    return extract_row(page["url"], page["warc_ts"], page["lang"], doc_id, page["html"])
+
+
+def columnar(rows: list[tuple], schema: T.StructType) -> pd.DataFrame:
+    """Row tuples → one pandas batch built column-wise (dict-of-lists, not
+    row dicts), which keeps the pandas→Arrow conversion cheap."""
+    cols = zip(*rows) if rows else [()] * len(schema.fields)
+    return pd.DataFrame({f.name: list(c) for f, c in zip(schema.fields, cols)})
+
+
 def extract(pages: DataFrame) -> DataFrame:
     cols = ["url", "warc_ts", "lang", "html"]
     if "doc_id" in pages.columns:
@@ -48,27 +73,12 @@ def extract(pages: DataFrame) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            texts, spans, kinds, sizes = [], [], [], []
-            for raw in pdf["html"]:
-                raw = bytes(raw)
-                text, sp, kind = extract_document(raw)
-                texts.append(text)
-                spans.append([{"start": s, "end": e} for s, e in sp])
-                kinds.append(kind)
-                sizes.append(len(raw))
-            out = pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "warc_ts": pdf["warc_ts"],
-                    "lang": pdf["lang"],
-                    "doc_id": pdf["doc_id"] if "doc_id" in pdf.columns else pd.Series([None] * len(pdf)),
-                    "kind": kinds,
-                    "extracted_text": texts,
-                    "spans": spans,
-                    "html_bytes": sizes,
-                }
-            )
-            yield out
+            ids = pdf["doc_id"] if "doc_id" in pdf.columns else [None] * len(pdf)
+            rows = [
+                extract_row(u, ts, lg, i, bytes(h))
+                for u, ts, lg, i, h in zip(pdf["url"], pdf["warc_ts"], pdf["lang"], ids, pdf["html"])
+            ]
+            yield columnar(rows, EXTRACT_SCHEMA)
 
     return pages.select(*cols).mapInPandas(run, EXTRACT_SCHEMA)
 
@@ -81,26 +91,10 @@ def render_and_extract(docs: DataFrame) -> DataFrame:
     functions, fusing them removes the largest Arrow transfer of the
     pipeline (the html column) entirely. Output is identical to
     ``extract(webpages(docs))`` — tests assert it."""
-    from ..datagen.webpages import make_page
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                page = make_page(int(r.doc_id), r.text, r.lang)
-                text, sp, kind = extract_document(page["html"])
-                rows.append(
-                    {
-                        "url": page["url"],
-                        "warc_ts": page["warc_ts"],
-                        "lang": page["lang"],
-                        "doc_id": int(r.doc_id),
-                        "kind": kind,
-                        "extracted_text": text,
-                        "spans": [{"start": s, "end": e} for s, e in sp],
-                        "html_bytes": len(page["html"]),
-                    }
-                )
-            yield pd.DataFrame(rows)
+            rows = [render_extract_row(*r) for r in zip(pdf["doc_id"], pdf["text"], pdf["lang"])]
+            yield columnar(rows, EXTRACT_SCHEMA)
 
     return docs.select("doc_id", "text", "lang").mapInPandas(run, EXTRACT_SCHEMA)

@@ -32,6 +32,33 @@ from ..core.scoring import ALPHABET, V, NGramScorer
 from ..functions.text import char_array
 
 
+class CurrentFit:
+    """Worker-side memo that holds ONE value: the one built for the most
+    recent key. A Python worker serves one fit at a time, so a new fit
+    frees the last one instead of piling up beside it (a long-lived
+    session would otherwise keep every run's lexicon, scorer and index)."""
+
+    __slots__ = ("key", "value")
+
+    def __init__(self):
+        self.key = self.value = None
+
+    def get(self, key, build):
+        if self.key != key:
+            self.key = self.value = None  # release the old fit before building
+            self.value = build()
+            self.key = key
+        return self.value
+
+
+def _new_version() -> str:
+    """A token that changes with every sidecar write: the caches key on
+    (path, version), so re-writing a path never serves the old contents."""
+    import uuid
+
+    return uuid.uuid4().hex
+
+
 def bigram_counts(lexicon: DataFrame) -> DataFrame:
     """(a, b, cnt) over boundary-padded char-index pairs of every lexicon
     word. instr() against the alphabet literal reproduces _CHAR_INDEX:
@@ -164,7 +191,7 @@ def bloom_filter_from_blocks(
 
 
 BLOOM_META = "_bloom_meta.json"
-_SIDECAR_BLOOM_CACHE: dict[str, BloomFilter] = {}
+_SIDECAR_BLOOM_CACHE = CurrentFit()
 
 
 class SidecarBloom(BloomFilter):
@@ -175,32 +202,32 @@ class SidecarBloom(BloomFilter):
     path is O(1) driver memory end to end.  Same shared-filesystem
     contract as SidecarLexicon (HDFS/S3/NFS on a real cluster)."""
 
-    def __init__(self, path: str):
+    def __init__(self, path: str, version: str | None = None):
         self.path = path
+        self.key = (path, version)
+
+    def _read(self) -> BloomFilter:
+        import glob
+        import json
+        import os
+
+        import pyarrow.parquet as pq
+
+        with open(os.path.join(self.path, BLOOM_META)) as f:
+            meta = json.load(f)
+        bits = bytearray((meta["m_bits"] + 7) // 8)
+        files = sorted(glob.glob(os.path.join(self.path, "*.parquet")))
+        if not files:
+            raise FileNotFoundError(f"no parquet parts under bloom sidecar {self.path}")
+        for fp in files:
+            t = pq.read_table(fp, columns=["block", "bits"])
+            for blk, b in zip(t.column("block").to_pylist(), t.column("bits").to_pylist()):
+                s = blk * meta["block_bytes"]
+                bits[s : s + len(b)] = b
+        return BloomFilter(meta["m_bits"], meta["k"], bits)
 
     def _filter(self) -> BloomFilter:
-        bf = _SIDECAR_BLOOM_CACHE.get(self.path)
-        if bf is None:
-            import glob
-            import json
-            import os
-
-            import pyarrow.parquet as pq
-
-            with open(os.path.join(self.path, BLOOM_META)) as f:
-                meta = json.load(f)
-            bits = bytearray((meta["m_bits"] + 7) // 8)
-            files = sorted(glob.glob(os.path.join(self.path, "*.parquet")))
-            if not files:
-                raise FileNotFoundError(f"no parquet parts under bloom sidecar {self.path}")
-            for fp in files:
-                t = pq.read_table(fp, columns=["block", "bits"])
-                for blk, b in zip(t.column("block").to_pylist(), t.column("bits").to_pylist()):
-                    s = blk * meta["block_bytes"]
-                    bits[s : s + len(b)] = b
-            bf = BloomFilter(meta["m_bits"], meta["k"], bits)
-            _SIDECAR_BLOOM_CACHE[self.path] = bf
-        return bf
+        return _SIDECAR_BLOOM_CACHE.get(self.key, self._read)
 
     @property
     def m(self) -> int:  # type: ignore[override]
@@ -218,7 +245,7 @@ class SidecarBloom(BloomFilter):
         return word in self._filter()
 
     def __reduce__(self):
-        return (SidecarBloom, (self.path,))
+        return (SidecarBloom, self.key)
 
 
 def write_bloom_sidecar(
@@ -233,7 +260,7 @@ def write_bloom_sidecar(
     distributed_bloom_blocks(lexicon, m_bits, k, block_bytes).write.mode("overwrite").parquet(path)
     with open(os.path.join(path, BLOOM_META), "w") as f:
         json.dump({"m_bits": m_bits, "k": k, "block_bytes": block_bytes}, f)
-    return SidecarBloom(path)
+    return SidecarBloom(path, _new_version())
 
 
 def resolve_sidecar_path(spark: SparkSession, prefix: str = "lexicon_sidecar") -> str | None:
@@ -261,7 +288,7 @@ def resolve_sidecar_path(spark: SparkSession, prefix: str = "lexicon_sidecar") -
     return None
 
 
-_SIDECAR_CACHE: dict[str, frozenset] = {}
+_SIDECAR_CACHE = CurrentFit()
 
 
 class SidecarLexicon:
@@ -276,25 +303,25 @@ class SidecarLexicon:
     (byte-parity-safe), unlike the Bloom variant below.
     """
 
-    def __init__(self, path: str):
+    def __init__(self, path: str, version: str | None = None):
         self.path = path
+        self.key = (path, version)
+
+    def _read(self) -> frozenset:
+        import glob
+        import os
+
+        import pyarrow.parquet as pq
+
+        files = sorted(glob.glob(os.path.join(self.path, "*.parquet")))
+        if not files:
+            raise FileNotFoundError(f"no parquet parts under lexicon sidecar {self.path}")
+        return frozenset(
+            w for f in files for w in pq.read_table(f, columns=["word"]).column("word").to_pylist()
+        )
 
     def _load(self) -> frozenset:
-        ws = _SIDECAR_CACHE.get(self.path)
-        if ws is None:
-            import glob
-            import os
-
-            import pyarrow.parquet as pq
-
-            files = sorted(glob.glob(os.path.join(self.path, "*.parquet")))
-            if not files:
-                raise FileNotFoundError(f"no parquet parts under lexicon sidecar {self.path}")
-            ws = frozenset(
-                w for f in files for w in pq.read_table(f, columns=["word"]).column("word").to_pylist()
-            )
-            _SIDECAR_CACHE[self.path] = ws
-        return ws
+        return _SIDECAR_CACHE.get(self.key, self._read)
 
     def row_count(self) -> int:
         """Word count from the parquet FOOTERS — no data read, no Spark
@@ -321,10 +348,10 @@ class SidecarLexicon:
         return len(self._load())
 
     def __reduce__(self):
-        return (SidecarLexicon, (self.path,))
+        return (SidecarLexicon, self.key)
 
 
-_SIDECAR_SCORER_CACHE: dict[str, NGramScorer] = {}
+_SIDECAR_SCORER_CACHE = CurrentFit()
 
 
 class SidecarScorer:
@@ -336,15 +363,14 @@ class SidecarScorer:
     fit cost is O(vocab); at 10^8+ vocabularies use ``scorer_from_spark``
     (Spark-aggregated counts + Bloom membership) instead."""
 
-    def __init__(self, path: str):
-        self.path = path
+    def __init__(self, lexicon: SidecarLexicon):
+        self.lexicon = lexicon
 
     def _scorer(self) -> NGramScorer:
-        s = _SIDECAR_SCORER_CACHE.get(self.path)
-        if s is None:
-            s = NGramScorer(SidecarLexicon(self.path)._load())
-            _SIDECAR_SCORER_CACHE[self.path] = s
-        return s
+        return _SIDECAR_SCORER_CACHE.get(self.lexicon.key, self._fit)
+
+    def _fit(self) -> NGramScorer:
+        return NGramScorer(self.lexicon._load())
 
     def word_prob(self, word: str) -> float:
         return self._scorer().word_prob(word)
@@ -359,7 +385,7 @@ class SidecarScorer:
         return self._scorer().wrong_indexes(words)
 
     def __reduce__(self):
-        return (SidecarScorer, (self.path,))
+        return (SidecarScorer, (self.lexicon,))
 
 
 def write_lexicon_sidecar(
@@ -379,7 +405,7 @@ def write_lexicon_sidecar(
     if partitions is not None:
         out = out.coalesce(partitions)
     out.write.mode("overwrite").parquet(path)
-    return SidecarLexicon(path)
+    return SidecarLexicon(path, _new_version())
 
 
 def scorer_from_spark(

@@ -123,9 +123,13 @@ def segment_documents(spark: SparkSession, docs: DataFrame) -> DataFrame:
     9.3 s at sf0.1 with 31 cores idle). Spread the prepared sequences
     across 2×cores ONLY when the frame has fewer partitions than cores;
     a real multi-split corpus already has them and is left untouched.
-    The repartition sits ABOVE the projection that assigns ``seq_id``
-    (monotonically_increasing_id is evaluated in the pre-exchange
-    stage, so every id — and every output row — is unchanged)."""
+    This repartition sits ABOVE the projection that assigns ``seq_id``
+    (monotonically_increasing_id is evaluated in the pre-exchange stage),
+    so it changes no id. ``seq_id`` is still stable only for a given
+    input partitioning: split_to_fit's own spread sits BELOW that
+    projection and re-bases the ids whenever it fires. The output
+    multiset of sequences is the same either way; never persist or
+    compare ``seq_id`` across runs with different input layouts."""
     seqs = prepare_sequences(docs)
     sc = spark.sparkContext
     try:

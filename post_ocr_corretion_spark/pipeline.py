@@ -3,15 +3,16 @@
 This is the reference's ``correct_sentences()`` lifecycle (main.py:28-35,
 SURVEY.md §3.1) re-expressed over the north-rule web table:
 
-  documents (ground truth)  ──►  synthetic webpages (url, warc_ts, html…)
+  documents (ground truth) ──► doc spread (hash / range on the doc hash)
         │                                   │
         │ lexicon (A2/U1/A3)                ▼
-        │ deletion-neighborhood      extract (mapInPandas, north rule)
-        ▼                                   ▼
-  scorer broadcast ───────────►  detection (one pandas-UDF pass)
+        ▼                     udf (default): ONE mapInPandas stage —
+  scorer + lexicon broadcast ──►  render → extract → beam per document
+        │                                   │
+        │ catalyst: deletion neighborhood,  │  catalyst: extract → detection
+        │ candidate batches (equi-joins,    │  (one pandas-UDF pass) → beam
+        └─► distinct error words only) ───► │  fold (one Catalyst expression)
                                             ▼
-  candidate batches (equi-joins, ──► beam loop (pure Catalyst, lockstep)
-  distinct error words only)                ▼
                      (url, extracted_text, spans, corrected_text, …)
 
 Non-``en`` pages and stubbed real-PDF pages pass through deterministically
@@ -35,8 +36,13 @@ from .core.scoring import NGramScorer
 from .datagen.wordlist import COMMON_WORDS
 from .functions.text import join_words_quirk, join_words_readable
 from .operators.candidates import candidate_batches
-from .operators.correction import distinct_error_words, run_beam, run_beam_udf, with_detection
-from .operators.extract import extract, render_and_extract
+from .operators.correction import (
+    distinct_error_words,
+    render_extract_correct,
+    run_beam_fold,
+    with_detection,
+)
+from .operators.extract import extract
 from .operators.lexicon import build_lexicon, deletion_neighborhood
 from .sources.webpages import read_documents, webpages
 
@@ -155,13 +161,12 @@ def build_scorer_broadcast(
         # instead of building the per-worker SymSpell index
         # (operators/correction._worker_fns)
         return spark.sparkContext.broadcast(scorer), scorer.lexicon
-    return spark.sparkContext.broadcast(SidecarScorer(side.path)), side
+    return spark.sparkContext.broadcast(SidecarScorer(side)), side
 
 
 def run_pipeline(
     spark: SparkSession,
     sf_dir: str,
-    max_rounds: int | None = None,
     mode: str = "udf",
     fit: str = "distributed",
     max_distance: int = 1,
@@ -172,106 +177,13 @@ def run_pipeline(
 ) -> DataFrame:
     """``mode='udf'`` (default): single-pass Arrow-batched beam — the
     throughput path, zero shuffles after extraction.  ``mode='catalyst'``:
-    the no-Python lockstep loop over SymSpell equi-join candidate batches.
+    the no-Python beam fold over SymSpell equi-join candidate batches.
     Both are byte-identical to the oracle (tests assert it)."""
     return run_pipeline_from_docs(
-        spark, read_documents(spark, sf_dir), max_rounds, mode, fit=fit,
+        spark, read_documents(spark, sf_dir), mode, fit=fit,
         max_distance=max_distance, roulette_seed=roulette_seed, spread=spread,
         sidecar_path=sidecar_path, bloom_threshold=bloom_threshold,
     )
-
-
-def _render_extract_correct(
-    docs: DataFrame,
-    scorer_bc,
-    lexicon_bc,
-    max_distance: int = 1,
-    roulette_seed: int | None = None,
-) -> DataFrame:
-    """ONE Arrow-batched stage running the whole per-doc lifecycle:
-    synthetic render → extraction → (enabled ? beam-correct :
-    deterministic pass-through). Exactly the composition of
-    ``render_and_extract`` + ``run_beam_udf`` (same core functions, same
-    per-worker memoization), minus the intermediate Arrow round trip and
-    the columns the pipeline output never uses (html_bytes,
-    correct_enabled). Columnar batch assembly (dict-of-lists, not
-    row dicts) keeps the pandas→Arrow conversion cheap."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .core.beam import correct_sentence, roulette_rng
-    from .core.extraction import extract_document
-    from .datagen.webpages import make_page
-    from .operators.correction import _worker_fns
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("warc_ts", T.TimestampType(), True),
-            T.StructField("lang", T.StringType(), True),
-            T.StructField("doc_id", T.LongType(), True),
-            T.StructField("kind", T.StringType(), False),
-            T.StructField("extracted_text", T.StringType(), False),
-            T.StructField(
-                "spans",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("start", T.LongType(), False),
-                            T.StructField("end", T.LongType(), False),
-                        ]
-                    )
-                ),
-                False,
-            ),
-            T.StructField("corrected_words", T.ArrayType(T.StringType()), True),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        scorer = scorer_bc.value
-        lexicon = lexicon_bc.value
-        prob_fn, cand_fn = _worker_fns(scorer, lexicon, max_distance)
-        for pdf in batches:
-            urls, tss, langs, ids, kinds, texts, spans, corrs = [], [], [], [], [], [], [], []
-            for r in pdf.itertuples():
-                page = make_page(int(r.doc_id), r.text, r.lang)
-                text, sp, kind = extract_document(page["html"])
-                if page["lang"] == "en" and kind != "pdf_stub":
-                    corr = correct_sentence(
-                        text,
-                        scorer,
-                        lexicon,
-                        prob_fn=prob_fn,
-                        cand_fn=cand_fn,
-                        rng=None if roulette_seed is None else roulette_rng(roulette_seed, text),
-                    )
-                else:
-                    corr = text.split()
-                urls.append(page["url"])
-                tss.append(page["warc_ts"])
-                langs.append(page["lang"])
-                ids.append(int(r.doc_id))
-                kinds.append(kind)
-                texts.append(text)
-                spans.append([{"start": s, "end": e} for s, e in sp])
-                corrs.append(corr)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "warc_ts": tss,
-                    "lang": langs,
-                    "doc_id": ids,
-                    "kind": kinds,
-                    "extracted_text": texts,
-                    "spans": spans,
-                    "corrected_words": corrs,
-                }
-            )
-
-    return docs.select("doc_id", "text", "lang").mapInPandas(run, schema)
 
 
 def _spread_docs(docs: DataFrame, spread: str, par: int) -> DataFrame:
@@ -289,9 +201,7 @@ def _spread_docs(docs: DataFrame, spread: str, par: int) -> DataFrame:
 def run_pipeline_from_docs(
     spark: SparkSession,
     docs: DataFrame,
-    max_rounds: int | None = None,
     mode: str = "udf",
-    partitions: int | None = None,
     fit: str = "distributed",
     max_distance: int = 1,
     roulette_seed: int | None = None,
@@ -331,7 +241,7 @@ def run_pipeline_from_docs(
     # multi-split corpora the saving is the whole text shuffle). The
     # lexicon is a distinct ∪ base — set-identical either way.
     lexicon_input = lexicon_docs if lexicon_docs is not None else docs
-    par = partitions or max(spark.sparkContext.defaultParallelism * 2, 8)
+    par = max(spark.sparkContext.defaultParallelism * 2, 8)
     docs = _spread_docs(docs, spread, par)
 
     # r9: OVERLAP the doc-spreading shuffle with the lexicon/scorer job
@@ -366,27 +276,19 @@ def run_pipeline_from_docs(
     scorer_bc, lex_words = build_scorer_broadcast(
         spark, lexicon_df, fit=fit, sidecar_path=sidecar_path, bloom_threshold=bloom_threshold
     )
-    enabled = (F.col("lang") == "en") & (F.col("kind") != "pdf_stub")
 
     if mode == "udf":
         # throughput path (r9): render+extract+correct fused into ONE
-        # Arrow-batched stage — the old two-stage form shipped every
-        # intermediate column (extracted_text, the spans struct array,
-        # html_bytes, …) JVM→Python→JVM→Python between extraction and
-        # correction; since both ends are per-row pure functions over the
-        # same row, fusing removes that entire Arrow round trip (guide
-        # §4.1: you control how many columns cross the boundary). Output
-        # is byte-identical to render_and_extract + run_beam_udf — the
-        # parity suite asserts it.
+        # Arrow-batched stage, so no intermediate column (extracted_text,
+        # the spans struct array, html_bytes, …) crosses the JVM↔Python
+        # boundary twice (guide §4.1). Byte-identical to
+        # render_and_extract + run_beam_udf — the parity suite asserts it.
         lexicon_bc = spark.sparkContext.broadcast(lex_words)
-        corrected = _render_extract_correct(
-            docs_fut.result() if docs_fut is not None else docs,
-            scorer_bc,
-            lexicon_bc,
-            max_distance=max_distance,
-            roulette_seed=roulette_seed,
+        corrected = render_extract_correct(
+            docs_fut.result(), scorer_bc, lexicon_bc, max_distance=max_distance, roulette_seed=roulette_seed
         )
     else:
+        enabled = (F.col("lang") == "en") & (F.col("kind") != "pdf_stub")
         extracted = extract(webpages(docs)).localCheckpoint(eager=True)  # materialize once for both branches
         correctable = extracted.filter(enabled)
         from .functions.text import sentence_words
@@ -398,23 +300,14 @@ def run_pipeline_from_docs(
         detected = with_detection(correctable, scorer_bc)
         err_words = distinct_error_words(detected)
         cand_agg = candidate_batches(err_words, lexicon_df, lex_del, scorer_bc, max_distance=max_distance).cache()
-        cand_agg.count()  # materialize before the loop
-        if max_rounds is not None:
-            # round-truncation only exists on the lockstep loop
-            beamed = run_beam(detected, cand_agg, max_rounds=max_rounds)
-        else:
-            # default: the single-expression fold — one broadcast join,
-            # one shuffle, no driver loop (5.8× the lockstep at sf0.01,
-            # byte-identical; operators/correction.run_beam_fold)
-            from .operators.correction import run_beam_fold
-
-            beamed = run_beam_fold(detected, cand_agg)
+        cand_agg.count()  # materialize before the fold
+        # the beam as one Catalyst expression: one broadcast join, one
+        # shuffle, no driver loop (operators/correction.run_beam_fold)
+        beamed = run_beam_fold(detected, cand_agg)
         corrected = beamed.drop(
             "words", "probs", "psum", "n", "errors"
         ).unionByName(passthrough)
-    out_cols = ["url", "warc_ts", "lang", "doc_id", "kind", "extracted_text", "spans", "corrected_words"]
-    result = corrected.select(*out_cols)
-    return result.select(
+    return corrected.select(
         "url",
         "warc_ts",
         "lang",

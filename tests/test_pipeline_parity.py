@@ -72,85 +72,89 @@ def test_smoke_sentence(fixture_scorer, fixture_lexicon):
     assert len(out) == 6
 
 
-def test_run_beam_tiered_equals_run_beam(spark, docs_rows, fixture_lexicon, fixture_scorer):
-    """Tiered lockstep beam (per-error-count tiers, bounded rounds) is
-    byte-identical to the single global loop."""
+def test_run_beam_fold_equals_reference(spark, docs_rows, fixture_scorer):
+    """The single-expression Catalyst fold is byte-identical, per
+    document, to the reference beam (core/beam.correct_sentence) over the
+    same lexicon and scorer, on OCR-noised fixtures."""
     from pyspark.sql import functions as F
 
-    from post_ocr_corretion_spark.datagen.wordlist import COMMON_WORDS
-    from post_ocr_corretion_spark.operators.candidates import candidate_batches
-    from post_ocr_corretion_spark.operators.correction import (
-        distinct_error_words,
-        run_beam,
-        run_beam_tiered,
-        with_detection,
-    )
-    from post_ocr_corretion_spark.operators.lexicon import build_lexicon, deletion_neighborhood
-
-    from post_ocr_corretion_spark.datagen.webpages import ocr_noise_text
-
-    docs = spark.createDataFrame(
-        [(i, ocr_noise_text(r["text"], i)) for i, r in enumerate(docs_rows[:40])],
-        "doc_id long, text string",
-    ).withColumn("extracted_text", F.col("text"))
-    lex_df = build_lexicon(spark, docs, COMMON_WORDS)
-    scorer_bc = spark.sparkContext.broadcast(fixture_scorer)
-    detected = with_detection(docs, scorer_bc)
-    cand_agg = candidate_batches(
-        distinct_error_words(detected), lex_df, deletion_neighborhood(lex_df), scorer_bc
-    ).cache()
-    cand_agg.count()
-    plain = {r.doc_id: r.corrected_words for r in run_beam(detected, cand_agg).collect()}
-    tiered = {
-        r.doc_id: r.corrected_words
-        for r in run_beam_tiered(detected, cand_agg, tiers=(1, 2, 4)).select(
-            "doc_id", "corrected_words"
-        ).collect()
-    }
-    assert plain == tiered
-    # sanity: the fixture actually spans several tiers
-    counts = [len(r.errors) for r in detected.select("errors").collect()]
-    assert max(counts) > 4 and min(counts) >= 0
-
-
-def test_run_beam_fold_equals_lockstep(spark, docs_rows, fixture_lexicon, fixture_scorer):
-    """The single-expression fold beam (no driver loop) is byte-identical
-    to the lockstep loop on OCR-noised fixtures."""
-    from pyspark.sql import functions as F
-
+    from post_ocr_corretion_spark.core.beam import correct_sentence
     from post_ocr_corretion_spark.datagen.webpages import ocr_noise_text
     from post_ocr_corretion_spark.datagen.wordlist import COMMON_WORDS
     from post_ocr_corretion_spark.operators.candidates import candidate_batches
     from post_ocr_corretion_spark.operators.correction import (
         distinct_error_words,
-        run_beam,
         run_beam_fold,
         with_detection,
     )
     from post_ocr_corretion_spark.operators.lexicon import build_lexicon, deletion_neighborhood
 
-    noisy = spark.createDataFrame(
-        [(i, ocr_noise_text(r["text"], i)) for i, r in enumerate(docs_rows[:40])],
-        "doc_id long, text string",
-    ).withColumn("extracted_text", F.col("text"))
+    noisy_rows = [(i, ocr_noise_text(r["text"], i)) for i, r in enumerate(docs_rows[:40])]
+    noisy = spark.createDataFrame(noisy_rows, "doc_id long, text string").withColumn(
+        "extracted_text", F.col("text")
+    )
     clean = spark.createDataFrame(
         [(i, r["text"]) for i, r in enumerate(docs_rows[:40])], "doc_id long, text string"
     )
     lex_df = build_lexicon(spark, clean, COMMON_WORDS)
+    lexicon = frozenset(r.word for r in lex_df.collect())
     scorer_bc = spark.sparkContext.broadcast(fixture_scorer)
     detected = with_detection(noisy, scorer_bc)
     cand_agg = candidate_batches(
         distinct_error_words(detected), lex_df, deletion_neighborhood(lex_df), scorer_bc
     ).cache()
     cand_agg.count()
-    # sanity: real errors present
-    assert detected.agg(F.max(F.size("errors"))).collect()[0][0] > 0
-    plain = {r.doc_id: r.corrected_words for r in run_beam(detected, cand_agg).collect()}
+    # sanity: the fixture's error counts span several beam steps
+    counts = [len(r.errors) for r in detected.select("errors").collect()]
+    assert max(counts) > 4 and min(counts) >= 0
     fold = {
         r.doc_id: r.corrected_words
         for r in run_beam_fold(detected, cand_agg).select("doc_id", "corrected_words").collect()
     }
-    assert plain == fold
+    reference = {i: correct_sentence(t, fixture_scorer, lexicon) for i, t in noisy_rows}
+    assert fold == reference
+
+
+def test_render_and_extract_equals_extract_of_webpages(spark, docs_rows):
+    """The fused render+extract stage is byte-identical to rendering the
+    webpages table and extracting it, every column including html_bytes."""
+    from post_ocr_corretion_spark.operators.extract import extract, render_and_extract
+    from post_ocr_corretion_spark.sources.webpages import webpages
+
+    docs = _docs_df(spark, docs_rows)
+    fused_df = render_and_extract(docs)
+    plain_df = extract(webpages(docs))
+    assert fused_df.schema == plain_df.schema
+    fused = {r.url: r for r in fused_df.collect()}
+    plain = {r.url: r for r in plain_df.collect()}
+    assert len(fused) == len(docs_rows)
+    assert fused == plain
+
+
+@pytest.mark.parametrize("roulette_seed", [None, 7])
+def test_run_beam_udf_equals_fused_stage(spark, docs_rows, fixture_lexicon, fixture_scorer, roulette_seed):
+    """render_and_extract + run_beam_udf (enabled column) gives the same
+    rows and corrected_words as the flagship's fused stage."""
+    from pyspark.sql import functions as F
+
+    from post_ocr_corretion_spark.operators.correction import render_extract_correct, run_beam_udf
+    from post_ocr_corretion_spark.operators.extract import render_and_extract
+
+    docs = _docs_df(spark, docs_rows)
+    scorer_bc = spark.sparkContext.broadcast(fixture_scorer)
+    lex_bc = spark.sparkContext.broadcast(fixture_lexicon)
+    enabled = render_and_extract(docs).withColumn(
+        "enabled", (F.col("lang") == "en") & (F.col("kind") != "pdf_stub")
+    )
+    composed_df = run_beam_udf(enabled, scorer_bc, lex_bc, enabled_col="enabled", roulette_seed=roulette_seed)
+    fused_df = render_extract_correct(docs, scorer_bc, lex_bc, roulette_seed=roulette_seed)
+    cols = fused_df.columns
+    composed = {r.url: r for r in composed_df.select(cols).collect()}
+    fused = {r.url: r for r in fused_df.collect()}
+    assert len(fused) == len(docs_rows)
+    assert composed == fused
+    # the pass-through branch is exercised too
+    assert any(r.lang != "en" or r.kind == "pdf_stub" for r in fused.values())
 
 
 def test_flagship_auto_bloom_threshold(spark, docs_rows):

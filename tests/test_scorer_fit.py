@@ -269,3 +269,31 @@ def test_no_shared_path_above_threshold_falls_through_to_bloom(spark, fixture_le
     assert all(w in lex for w in fixture_lexicon)
     local = NGramScorer(fixture_lexicon)
     assert np.array_equal(bc.value.log_prob, local.log_prob)
+
+
+def test_rewritten_sidecar_path_serves_each_fit(spark, tmp_path):
+    """Two fits over different lexicons at ONE sidecar_path: each must
+    see its own membership on the executors. Python workers are reused
+    across jobs, so a cache keyed by the path alone would keep serving
+    the first write's words to the second fit."""
+    from post_ocr_corretion_spark.core.scoring import IN_LEXICON_P
+    from post_ocr_corretion_spark.pipeline import build_scorer_broadcast
+
+    path = str(tmp_path / "sidecar")
+    probe_words = ("alpha", "beta", "gamma", "delta")
+    n = 2 * spark.sparkContext.defaultParallelism
+    for words in (("alpha", "beta"), ("gamma", "delta")):
+        lex_df = spark.createDataFrame([(w,) for w in words], "word string")
+        scorer_bc, side = build_scorer_broadcast(spark, lex_df, sidecar_path=path)
+        assert side.path == path
+        lexicon_bc = spark.sparkContext.broadcast(side)
+
+        def probe(_, scorer_bc=scorer_bc, lexicon_bc=lexicon_bc):
+            lex, scorer = lexicon_bc.value, scorer_bc.value
+            yield (
+                tuple(w for w in probe_words if w in lex),
+                tuple(w for w in probe_words if scorer.word_prob(w) == IN_LEXICON_P),
+            )
+
+        seen = set(spark.sparkContext.parallelize(range(n), n).mapPartitions(probe).collect())
+        assert seen == {(words, words)}
