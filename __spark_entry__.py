@@ -171,19 +171,15 @@ def q_w7_split_point(spark, sf):
     argmin fold uses strict '<' so ties keep the smaller (earlier) position,
     matching the old row_number(ORDER BY metric, pos) tie-break.
 
-    r9: the input is spread when the scan is under-split (the two folds
-    are CPU-dense and ran serially on the single-file table), and the
-    argmin stages through a generator — the bare
+    r9: the two folds are CPU-dense, so the input goes through
+    ``spread``, and the argmin stages through a generator — the bare
     ``filter(isNotNull(split_pos))`` was predicate-pushed below the
     Project, evaluating the WHOLE fold chain twice per row (and it
     would sink below the spread exchange); a filter on a Generate
     output cannot move. Identical rows."""
-    from post_ocr_corretion_spark.operators.gopher import _GRAM_SPREAD_BYTES
-    from post_ocr_corretion_spark.operators.lexicon import _spread_tokens_input
+    from post_ocr_corretion_spark.plans.parallelism import GRAM_TASK_BYTES, spread
 
-    docs = _spread_tokens_input(
-        _t(spark, sf, "documents").select("doc_id", "text"), _GRAM_SPREAD_BYTES
-    )
+    docs = spread(_t(spark, sf, "documents").select("doc_id", "text"), GRAM_TASK_BYTES)
     parts = F.split(F.col("text"), " ", -1)
     # positions of the i-th space = len(parts[0..i] joined by ' '): fold the
     # leading parts, carrying (position of last emitted space, positions).
@@ -1364,38 +1360,15 @@ def q_flagship_correct(spark, sf):
     return run_pipeline(spark, sf).select("url", "kind", "extracted_text", "corrected_text")
 
 
-def _pin_cpu_parallelism(df, sized_on=None, bytes_per_task: int = 1 << 20):
-    """r9: AQE's byte-based partition coalescing serializes CPU-dense
-    stages whose rows are small but expensive (the edit-distance /
-    Python-UDF metric projections over doc pairs ran as ONE post-join
-    task). When the size estimate says the frame is small enough that
-    AQE would coalesce it hard, pin an explicit repartition
-    (REPARTITION_BY_NUM shuffles are exempt from AQE coalescing); a big
-    frame is returned untouched — at corpus scale AQE keeps real
-    parallelism and the extra exchange would be a pure loss.
-    ``sized_on``: the frame to read the estimate from — pass the SCAN
-    feeding a join (file-source stats are accurate; join estimates are
-    cardinality products, off by orders of magnitude). Row multiset
-    unchanged."""
-    sc = df.sparkSession.sparkContext
-    cap = sc.defaultParallelism * 2
-    basis = sized_on if sized_on is not None else df
-    try:
-        size = int(basis._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return df
-    if size // bytes_per_task >= cap:
-        return df
-    return df.repartition(cap)
-
-
 def _doc_pairs(spark, sf):
+    """(da, ta, tb): each even document paired with the next odd one,
+    spread for the CPU-dense per-pair metrics downstream."""
+    from post_ocr_corretion_spark.plans.parallelism import CPU_TASK_BYTES, spread
+
     d = _t(spark, sf, "documents")
     a = d.filter(F.col("doc_id") % 2 == 0).select(F.col("doc_id").alias("da"), F.col("text").alias("ta"))
     b = d.filter(F.col("doc_id") % 2 == 1).select((F.col("doc_id") - 1).alias("da"), F.col("text").alias("tb"))
-    # the per-pair metrics downstream (levenshtein / indel / WER UDFs)
-    # are CPU-dense on few bytes — pin their stage's parallelism
-    return _pin_cpu_parallelism(a.join(b, "da"), sized_on=d)
+    return spread(a.join(b, "da"), CPU_TASK_BYTES, sized_on=d)
 
 
 def q_a14_word_diff(spark, sf):
@@ -1469,11 +1442,7 @@ def q_m5_indel_ratio(spark, sf):
     DuckDB's levenshtein() uses substitution cost 1, so no SQL oracle."""
     from post_ocr_corretion_spark.functions.udfs import indel_ratio_udf
 
-    d = _t(spark, sf, "documents")
-    a = d.alias("a").filter(F.col("doc_id") % 2 == 0).select(F.col("doc_id").alias("da"), F.col("text").alias("ta"))
-    b = d.alias("b").filter(F.col("doc_id") % 2 == 1).select((F.col("doc_id") - 1).alias("da"), F.col("text").alias("tb"))
-    pairs = _pin_cpu_parallelism(a.join(b, "da"), sized_on=d)
-    return pairs.select("da", F.round(indel_ratio_udf(F.col("ta"), F.col("tb")), 6).alias("ratio"))
+    return _doc_pairs(spark, sf).select("da", F.round(indel_ratio_udf(F.col("ta"), F.col("tb")), 6).alias("ratio"))
 
 
 def q_approx_distinct(spark, sf):
@@ -2355,15 +2324,11 @@ def q_explode_outer(spark, sf):
 def q_map_hof(spark, sf):
     """Map higher-order functions beyond map_props' keys/element_at:
     transform_values, map_filter, and map_zip_with (self-zip doubling),
-    re-serialized deterministically via sorted entries.
+    re-serialized deterministically via sorted entries. The from_json +
+    interpreted map-HOF projection is CPU-dense, hence the ``spread``."""
+    from post_ocr_corretion_spark.plans.parallelism import GRAM_TASK_BYTES, spread
 
-    r9: input spread when the scan is under-split — the from_json +
-    interpreted map-HOF projection ran serially on the single-file
-    events table. Row-local projection; identical rows."""
-    from post_ocr_corretion_spark.operators.gopher import _GRAM_SPREAD_BYTES
-    from post_ocr_corretion_spark.operators.lexicon import _spread_tokens_input
-
-    e = _spread_tokens_input(_t(spark, sf, "events"), _GRAM_SPREAD_BYTES)
+    e = spread(_t(spark, sf, "events"), GRAM_TASK_BYTES)
     m = F.from_json("props", "map<string,int>")
     doubled = F.transform_values(m, lambda k, v: v * 2)
     big = F.map_filter(m, lambda k, v: v > 5)
@@ -2449,12 +2414,9 @@ def q_udtf_chunks(spark, sf):
 
     ensure_package_shipped(spark)
     register_udtfs(spark)
-    from post_ocr_corretion_spark.operators.gopher import _GRAM_SPREAD_BYTES
-    from post_ocr_corretion_spark.operators.lexicon import _spread_tokens_input
+    from post_ocr_corretion_spark.plans.parallelism import GRAM_TASK_BYTES, spread
 
-    # r9: spread the under-split scan — the per-row Python UDTF ran
-    # serially on the single-file table (row-local; identical rows)
-    _spread_tokens_input(_t(spark, sf, "documents"), _GRAM_SPREAD_BYTES).createOrReplaceTempView("docs_udtf")
+    spread(_t(spark, sf, "documents"), GRAM_TASK_BYTES).createOrReplaceTempView("docs_udtf")
     return spark.sql(
         """
         SELECT d.doc_id, c.chunk_id, c.chunk, c.start

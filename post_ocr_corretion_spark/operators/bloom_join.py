@@ -114,21 +114,19 @@ def bloom_prefilter(df: DataFrame, key_col: str, bf: BloomFilter) -> DataFrame:
     key). The probe hashes the canonical string rendering, pairing with
     ``bloom_filter_from_keys``.
 
-    r9: the k-probe (k md5 evaluations per row) is CPU-dense, and a
-    single-file fact scan ran it serially; the probe input gets the
-    scale-adaptive spread (multi-split fact tables at real scale are
-    untouched — the probe then runs inside the scan tasks as designed).
-    The probe result stages through a GENERATOR and the filter tests
-    the generated attribute: a bare ``filter(probe)`` is predicate-
-    pushed BELOW the spread exchange by Catalyst (measured 6× — the
-    whole probe ran back in the original scan partitions); a filter on
-    a Generate output cannot sink past it. Row set identical (row-local
-    predicate, one generated row per input row)."""
-    from .lexicon import _spread_tokens_input
+    r9: the k-probe (k md5 evaluations per row) is CPU-dense, so its
+    input goes through ``plans.parallelism.spread``. The probe result
+    stages through a GENERATOR and the filter tests the generated
+    attribute: a bare ``filter(probe)`` is predicate-pushed BELOW the
+    spread exchange by Catalyst (measured 6× — the whole probe ran back
+    in the original scan partitions); a filter on a Generate output
+    cannot sink past it. Row set identical (row-local predicate, one
+    generated row per input row)."""
+    from ..plans.parallelism import TOKEN_TASK_BYTES, spread
 
     hit = bloom_might_contain(F.col(key_col).cast("string"), bf)
     return (
-        _spread_tokens_input(df)
+        spread(df, TOKEN_TASK_BYTES)
         .select("*", F.explode(F.array(hit)).alias("_bloom_hit"))
         .filter(F.col("_bloom_hit"))
         .drop("_bloom_hit")

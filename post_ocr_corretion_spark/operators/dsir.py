@@ -37,6 +37,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..plans.parallelism import GRAM_TASK_BYTES, spread
+
 TWO_52 = float(1 << 52)
 
 
@@ -70,15 +72,9 @@ def _doc_buckets(
     with distinct seeds)."""
     if ngram not in (1, 2):
         raise ValueError(f"ngram must be 1 or 2, got {ngram}")
-    # r9: the per-occurrence md5 bucketing below is CPU-dense; an
-    # under-split scan (single-file pool) ran it serially. Scale-
-    # adaptive spread — multi-split pools untouched; all consumers
-    # aggregate per bucket (integer counts) or per doc (DECIMAL sums),
-    # both partition-order-independent.
-    from .gopher import _GRAM_SPREAD_BYTES
-    from .lexicon import _spread_tokens_input
-
-    docs = _spread_tokens_input(docs, _GRAM_SPREAD_BYTES)
+    # consumers aggregate per bucket (integer counts) or per doc (DECIMAL
+    # sums), so the spread changes no result
+    docs = spread(docs, GRAM_TASK_BYTES)
     toks = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
     if ngram == 1:
         feats = toks

@@ -25,9 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# n-gram window construction is ~10× CPU-denser per input byte than a
-# plain tokenize, so the under-split-scan spread targets smaller tasks
-_GRAM_SPREAD_BYTES = 64 * 1024
+from ..plans.parallelism import GRAM_TASK_BYTES, spread
 
 # TOP2_MAX/TOP3_MAX are Gopher A1.1's top-2-/top-3-gram caps verbatim.
 # DUP2_MAX/DUP3_MAX are REPO-CHOSEN duplicate-mass caps: Rae et al. A1.1
@@ -82,15 +80,11 @@ def _gram_at(text_col: str, starts: F.Column, i: F.Column, n: int) -> F.Column:
 def _ngram_stats(docs: DataFrame, n: int, text_col: str, id_col: str) -> DataFrame:
     """(id_col, top{n}, tot{n}, dup{n}): max gram count, total gram
     occurrences, and occurrences beyond first per gram, per document."""
-    from .lexicon import _spread_tokens_input
-
-    # r9 second pass: spread an under-split scan — the gram projection
-    # below otherwise runs serially inside a single scan task — and
-    # build each gram with ONE substring over the staged token-offset
-    # array instead of an array slice + concat_ws per window (see
-    # _token_starts; byte-identical grams, measured 4×). The offsets
+    # r9 second pass: build each gram with ONE substring over the staged
+    # token-offset array instead of an array slice + concat_ws per window
+    # (see _token_starts; byte-identical grams, measured 4×). The offsets
     # stage through a generator so the fold runs once per row.
-    docs = _spread_tokens_input(docs, _GRAM_SPREAD_BYTES)
+    docs = spread(docs, GRAM_TASK_BYTES)
     toks = F.split(F.col(text_col), " ")
     sts = F.col("_starts")
     nt = F.size(sts) - 1
@@ -190,11 +184,9 @@ def gopher_dup_ngrams(
             ),
         ).otherwise(F.array().cast(entry_t))
 
-    from .lexicon import _spread_tokens_input
-
     base = docs.select(id_col, F.length(text_col).cast("long").alias("n_chars"))
     per_gram = (
-        _spread_tokens_input(docs, _GRAM_SPREAD_BYTES)
+        spread(docs, GRAM_TASK_BYTES)
         .select(id_col, text_col, F.explode(F.array(_token_starts(text_col))).alias("_starts"))
         .select(
             id_col,

@@ -21,42 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import bucket_key, clean_text, remove_punctuation, words_on_space
-
-# ~bytes of (compressed) input per tokenize task when spreading a
-# under-split scan; chosen so the spread only kicks in once the serial
-# tokenize would dominate the stage (measured: a 5.8 MB single-file scan
-# tokenizes 1.7× faster at ~12 tasks than serially, while a 0.6 MB input
-# is fastest with no extra exchange at all)
-_TOKEN_SPREAD_BYTES = 512 * 1024
-
-
-def _spread_tokens_input(docs: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
-    """Scale-adaptive parallelism for the tokenize+distinct stages.
-
-    The token distinct wants its partial aggregation to run inside the
-    scan tasks (only per-task vocabularies cross the exchange), so a
-    repartition of the corpus TEXT is normally a pure loss — but a scan
-    with fewer splits than the work deserves (the single-file sandbox
-    tables) serializes the whole explode+regex pass. Spread ONLY in that
-    case: when the optimizer's input-size estimate asks for more tasks
-    (~one per ``bytes_per_task`` of input — default _TOKEN_SPREAD_BYTES,
-    tuned for the tokenize+distinct stages; CPU-denser consumers like
-    the n-gram-window operators pass a smaller target — capped at
-    2×cores) than the scan naturally has. Real multi-split corpora
-    already exceed the cap and are returned untouched — no full-text
-    shuffle at scale. Row set is identical either way; every consumer
-    aggregates per doc or per key."""
-    sc = docs.sparkSession.sparkContext
-    cap = sc.defaultParallelism * 2
-    try:
-        size = int(docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        existing = docs.rdd.getNumPartitions()
-    except Exception:  # non-file/streaming frames with exotic plans: keep as-is
-        return docs
-    target = min(cap, max(1, size // (bytes_per_task or _TOKEN_SPREAD_BYTES)))
-    if existing >= target or target <= 1:
-        return docs
-    return docs.repartition(target)
+from ..plans.parallelism import TOKEN_TASK_BYTES, spread
 
 
 def corpus_words(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -81,7 +46,7 @@ def corpus_words(docs: DataFrame, text_col: str = "text") -> DataFrame:
     map-side partial aggregation replaces per-occurrence regex work
     (guide §2.3 "aggregate before you shuffle")."""
     return (
-        _spread_tokens_input(docs)
+        spread(docs, TOKEN_TASK_BYTES)
         .select(F.explode(words_on_space(clean_text(F.col(text_col)))).alias("w"))
         .filter(F.length("w") > 0)
         .distinct()
@@ -95,7 +60,7 @@ def corpus_word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFram
     (operators/segmenter_ops.py). Columns: word, freq. Same raw-token
     empty filter as corpus_words (regex evaluated once per token)."""
     return (
-        _spread_tokens_input(docs)
+        spread(docs, TOKEN_TASK_BYTES)
         .select(F.explode(words_on_space(clean_text(F.col(text_col)))).alias("w"))
         .filter(F.length("w") > 0)
         .select(F.lower(remove_punctuation(F.col("w"))).alias("word"))
@@ -127,7 +92,7 @@ def build_lexicon(
     # corpus_words: the P6 regex runs per distinct raw token, not per
     # occurrence; the final distinct over ∪ base keeps the set identical)
     tokens = (
-        _spread_tokens_input(docs)
+        spread(docs, TOKEN_TASK_BYTES)
         .select(F.explode(words_on_space(clean_text(F.col(text_col)))).alias("w"))
         .filter(F.length("w") > 0)
         .distinct()

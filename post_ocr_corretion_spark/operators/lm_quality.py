@@ -23,15 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.parallelism import GRAM_TASK_BYTES, spread
+
 
 def _doc_bigrams(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    from .lexicon import _spread_tokens_input
-    from .gopher import _GRAM_SPREAD_BYTES
-
-    # r9 second pass: spread an under-split scan (serial bigram
-    # construction otherwise); per-doc DECIMAL/integer aggregates
-    # downstream are partition-independent
-    docs = _spread_tokens_input(docs, _GRAM_SPREAD_BYTES)
+    # the per-doc DECIMAL/integer aggregates downstream are
+    # partition-independent, so the spread changes no result
+    docs = spread(docs, GRAM_TASK_BYTES)
     toks = F.split(F.col(text_col), " ")
     # r9: tokens staged through a generator once per doc — the split
     # expression captured in the per-position lambda was re-evaluated
@@ -75,11 +73,8 @@ def bigram_lm_fit(
     # condition on w1 occurrences AS A BIGRAM PREFIX (sum of outgoing
     # bigrams), the standard bigram-LM denominator: a token is a prefix
     # at every position but the document's last
-    from .lexicon import _spread_tokens_input
-    from .gopher import _GRAM_SPREAD_BYTES
-
     word_stats = (
-        _spread_tokens_input(docs, _GRAM_SPREAD_BYTES)
+        spread(docs, GRAM_TASK_BYTES)
         .select(F.posexplode(toks).alias("_p", "w"), F.size(toks).alias("_n"))
         .groupBy("w")
         .agg(

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.parallelism import TOKEN_TASK_BYTES, spread
+
 
 def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """(column, n, n_null, n_distinct, min_val, max_val) per profiled
@@ -32,14 +34,10 @@ def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
         cols = df.columns
     if not cols:
         raise ValueError("profile_table: no columns to profile")
-    # r9: the melt multiplies every row by len(cols) before the first
-    # aggregate; an under-split scan ran that serially. Scale-adaptive
-    # spread (no-op on multi-split tables); per-column aggregates are
-    # exact (counts, lexicographic extrema) so results are
-    # partition-independent.
-    from .lexicon import _spread_tokens_input
-
-    df = _spread_tokens_input(df)
+    # the melt multiplies every row by len(cols) before the first
+    # aggregate; the aggregates are exact (counts, lexicographic extrema),
+    # so the spread changes no result
+    df = spread(df, TOKEN_TASK_BYTES)
     melted = df.select(
         F.explode(
             F.array(

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..core.textops import BOS, EOS, MAX_SEQUENCE_LEN, PAD, SPECIAL_SYMBOLS, UNK
 from ..functions.text import char_array, clean_text, despace, mark_spaces
+from ..plans.parallelism import TOKEN_TASK_BYTES, spread
 
 
 def split_to_fit(df: DataFrame, text_col: str = "seq", max_len: int = MAX_SEQUENCE_LEN) -> DataFrame:
@@ -38,13 +39,8 @@ def split_to_fit(df: DataFrame, text_col: str = "seq", max_len: int = MAX_SEQUEN
     green). The chosen position stages through a generator so the fold
     runs once per row, not once per reference (the
     Project-above-Generate collapse)."""
-    from .lexicon import _spread_tokens_input
-
     c = F.col(text_col)
-    # same scale-adaptive guard as the tokenize stages: an under-split
-    # scan (the single-file sandbox tables) runs the whole clean+fold
-    # chain on one core; a multi-split corpus is left untouched
-    df = _spread_tokens_input(df)
+    df = spread(df, TOKEN_TASK_BYTES)
     ok = df.filter(F.length(c) <= max_len)
     pending = df.filter(F.length(c) > max_len)
     other_cols = [x for x in df.columns if x != text_col]

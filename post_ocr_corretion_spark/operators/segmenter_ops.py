@@ -17,40 +17,41 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core.segmenter import ViterbiSegmenter
+from ..plans.parallelism import CPU_TASK_BYTES, spread
 from .lexicon import corpus_word_frequencies
+from .scorer_fit import CurrentFit
 from .segmentation import prepare_sequences
 
-
-_SEG_CACHE: dict[str, ViterbiSegmenter] = {}
+_SEG_CACHE = CurrentFit()
 
 
 class SidecarSegmenter:
     """Lazy Viterbi segmenter backed by a parquet (word, freq) sidecar —
     same zero-driver-materialization pattern as scorer_fit.SidecarLexicon:
     the frequency table is written distributively and each Python worker
-    builds the cost table once, locally.  Pickles as just the path.
-    Deterministic: costs depend only on per-word counts and exact integer
-    totals, never on load order."""
+    builds the cost table once, locally, and keeps only the latest one.
+    Pickles as just the path (unique per fit). Deterministic: costs
+    depend only on per-word counts and exact integer totals, never on
+    load order."""
 
     def __init__(self, path: str):
         self.path = path
 
+    def _read(self) -> ViterbiSegmenter:
+        import glob
+        import os
+
+        import pyarrow.parquet as pq
+
+        counts: dict[str, int] = {}
+        for f in sorted(glob.glob(os.path.join(self.path, "*.parquet"))):
+            t = pq.read_table(f, columns=["word", "freq"])
+            for w, c in zip(t.column("word").to_pylist(), t.column("freq").to_pylist()):
+                counts[w] = c
+        return ViterbiSegmenter(counts)
+
     def _seg(self) -> ViterbiSegmenter:
-        seg = _SEG_CACHE.get(self.path)
-        if seg is None:
-            import glob
-            import os
-
-            import pyarrow.parquet as pq
-
-            counts: dict[str, int] = {}
-            for f in sorted(glob.glob(os.path.join(self.path, "*.parquet"))):
-                t = pq.read_table(f, columns=["word", "freq"])
-                for w, c in zip(t.column("word").to_pylist(), t.column("freq").to_pylist()):
-                    counts[w] = c
-            seg = ViterbiSegmenter(counts)
-            _SEG_CACHE[self.path] = seg
-        return seg
+        return _SEG_CACHE.get(self.path, self._read)
 
     def segment(self, text: str) -> list[str]:
         return self._seg().segment(text)
@@ -62,21 +63,15 @@ class SidecarSegmenter:
         return (SidecarSegmenter, (self.path,))
 
 
-def build_segmenter_broadcast(
-    spark: SparkSession, docs: DataFrame, fit: str = "distributed", sidecar_path: str | None = None
-):
-    """``fit='distributed'`` (default): the unigram table rides a parquet
-    sidecar, loaded lazily per worker — the driver never materializes the
-    vocabulary. ``fit='driver'``: the round-1 collect() path.  The sidecar
+def build_segmenter_broadcast(spark: SparkSession, docs: DataFrame):
+    """The unigram table rides a parquet sidecar, loaded lazily per
+    worker — the driver never materializes the vocabulary. The sidecar
     location follows scorer_fit.resolve_sidecar_path (shared-storage conf
     → local tempdir → driver-fit fallback on non-local masters whose
     executors could not read a driver tempdir; ADVICE r2)."""
-    if fit == "driver":
-        counts = {r.word: r.freq for r in corpus_word_frequencies(docs).collect()}
-        return spark.sparkContext.broadcast(ViterbiSegmenter(counts))
     from .scorer_fit import resolve_sidecar_path
 
-    path = sidecar_path or resolve_sidecar_path(spark, prefix="segmenter_sidecar")
+    path = resolve_sidecar_path(spark, prefix="segmenter_sidecar")
     if path is None:
         freqs = corpus_word_frequencies(docs)
         # same fallback bound as the scorer (pipeline.build_scorer_broadcast):
@@ -118,26 +113,19 @@ def segment_documents(spark: SparkSession, docs: DataFrame) -> DataFrame:
     model's re-spacing of the de-spaced input.
 
     r9: the Viterbi UDF is CPU-bound Python (O(len·MAX_WORD_LEN) dict
-    probes per sequence), and a single-file docs scan hands it ONE
-    input partition — the whole corpus decoded on one core (measured
-    9.3 s at sf0.1 with 31 cores idle). Spread the prepared sequences
-    across 2×cores ONLY when the frame has fewer partitions than cores;
-    a real multi-split corpus already has them and is left untouched.
-    This repartition sits ABOVE the projection that assigns ``seq_id``
-    (monotonically_increasing_id is evaluated in the pre-exchange stage),
-    so it changes no id. ``seq_id`` is still stable only for a given
-    input partitioning: split_to_fit's own spread sits BELOW that
-    projection and re-bases the ids whenever it fires. The output
-    multiset of sequences is the same either way; never persist or
-    compare ``seq_id`` across runs with different input layouts."""
-    seqs = prepare_sequences(docs)
-    sc = spark.sparkContext
-    try:
-        existing = seqs.rdd.getNumPartitions()
-    except Exception:
-        existing = None
-    if existing is not None and existing < sc.defaultParallelism:
-        seqs = seqs.repartition(sc.defaultParallelism * 2)
+    probes per sequence); a single-file docs scan decoded the whole
+    corpus on one core (measured 9.3 s at sf0.1 with 31 cores idle), so
+    the prepared sequences are spread, sized on ``docs``.
+
+    ``seq_id`` (monotonically_increasing_id) encodes the partition that
+    evaluates it. The spread here sits ABOVE that projection and changes
+    no id. What sits below it can re-base the ids: the partitioning of
+    ``docs``, the spread inside split_to_fit when it fires, and that
+    function's per-round checkpoint unions. So ``seq_id`` is stable only
+    for a given input layout. The
+    output multiset of sequences is the same either way; never persist
+    or compare ``seq_id`` across runs with different input layouts."""
+    seqs = spread(prepare_sequences(docs), CPU_TASK_BYTES, sized_on=docs)
     seg_udf = make_segment_udf(build_segmenter_broadcast(spark, docs))
     return seqs.withColumn("segmented", seg_udf(F.col("input_seq")))
 

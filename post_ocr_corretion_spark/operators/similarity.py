@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..plans.parallelism import CPU_TASK_BYTES, spread
+
 LSH_SEED = 20240616
 
 
@@ -502,13 +504,12 @@ def cosine_near_dup_pairs(
     surviving candidates — identical output rows. (2) the streamed side
     of the BroadcastNestedLoopJoin inherited the input's single-file
     partitioning — ONE task computed all N²/2 pairs (31 of 32 cores
-    idle; 17+ min observed at N = 20 000). The streamed side is now
-    repartitioned to 2×cores (scale-adaptive, same rows)."""
+    idle; 17+ min observed at N = 20 000). The streamed side now goes
+    through ``plans.parallelism.spread`` (same rows)."""
     withn = emb.select(
         id_col, vec_col, F.sqrt(dot(vec_col, vec_col, dim)).alias("_n")
     )
-    par = emb.sparkSession.sparkContext.defaultParallelism * 2
-    a, b = withn.repartition(par).alias("a"), withn.alias("b")
+    a, b = spread(withn, CPU_TASK_BYTES).alias("a"), withn.alias("b")
     raw = dot(f"a.{vec_col}", f"b.{vec_col}", dim) / (F.col("a._n") * F.col("b._n"))
     # the threshold rides the join condition EXPLICITLY, after the id
     # comparison (conjunct order is short-circuit order: Catalyst pushes

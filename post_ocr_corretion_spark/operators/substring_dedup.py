@@ -70,14 +70,12 @@ def token_ngram_windows(
         raise ValueError(f"fingerprint must be 'xxhash64' or 'exact', got {fingerprint!r}")
     toks = F.split(F.col(text_col), " ")
     if staged:
-        # r9 second pass: spread an under-split scan (the window sweep
-        # otherwise runs serially in one scan task; multi-split corpora
-        # untouched) and build each window gram with ONE substring over
+        # r9 second pass: build each window gram with ONE substring over
         # the staged token-offset array instead of concat_ws over an
         # array slice — byte-identical strings, identical xxhash64
         # fingerprints (see gopher._token_starts).
-        from .gopher import _GRAM_SPREAD_BYTES, _gram_at, _token_starts
-        from .lexicon import _spread_tokens_input
+        from ..plans.parallelism import GRAM_TASK_BYTES, spread
+        from .gopher import _gram_at, _token_starts
 
         sts = F.col("_starts")
         nt = F.size(sts) - 1
@@ -87,7 +85,7 @@ def token_ngram_windows(
             F.transform(F.sequence(F.lit(0), nt - k), fp)
         ).alias("pos", "gh")
         return (
-            _spread_tokens_input(docs, _GRAM_SPREAD_BYTES)
+            spread(docs, GRAM_TASK_BYTES)
             .filter(F.size(toks) >= k)
             .select(id_col, text_col, F.explode(F.array(_token_starts(text_col))).alias("_starts"))
             .select(id_col, windows)

@@ -4,6 +4,7 @@ from __future__ import annotations
 import __spark_entry__ as em
 from post_ocr_corretion_spark.plans.audit import (
     assert_columns_pruned,
+    count_exchanges,
     formatted_plan,
     join_strategies,
     pushed_filters,
@@ -394,3 +395,70 @@ def test_ccnet_buckets_no_unpartitioned_window_and_broadcast_thresholds(spark):
         pb = re.search(r"partitionBy=\[(.*?)\]", m.group(0))
         if pb is not None:
             assert pb.group(1).strip() != "", f"unpartitioned window:\n{m.group(0)}"
+
+
+def test_spread_leaves_frames_of_unknown_size_alone(spark):
+    """A 1-split frame with a non-file leaf reports the
+    ``spark.sql.defaultSizeInBytes`` sentinel as its size; spreading on
+    it would round-robin its whole payload on a guess."""
+    from post_ocr_corretion_spark.plans.parallelism import CPU_TASK_BYTES, size_estimate, spread
+
+    rows = [(i, "word " * 200) for i in range(400)]
+    cdf = spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
+    frames = {
+        "createDataFrame": cdf,
+        "localCheckpoint": cdf.localCheckpoint(),
+        "rdd": spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), "doc_id long, text string"),
+    }
+    for name, df in frames.items():
+        assert df.rdd.getNumPartitions() == 1, name
+        assert size_estimate(df) is None, name
+        assert count_exchanges(spread(df, CPU_TASK_BYTES)) == 0, name
+
+
+def test_spread_splits_an_under_split_file_scan(spark):
+    """The estimate of a single-file parquet scan is the file's size, and
+    the spread asks for one task per ``bytes_per_task`` of it, capped at
+    2×defaultParallelism."""
+    import os
+
+    from post_ocr_corretion_spark.plans.parallelism import CPU_TASK_BYTES, size_estimate, spread
+
+    path = f"{SF}/documents.parquet"
+    scan = spark.read.parquet(path)
+    est = size_estimate(scan)
+    assert est == os.path.getsize(path)
+    want = min(2 * spark.sparkContext.defaultParallelism, est // CPU_TASK_BYTES)
+    assert want > scan.rdd.getNumPartitions() == 1
+    plan = formatted_plan(spread(scan, CPU_TASK_BYTES))
+    assert f"RoundRobinPartitioning({want})" in plan
+
+
+def test_multi_split_corpus_is_never_spread(spark, tmp_path):
+    """A corpus that already has 2×cores splits gets no spread exchange,
+    on the token, n-gram and pair-metric paths alike.
+
+    Spark sizes file splits at min(128 MB, total / defaultParallelism),
+    so any corpus under cores × 128 MB reads as about 1×cores splits,
+    whatever its file count. ``minPartitionNum`` gives one split per
+    file here, as a corpus above that size gets one per 128 MB."""
+    from post_ocr_corretion_spark.datagen.wordlist import COMMON_WORDS
+    from post_ocr_corretion_spark.operators.lexicon import build_lexicon
+
+    n = 2 * spark.sparkContext.defaultParallelism
+    spark.read.parquet(f"{SF}/documents.parquet").repartition(n).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    spark.conf.set("spark.sql.files.minPartitionNum", str(n))
+    try:
+        docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
+        assert docs.rdd.getNumPartitions() >= n
+        frames = {
+            "build_lexicon": build_lexicon(spark, docs, COMMON_WORDS),
+            "gopher_dup_ngrams": em.queries()["gopher_dup_ngrams"](spark, str(tmp_path)),
+            "cer": em.queries()["cer"](spark, str(tmp_path)),
+        }
+        for name, df in frames.items():
+            assert "RoundRobinPartitioning" not in formatted_plan(df), name
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")

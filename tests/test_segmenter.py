@@ -61,3 +61,29 @@ def test_eval_operator(spark, docs_rows):
     )
     row = segmentation_eval(spark, docs).collect()[0]
     assert row.avg_ratio > 0.95 and row.std_ratio >= 0.0
+
+
+def test_sidecar_segmenter_keeps_only_the_latest_fit(tmp_path):
+    """A Python worker serves one segmenter fit at a time: loading a
+    second sidecar frees the first, so a long session does not keep
+    every run's cost table."""
+    import gc
+    import weakref
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from post_ocr_corretion_spark.operators.segmenter_ops import SidecarSegmenter
+
+    segs = []
+    for i, words in enumerate([["the", "cat"], ["a", "mat"]]):
+        path = tmp_path / f"fit{i}"
+        path.mkdir()
+        pq.write_table(pa.table({"word": words, "freq": [5, 3]}), str(path / "part-0.parquet"))
+        segs.append(SidecarSegmenter(str(path)))
+    assert segs[0].segment_text("thecat") == "the cat"
+    first = weakref.ref(segs[0]._seg())
+    assert segs[1].segment_text("amat") == "a mat"
+    gc.collect()
+    assert first() is None
+    assert segs[1]._seg() is segs[1]._seg()
