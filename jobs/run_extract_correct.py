@@ -29,12 +29,6 @@ def main(argv: list[str] | None = None) -> int:
         "--new-snapshot", action="store_true", help="always write a new snapshot instead of resuming"
     )
     parser.add_argument("--cores", type=int, default=None)
-    parser.add_argument(
-        "--fit",
-        choices=["distributed", "spark-agg", "driver"],
-        default="distributed",
-        help="scorer construction (pipeline.build_scorer_broadcast)",
-    )
     parser.add_argument("--max-distance", type=int, default=1, choices=[1, 2])
     parser.add_argument(
         "--sidecar-path",
@@ -42,13 +36,6 @@ def main(argv: list[str] | None = None) -> int:
         help="shared-storage dir for the lexicon sidecar (required on multi-node "
         "clusters unless spark.post_ocr.sidecarDir is set; executors must be able "
         "to read it)",
-    )
-    parser.add_argument(
-        "--bloom-threshold",
-        type=int,
-        default=None,
-        help="vocabulary count above which the distributed fit switches to "
-        "Bloom membership (default pipeline.AUTO_BLOOM_VOCAB_THRESHOLD)",
     )
     parser.add_argument(
         "--spread",
@@ -105,8 +92,9 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import Observation
 
     from post_ocr_corretion_spark.io.snapshots import SnapshotWriter
-    from post_ocr_corretion_spark.pipeline import run_pipeline
+    from post_ocr_corretion_spark.pipeline import run_pipeline_from_docs
     from post_ocr_corretion_spark.session import get_spark
+    from post_ocr_corretion_spark.sources.webpages import read_documents
 
     from pyspark.sql import SparkSession
 
@@ -116,8 +104,8 @@ def main(argv: list[str] | None = None) -> int:
     obs = Observation("counters")
 
     def job():
+        lexicon_docs = None
         if args.source == "synthetic":
-            from post_ocr_corretion_spark.pipeline import run_pipeline_from_docs
             from post_ocr_corretion_spark.sources.synthetic_source import (
                 SyntheticPagesDataSource,
             )
@@ -129,48 +117,24 @@ def main(argv: list[str] | None = None) -> int:
             # lang) that produced the source's html — so feeding the docs
             # projection reproduces the identical corpus end-to-end
             docs = pages.select("doc_id", "text", "lang")
-            df = run_pipeline_from_docs(
-                spark,
-                docs,
-                mode=args.mode,
-                fit=args.fit,
-                max_distance=args.max_distance,
-                roulette_seed=args.roulette_seed,
-                spread=args.spread,
-                sidecar_path=args.sidecar_path,
-                bloom_threshold=args.bloom_threshold,
-            )
-        elif args.replicate > 1:
-            from post_ocr_corretion_spark.pipeline import run_pipeline_from_docs
-            from post_ocr_corretion_spark.sources.webpages import read_documents, replicate_docs
+        else:
+            docs = read_documents(spark, args.sf_dir)
+            if args.replicate > 1:
+                from post_ocr_corretion_spark.sources.webpages import replicate_docs
 
-            docs = replicate_docs(read_documents(spark, args.sf_dir), args.replicate)
-            df = run_pipeline_from_docs(
-                spark,
-                docs,
-                mode=args.mode,
-                fit=args.fit,
-                max_distance=args.max_distance,
-                roulette_seed=args.roulette_seed,
-                spread=args.spread,
-                sidecar_path=args.sidecar_path,
-                bloom_threshold=args.bloom_threshold,
                 # replication adds no vocabulary: fit the lexicon/scorer
                 # from the base table (byte-identical output, tested)
-                lexicon_docs=read_documents(spark, args.sf_dir),
-            )
-        else:
-            df = run_pipeline(
-                spark,
-                args.sf_dir,
-                mode=args.mode,
-                fit=args.fit,
-                max_distance=args.max_distance,
-                roulette_seed=args.roulette_seed,
-                spread=args.spread,
-                sidecar_path=args.sidecar_path,
-                bloom_threshold=args.bloom_threshold,
-            )
+                lexicon_docs, docs = docs, replicate_docs(docs, args.replicate)
+        df = run_pipeline_from_docs(
+            spark,
+            docs,
+            mode=args.mode,
+            max_distance=args.max_distance,
+            roulette_seed=args.roulette_seed,
+            spread=args.spread,
+            sidecar_path=args.sidecar_path,
+            lexicon_docs=lexicon_docs,
+        )
         return df.observe(
             obs,
             F.count(F.lit(1)).alias("pages"),

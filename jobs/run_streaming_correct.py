@@ -58,7 +58,7 @@ def main(argv: list[str] | None = None) -> int:
     lex_df = build_lexicon(
         spark, read_documents(spark, args.lexicon_sf), COMMON_WORDS, bucketed=False
     )
-    scorer_bc, lex = build_scorer_broadcast(spark, lex_df, fit="distributed")
+    scorer_bc, lex = build_scorer_broadcast(spark, lex_df)
     lexicon_bc = spark.sparkContext.broadcast(lex)
 
     schema = "url string, warc_ts timestamp, html binary, text string, lang string, doc_id long"

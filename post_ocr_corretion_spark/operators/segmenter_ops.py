@@ -69,15 +69,13 @@ def build_segmenter_broadcast(spark: SparkSession, docs: DataFrame):
     location follows scorer_fit.resolve_sidecar_path (shared-storage conf
     → local tempdir → driver-fit fallback on non-local masters whose
     executors could not read a driver tempdir; ADVICE r2)."""
-    from .scorer_fit import resolve_sidecar_path
+    from .scorer_fit import AUTO_BLOOM_VOCAB_THRESHOLD, resolve_sidecar_path
 
     path = resolve_sidecar_path(spark, prefix="segmenter_sidecar")
     if path is None:
         freqs = corpus_word_frequencies(docs)
-        # same fallback bound as the scorer (pipeline.build_scorer_broadcast):
+        # same fallback bound as the scorer (scorer_fit.build_scorer_broadcast):
         # a driver fit is only safe for vocabularies the driver can hold
-        from ..pipeline import AUTO_BLOOM_VOCAB_THRESHOLD
-
         n = freqs.count()
         if n > AUTO_BLOOM_VOCAB_THRESHOLD:
             raise ValueError(

@@ -18,21 +18,20 @@ SURVEY.md §3.1) re-expressed over the north-rule web table:
 Non-``en`` pages and stubbed real-PDF pages pass through deterministically
 (corrected = extracted words; FIXTURES.md F2).
 
-Scale notes (SURVEY.md §4): by default (``fit='distributed'``) the bigram
-counts are aggregated distributively (groupBy over char pairs, bit-identical
-to the local fit) and membership rides a parquet sidecar loaded lazily per
-Python worker — the driver never materializes the word list. ``fit='driver'``
-keeps the round-1 collect() path for equality testing; ``use_bloom`` in
-operators/scorer_fit.py is the further 10^9-vocabulary option (documented
-fpp trade). Candidate generation runs on DISTINCT error words
-(vocabulary-bounded), never per occurrence.
+Scale notes (SURVEY.md §4): the scorer is built by
+operators/scorer_fit.build_scorer_broadcast. The lexicon rides a parquet
+sidecar and each Python worker fits the bigram model from it once — the
+driver never materializes the word list. Above AUTO_BLOOM_VOCAB_THRESHOLD
+words the bigram counts come from a Spark aggregation (bit-identical to
+the local fit) and membership is a Bloom filter (documented fpp trade).
+Candidate generation runs on DISTINCT error words (vocabulary-bounded),
+never per occurrence.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .core.scoring import NGramScorer
 from .datagen.wordlist import COMMON_WORDS
 from .functions.text import join_words_quirk, join_words_readable
 from .operators.candidates import candidate_batches
@@ -44,145 +43,27 @@ from .operators.correction import (
 )
 from .operators.extract import extract
 from .operators.lexicon import build_lexicon, deletion_neighborhood
+from .operators.scorer_fit import build_scorer_broadcast
 from .sources.webpages import read_documents, webpages
-
-
-# per-worker frozenset membership duplicates the vocabulary per Python
-# worker (32 copies/node at local[32]); above this vocabulary count the
-# default fit auto-switches to spark-agg bigram counts + Bloom membership
-# so per-worker memory is O(bloom bits), not O(|V|) (VERDICT r2 item 3)
-AUTO_BLOOM_VOCAB_THRESHOLD = 5_000_000
-# the auto path trades exactness for memory: a never-in-lexicon word can
-# test positive at this rate (per probe), adding a bogus candidate or
-# masking a detection — md5-deterministic, so a given corpus always
-# diverges (or not) the same way. 1e-6 keeps 10^9-word filters ~3.5 GB.
-AUTO_BLOOM_FPP = 1e-6
-
-
-def build_scorer_broadcast(
-    spark: SparkSession,
-    lexicon_df: DataFrame,
-    fit: str = "distributed",
-    sidecar_path: str | None = None,
-    bloom_threshold: int | None = None,
-):
-    """Broadcast one scorer per executor plus the set-like lexicon.
-
-    ``fit='distributed'`` (default): the lexicon is written distributively
-    to a parquet sidecar; each Python worker lazily builds the scorer from
-    it ONCE (SidecarScorer — integer-count fits are order-independent, so
-    every worker derives identical bits) and membership is the exact
-    SidecarLexicon. The driver never materializes the word list, so a
-    10^9-word vocabulary cannot OOM it.  Above ``bloom_threshold`` words
-    (default AUTO_BLOOM_VOCAB_THRESHOLD) it auto-switches to
-    Spark-aggregated counts + Bloom membership (documented
-    AUTO_BLOOM_FPP trade) so per-WORKER memory stays bounded too.  The
-    threshold check reads the sidecar's parquet footers — no count()
-    job on the default path (VERDICT r3); above the threshold the
-    already-written sidecar simply becomes the counting pass (one
-    distributed pass either way on that rare branch).
-    ``fit='spark-agg'``: bigram counts via a Spark aggregation instead of
-    per-worker fits (the 10^8+ vocabulary path).  ``fit='driver'``: the
-    round-1 collect() path, kept for the equality tests.
-
-    ``sidecar_path``: where the lexicon sidecar lands. Defaults to
-    ``spark.post_ocr.sidecarDir`` conf, else a tempdir on local masters;
-    on a NON-local master with neither, sidecar fits fall back to the
-    driver fit (exact, same bytes) rather than write a path executors
-    cannot read (ADVICE r2) — unless the vocabulary exceeds the Bloom
-    threshold, in which case the Bloom scorer takes over (it ships no
-    files: the driver assembles the bitmap from executor-built block
-    rows, m/8 bytes total — ADVICE r4)."""
-    if fit == "driver":
-        words = frozenset(r.word for r in lexicon_df.select("word").collect())
-        return spark.sparkContext.broadcast(NGramScorer(words)), words
-
-    from .operators.scorer_fit import resolve_sidecar_path, scorer_from_spark
-
-    path = sidecar_path or resolve_sidecar_path(spark)
-    if path is None:
-        # the driver fit is only a safe fallback for vocabularies the
-        # driver can hold; above the Bloom threshold fall through to the
-        # Bloom scorer instead (ADVICE r4: it needs no shared files — the
-        # bitmap is assembled from executor-side block rows whose total
-        # size is the filter's own m/8 bytes, which the driver must hold
-        # to broadcast anyway)
-        n = lexicon_df.count()
-        thr = AUTO_BLOOM_VOCAB_THRESHOLD if bloom_threshold is None else bloom_threshold
-        if n > thr:
-            scorer = scorer_from_spark(
-                spark, lexicon_df, use_bloom=True, fpp=AUTO_BLOOM_FPP, n_words=n
-            )
-            return spark.sparkContext.broadcast(scorer), scorer.lexicon
-        import warnings
-
-        warnings.warn(
-            "no shared sidecar location on a non-local master "
-            "(set spark.post_ocr.sidecarDir or --sidecar-path); "
-            "falling back to the driver-side fit",
-            stacklevel=2,
-        )
-        words = frozenset(r.word for r in lexicon_df.select("word").collect())
-        return spark.sparkContext.broadcast(NGramScorer(words)), words
-
-    if fit == "spark-agg":
-        # Spark-aggregated bigram counts (bit-identical to the local fit,
-        # tested) + sidecar membership — the 10^8+-vocabulary path; costs
-        # two extra Spark jobs per run, so the default below amortizes the
-        # fit per worker instead (same zero-driver-materialization
-        # property, same bits).
-        from .operators.scorer_fit import bigram_counts, counts_matrix, write_lexicon_sidecar
-
-        counts = counts_matrix(bigram_counts(lexicon_df))  # bounded by V², a model artifact
-        side = write_lexicon_sidecar(lexicon_df, path)
-        return spark.sparkContext.broadcast(NGramScorer(frozenset(), membership=side, counts=counts)), side
-    from .operators.scorer_fit import SidecarScorer, write_lexicon_sidecar
-
-    side = write_lexicon_sidecar(lexicon_df, path)
-    # auto-Bloom threshold check rides the sidecar's parquet footers —
-    # zero extra Spark jobs on the default path (VERDICT r3: the old
-    # unconditional count() scheduled one job per pipeline run)
-    thr = AUTO_BLOOM_VOCAB_THRESHOLD if bloom_threshold is None else bloom_threshold
-    n = side.row_count()
-    if n > thr:
-        # the word sidecar doubled as the counting pass; its footers also
-        # size the filter (no count() job). The Bloom bitmap rides its own
-        # sidecar (a fresh resolve — never this dir, which mode-overwrite
-        # would clobber), and the now-unused word parts are removed so the
-        # switch leaves no orphans (ADVICE r4).
-        scorer = scorer_from_spark(
-            spark, lexicon_df, use_bloom=True, fpp=AUTO_BLOOM_FPP, n_words=n
-        )
-        import shutil
-
-        shutil.rmtree(side.path, ignore_errors=True)  # shared-FS contract, like the sidecars
-        # scorer.lexicon IS the BloomFilter (a SidecarBloom proxy here):
-        # membership-only, so the UDF beam probes deletion variants
-        # instead of building the per-worker SymSpell index
-        # (operators/correction._worker_fns)
-        return spark.sparkContext.broadcast(scorer), scorer.lexicon
-    return spark.sparkContext.broadcast(SidecarScorer(side)), side
 
 
 def run_pipeline(
     spark: SparkSession,
     sf_dir: str,
     mode: str = "udf",
-    fit: str = "distributed",
     max_distance: int = 1,
     roulette_seed: int | None = None,
     spread: str = "hash",
     sidecar_path: str | None = None,
-    bloom_threshold: int | None = None,
 ) -> DataFrame:
     """``mode='udf'`` (default): single-pass Arrow-batched beam — the
     throughput path, zero shuffles after extraction.  ``mode='catalyst'``:
     the no-Python beam fold over SymSpell equi-join candidate batches.
     Both are byte-identical to the oracle (tests assert it)."""
     return run_pipeline_from_docs(
-        spark, read_documents(spark, sf_dir), mode, fit=fit,
+        spark, read_documents(spark, sf_dir), mode,
         max_distance=max_distance, roulette_seed=roulette_seed, spread=spread,
-        sidecar_path=sidecar_path, bloom_threshold=bloom_threshold,
+        sidecar_path=sidecar_path,
     )
 
 
@@ -198,16 +79,51 @@ def _spread_docs(docs: DataFrame, spread: str, par: int) -> DataFrame:
     return docs.repartition(par, F.xxhash64("doc_id"))
 
 
+class _BackgroundCheckpoint:
+    """``frame.localCheckpoint(eager=True)`` on a driver thread. The thread
+    is an InheritableThread, so its job carries the caller's job group and
+    tags, plus one tag of its own that ``cancel`` targets."""
+
+    def __init__(self, spark: SparkSession, frame: DataFrame):
+        import uuid
+
+        from pyspark import InheritableThread
+
+        self._sc = spark.sparkContext
+        self._tag = f"overlap_checkpoint_{uuid.uuid4().hex}"
+        self._value = self._error = None
+        self._thread = InheritableThread(target=lambda: self._run(frame), session=spark, daemon=True)
+        self._thread.start()
+
+    def _run(self, frame: DataFrame) -> None:
+        self._sc.addJobTag(self._tag)
+        try:
+            self._value = frame.localCheckpoint(eager=True)
+        except BaseException as e:  # re-raised on the caller's thread by result()
+            self._error = e
+
+    def result(self) -> DataFrame:
+        self._thread.join()
+        if self._error is not None:
+            raise self._error
+        return self._value
+
+    def cancel(self) -> None:
+        """Cancel the checkpoint job and wait for the thread. Repeats until
+        the thread ends: the first cancel can land before the job exists."""
+        while self._thread.is_alive():
+            self._sc.cancelJobsWithTag(self._tag)
+            self._thread.join(0.1)
+
+
 def run_pipeline_from_docs(
     spark: SparkSession,
     docs: DataFrame,
     mode: str = "udf",
-    fit: str = "distributed",
     max_distance: int = 1,
     roulette_seed: int | None = None,
     spread: str = "hash",
     sidecar_path: str | None = None,
-    bloom_threshold: int | None = None,
     lexicon_docs: DataFrame | None = None,
 ) -> DataFrame:
     """``lexicon_docs``: optional smaller table to build the lexicon/scorer
@@ -254,28 +170,26 @@ def run_pipeline_from_docs(
     # partitioning (the checkpoint pins the exact repartition output the
     # stage would otherwise compute inline) → byte-identical output.
     # UDF mode only: the catalyst path materializes `extracted` itself.
-    docs_fut = None
-    if mode == "udf":
-        from concurrent.futures import ThreadPoolExecutor
-
-        _pool = ThreadPoolExecutor(max_workers=1)
-        docs_fut = _pool.submit(lambda d=docs: d.localCheckpoint(eager=True))
-        _pool.shutdown(wait=False)
-
-    lexicon_df = build_lexicon(
-        spark, lexicon_input, COMMON_WORDS, bucketed=(mode == "catalyst"),
-    )
-    if mode == "catalyst" or fit == "spark-agg":
-        # only these paths traverse the lexicon frame more than once
-        # (deletion neighborhood / candidate joins; bigram counts +
-        # sidecar). The default udf path consumes it exactly once — the
-        # sidecar write — so caching it there only added a memory-store
-        # materialization to the timed run (guide §5: cache only on
-        # reuse). r9 optimization; results unaffected.
-        lexicon_df = lexicon_df.cache()
-    scorer_bc, lex_words = build_scorer_broadcast(
-        spark, lexicon_df, fit=fit, sidecar_path=sidecar_path, bloom_threshold=bloom_threshold
-    )
+    # If the lexicon or scorer build raises, the checkpoint job is
+    # cancelled before the exception leaves this call.
+    overlap = _BackgroundCheckpoint(spark, docs) if mode == "udf" else None
+    try:
+        lexicon_df = build_lexicon(
+            spark, lexicon_input, COMMON_WORDS, bucketed=(mode == "catalyst"),
+        )
+        if mode == "catalyst":
+            # only this path traverses the lexicon frame more than once
+            # (deletion neighborhood / candidate joins). The udf path
+            # consumes it exactly once — the sidecar write — so caching it
+            # there only added a memory-store materialization to the timed
+            # run (guide §5: cache only on reuse). r9 optimization;
+            # results unaffected.
+            lexicon_df = lexicon_df.cache()
+        scorer_bc, lex_words = build_scorer_broadcast(spark, lexicon_df, sidecar_path=sidecar_path)
+    except BaseException:
+        if overlap is not None:
+            overlap.cancel()
+        raise
 
     if mode == "udf":
         # throughput path (r9): render+extract+correct fused into ONE
@@ -285,7 +199,7 @@ def run_pipeline_from_docs(
         # render_and_extract + run_beam_udf — the parity suite asserts it.
         lexicon_bc = spark.sparkContext.broadcast(lex_words)
         corrected = render_extract_correct(
-            docs_fut.result(), scorer_bc, lexicon_bc, max_distance=max_distance, roulette_seed=roulette_seed
+            overlap.result(), scorer_bc, lexicon_bc, max_distance=max_distance, roulette_seed=roulette_seed
         )
     else:
         enabled = (F.col("lang") == "en") & (F.col("kind") != "pdf_stub")

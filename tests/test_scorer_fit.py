@@ -14,10 +14,11 @@ def _lex_df(spark, fixture_lexicon):
 
 
 def test_distributed_counts_bit_identical(spark, fixture_lexicon):
-    from post_ocr_corretion_spark.operators.scorer_fit import scorer_from_spark
+    from post_ocr_corretion_spark.operators.scorer_fit import bigram_counts, counts_matrix
 
     local = NGramScorer(fixture_lexicon)
-    dist = scorer_from_spark(spark, _lex_df(spark, fixture_lexicon))
+    counts = counts_matrix(bigram_counts(_lex_df(spark, fixture_lexicon)))
+    dist = NGramScorer(fixture_lexicon, counts=counts)
     assert np.array_equal(local.log_prob, dist.log_prob)
     for w in ["the", "dis0ric", "cit.", "zzz", "", "query"]:
         assert dist.word_prob(w) == local.word_prob(w)
@@ -133,7 +134,7 @@ def test_bloom_scorer_no_position_collect(spark, fixture_lexicon, monkeypatch):
         raise AssertionError("production Bloom build touched the position stream")
 
     monkeypatch.setattr(sfmod, "distributed_bloom_positions", boom)
-    s = sfmod.scorer_from_spark(spark, _lex_df(spark, fixture_lexicon), use_bloom=True, fpp=0.001)
+    s = sfmod.scorer_from_spark(_lex_df(spark, fixture_lexicon), fpp=0.001)
     assert all(w in s.lexicon for w in fixture_lexicon)
 
 
@@ -141,7 +142,7 @@ def test_bloom_scorer_agrees_where_filter_exact(spark, fixture_lexicon):
     from post_ocr_corretion_spark.operators.scorer_fit import scorer_from_spark
 
     local = NGramScorer(fixture_lexicon)
-    bloomed = scorer_from_spark(spark, _lex_df(spark, fixture_lexicon), use_bloom=True, fpp=0.0001)
+    bloomed = scorer_from_spark(_lex_df(spark, fixture_lexicon), fpp=0.0001)
     words = list(fixture_lexicon)[:50] + ["dis0ric", "qzqzqz", "the.", "scn"]
     for w in words:
         assert bloomed.word_prob(w) == local.word_prob(w), w
@@ -182,89 +183,123 @@ def test_resolve_sidecar_path_resolution_order(spark, tmp_path):
     assert resolve_sidecar_path(_Fake()) is None
 
 
-def test_scorer_broadcast_cluster_fallback_is_driver_fit(spark, fixture_lexicon, recwarn):
-    """On a (faked) non-local master with no shared dir, the distributed
-    fit falls back to the exact driver fit with a warning — never a
-    driver-tempdir sidecar executors cannot open."""
+def test_scorer_broadcast_cluster_fallback_is_driver_fit(spark, fixture_lexicon, monkeypatch):
+    """On a (faked) non-local master with no shared dir, the scorer falls
+    back to the exact driver fit with a warning — never a driver-tempdir
+    sidecar executors cannot open."""
     import warnings
 
-    from post_ocr_corretion_spark.core.scoring import NGramScorer as _S
     from post_ocr_corretion_spark.operators import scorer_fit as sfmod
-    from post_ocr_corretion_spark.pipeline import build_scorer_broadcast
 
-    lex_df = _lex_df(spark, fixture_lexicon)
-    orig = sfmod.resolve_sidecar_path
-    sfmod.resolve_sidecar_path = lambda *a, **k: None
-    try:
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            bc, words = build_scorer_broadcast(spark, lex_df, fit="distributed")
-        assert any("driver-side fit" in str(x.message) for x in w)
-    finally:
-        sfmod.resolve_sidecar_path = orig
-    assert isinstance(bc.value, _S) and words == frozenset(fixture_lexicon)
-    local = _S(fixture_lexicon)
+    monkeypatch.setattr(sfmod, "resolve_sidecar_path", lambda *a, **k: None)
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        bc, words = sfmod.build_scorer_broadcast(spark, _lex_df(spark, fixture_lexicon))
+    assert any("driver-side fit" in str(x.message) for x in w)
+    assert isinstance(bc.value, NGramScorer) and words == frozenset(fixture_lexicon)
+    local = NGramScorer(fixture_lexicon)
     assert bc.value.word_prob("the") == local.word_prob("the")
 
 
-def test_auto_bloom_switch_above_threshold(spark, fixture_lexicon):
+def test_default_scorer_build_is_one_spark_job(spark, fixture_lexicon):
+    """VERDICT r3: the default path sizes the vocabulary from the word
+    sidecar's parquet footers, so the whole build is the one sidecar
+    write — no count() job."""
+    import uuid
+
+    from post_ocr_corretion_spark.operators.scorer_fit import SidecarScorer, build_scorer_broadcast
+
+    lex_df = _lex_df(spark, fixture_lexicon)
+    sc = spark.sparkContext
+    group = f"scorer_build_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "default scorer build")
+    try:
+        bc, _ = build_scorer_broadcast(spark, lex_df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert isinstance(bc.value, SidecarScorer)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_auto_bloom_switch_above_threshold(spark, fixture_lexicon, monkeypatch):
     """VERDICT r2 item 3: with the threshold forced low, the default fit
     returns a Bloom-membership scorer (per-worker memory O(bloom bits));
     membership stays exact on lexicon words (no false negatives) and the
     bigram model is bit-identical to the local fit."""
-    import numpy as np
-
-    from post_ocr_corretion_spark.core.bloom import BloomFilter
-    from post_ocr_corretion_spark.pipeline import build_scorer_broadcast
+    from post_ocr_corretion_spark.operators import scorer_fit as sfmod
 
     lex_df = _lex_df(spark, fixture_lexicon)
-    bc, lex = build_scorer_broadcast(spark, lex_df, fit="distributed", bloom_threshold=0)
+    # below the threshold the exact sidecar path is unchanged
+    _, lex = sfmod.build_scorer_broadcast(spark, lex_df)
+    assert not isinstance(lex, BloomFilter)
+
+    monkeypatch.setattr(sfmod, "AUTO_BLOOM_VOCAB_THRESHOLD", 0)
+    bc, lex = sfmod.build_scorer_broadcast(spark, lex_df)
     assert isinstance(lex, BloomFilter)
     assert all(w in lex for w in fixture_lexicon)  # never false-negative
     local = NGramScorer(fixture_lexicon)
     assert np.array_equal(bc.value.log_prob, local.log_prob)
 
-    # below the threshold the exact sidecar path is unchanged
-    bc2, lex2 = build_scorer_broadcast(
-        spark, lex_df, fit="distributed", bloom_threshold=10**9
-    )
-    assert not isinstance(lex2, BloomFilter)
 
-
-def test_auto_bloom_switch_cleans_up_word_sidecar(spark, fixture_lexicon, tmp_path):
-    """ADVICE r4: the word sidecar doubles as the counting pass on the
-    auto-switch branch but must not survive it as an orphan; the Bloom
-    scorer that replaces it is a lazy bitmap sidecar (O(1) driver)."""
+def _parquet_columns(path):
+    import glob
     import os
 
-    from post_ocr_corretion_spark.operators.scorer_fit import SidecarBloom
-    from post_ocr_corretion_spark.pipeline import build_scorer_broadcast
+    import pyarrow.parquet as pq
 
-    lex_df = _lex_df(spark, fixture_lexicon)
+    return {
+        name
+        for f in glob.glob(os.path.join(path, "*.parquet"))
+        for name in pq.read_schema(f).names
+    }
+
+
+def test_auto_bloom_switch_cleans_up_word_sidecar(spark, fixture_lexicon, tmp_path, monkeypatch):
+    """ADVICE r4: the word sidecar doubles as the counting pass on the
+    auto-switch branch but must not survive it as an orphan; the Bloom
+    sidecar that replaces it overwrites the word parts at the same
+    location and is a lazy bitmap proxy (O(1) driver)."""
+    import os
+
+    from post_ocr_corretion_spark.operators import scorer_fit as sfmod
+
+    monkeypatch.setattr(sfmod, "AUTO_BLOOM_VOCAB_THRESHOLD", 0)
     word_dir = str(tmp_path / "lexicon_side")
-    bc, lex = build_scorer_broadcast(
-        spark, lex_df, fit="distributed", sidecar_path=word_dir, bloom_threshold=0
-    )
-    assert isinstance(lex, SidecarBloom)
-    assert not os.path.exists(word_dir)  # no orphaned word parts
+    bc, lex = sfmod.build_scorer_broadcast(spark, _lex_df(spark, fixture_lexicon), sidecar_path=word_dir)
+    assert isinstance(lex, sfmod.SidecarBloom)
+    assert os.path.exists(os.path.join(word_dir, sfmod.BLOOM_META))
+    assert "word" not in _parquet_columns(word_dir)  # no orphaned word parts
     assert all(w in lex for w in fixture_lexicon)
 
 
-def test_no_shared_path_above_threshold_falls_through_to_bloom(spark, fixture_lexicon):
+def test_bloom_switch_writes_to_the_given_path_without_a_resolved_one(
+    spark, fixture_lexicon, tmp_path, monkeypatch
+):
+    """An explicit sidecar_path is the shared location even where
+    resolve_sidecar_path finds none (a non-local master with no conf):
+    the Bloom scorer's bitmap lands there as a SidecarBloom instead of
+    being assembled on the driver (~3.5 GB at 10^9 words)."""
+    from post_ocr_corretion_spark.operators import scorer_fit as sfmod
+
+    monkeypatch.setattr(sfmod, "resolve_sidecar_path", lambda *a, **k: None)
+    monkeypatch.setattr(sfmod, "AUTO_BLOOM_VOCAB_THRESHOLD", 0)
+    side_dir = str(tmp_path / "shared")
+    bc, lex = sfmod.build_scorer_broadcast(spark, _lex_df(spark, fixture_lexicon), sidecar_path=side_dir)
+    assert isinstance(lex, sfmod.SidecarBloom) and lex.path == side_dir
+    assert all(w in lex for w in fixture_lexicon)
+    assert np.array_equal(bc.value.log_prob, NGramScorer(fixture_lexicon).log_prob)
+
+
+def test_no_shared_path_above_threshold_falls_through_to_bloom(spark, fixture_lexicon, monkeypatch):
     """ADVICE r4 item 1: a non-local master with no shared sidecar dir and
     an above-threshold vocabulary must get the Bloom scorer (no files to
     share — driver assembles the bitmap from block rows), not the old
     ValueError that recommended the very path that raised."""
     from post_ocr_corretion_spark.operators import scorer_fit as sfmod
-    from post_ocr_corretion_spark.pipeline import build_scorer_broadcast
 
-    lex_df = _lex_df(spark, fixture_lexicon)
-    orig = sfmod.resolve_sidecar_path
-    sfmod.resolve_sidecar_path = lambda *a, **k: None
-    try:
-        bc, lex = build_scorer_broadcast(spark, lex_df, fit="distributed", bloom_threshold=0)
-    finally:
-        sfmod.resolve_sidecar_path = orig
+    monkeypatch.setattr(sfmod, "resolve_sidecar_path", lambda *a, **k: None)
+    monkeypatch.setattr(sfmod, "AUTO_BLOOM_VOCAB_THRESHOLD", 0)
+    bc, lex = sfmod.build_scorer_broadcast(spark, _lex_df(spark, fixture_lexicon))
     assert isinstance(lex, BloomFilter) and type(lex) is BloomFilter  # driver-assembled
     assert all(w in lex for w in fixture_lexicon)
     local = NGramScorer(fixture_lexicon)
@@ -277,7 +312,7 @@ def test_rewritten_sidecar_path_serves_each_fit(spark, tmp_path):
     across jobs, so a cache keyed by the path alone would keep serving
     the first write's words to the second fit."""
     from post_ocr_corretion_spark.core.scoring import IN_LEXICON_P
-    from post_ocr_corretion_spark.pipeline import build_scorer_broadcast
+    from post_ocr_corretion_spark.operators.scorer_fit import build_scorer_broadcast
 
     path = str(tmp_path / "sidecar")
     probe_words = ("alpha", "beta", "gamma", "delta")
