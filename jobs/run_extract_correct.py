@@ -38,12 +38,6 @@ def main(argv: list[str] | None = None) -> int:
         "to read it)",
     )
     parser.add_argument(
-        "--spread",
-        choices=["hash", "range"],
-        default="hash",
-        help="input spread: hash repartition or repartitionByRange on the doc hash",
-    )
-    parser.add_argument(
         "--roulette-seed",
         type=int,
         default=None,
@@ -131,7 +125,6 @@ def main(argv: list[str] | None = None) -> int:
             mode=args.mode,
             max_distance=args.max_distance,
             roulette_seed=args.roulette_seed,
-            spread=args.spread,
             sidecar_path=args.sidecar_path,
             lexicon_docs=lexicon_docs,
         )

@@ -3,7 +3,8 @@
 This is the reference's ``correct_sentences()`` lifecycle (main.py:28-35,
 SURVEY.md §3.1) re-expressed over the north-rule web table:
 
-  documents (ground truth) ──► doc spread (hash / range on the doc hash)
+  documents (ground truth) ──► doc spread (only when under-split:
+        │                         range on the doc hash)
         │                                   │
         │ lexicon (A2/U1/A3)                ▼
         ▼                     udf (default): ONE mapInPandas stage —
@@ -41,10 +42,11 @@ from .operators.correction import (
     run_beam_fold,
     with_detection,
 )
-from .operators.extract import extract
+from .operators.extract import render_and_extract
 from .operators.lexicon import build_lexicon, deletion_neighborhood
 from .operators.scorer_fit import build_scorer_broadcast
-from .sources.webpages import read_documents, webpages
+from .plans.parallelism import CPU_TASK_BYTES, spread_partitions
+from .sources.webpages import read_documents
 
 
 def run_pipeline(
@@ -53,7 +55,6 @@ def run_pipeline(
     mode: str = "udf",
     max_distance: int = 1,
     roulette_seed: int | None = None,
-    spread: str = "hash",
     sidecar_path: str | None = None,
 ) -> DataFrame:
     """``mode='udf'`` (default): single-pass Arrow-batched beam — the
@@ -62,21 +63,8 @@ def run_pipeline(
     Both are byte-identical to the oracle (tests assert it)."""
     return run_pipeline_from_docs(
         spark, read_documents(spark, sf_dir), mode,
-        max_distance=max_distance, roulette_seed=roulette_seed, spread=spread,
-        sidecar_path=sidecar_path,
+        max_distance=max_distance, roulette_seed=roulette_seed, sidecar_path=sidecar_path,
     )
-
-
-def _spread_docs(docs: DataFrame, spread: str, par: int) -> DataFrame:
-    """The doc-spreading shuffle feeding the per-doc Python stage (hash
-    default; ``range`` = the north rule's repartitionByRange on the doc
-    hash). Factored out so the plan-audit tests can pin its
-    partitioning directly — in the pipeline the shuffle is materialized
-    by the overlap thread (localCheckpoint), which replaces it with a
-    Scan ExistingRDD in the final plan."""
-    if spread == "range":
-        return docs.repartitionByRange(par, F.xxhash64("doc_id"))
-    return docs.repartition(par, F.xxhash64("doc_id"))
 
 
 class _BackgroundCheckpoint:
@@ -122,7 +110,6 @@ def run_pipeline_from_docs(
     mode: str = "udf",
     max_distance: int = 1,
     roulette_seed: int | None = None,
-    spread: str = "hash",
     sidecar_path: str | None = None,
     lexicon_docs: DataFrame | None = None,
 ) -> DataFrame:
@@ -137,42 +124,28 @@ def run_pipeline_from_docs(
         raise ValueError("the seeded roulette W2 mode (correctionSentences.py:302-330) is UDF-mode only")
 
     ensure_package_shipped(spark)
-    # A single parquet file arrives as one input split; spread the per-doc
-    # work (render/extract/correct are all embarrassingly parallel) across
-    # every core up front. Hashing the key also breaks the skewed-host
-    # clustering of the url space (SURVEY.md §4.1).  ``spread='range'``
-    # is the north rule's repartitionByRange-on-url-hash: contiguous hash
-    # ranges per partition, which a columnar sink can exploit for
-    # min/max pruning on the key — same uniform balance, one extra
-    # range-boundary sampling pass.
-    #
-    # r9: the repartition feeds ONLY the per-doc Python stage. The
-    # lexicon/scorer job reads the RAW docs frame instead: its token
-    # distinct gets map-side partial aggregation inside the scan tasks,
-    # so only per-task vocabularies ever cross an exchange — routing it
-    # through the repartition shuffled the ENTIRE corpus text first, an
-    # extra full-corpus exchange at any scale (guide §2.4 "remove
-    # shuffles outright"; measured 4× on the lexicon job at sf0.1, ~1.2×
-    # at the 10× replica, where the scan is a single split — at real
-    # multi-split corpora the saving is the whole text shuffle). The
-    # lexicon is a distinct ∪ base — set-identical either way.
+    # The lexicon job reads the raw scan: its token distinct aggregates
+    # map-side inside the scan tasks, so only per-task vocabularies cross
+    # an exchange, never the corpus text. The lexicon is a distinct ∪ base,
+    # set-identical either way.
     lexicon_input = lexicon_docs if lexicon_docs is not None else docs
-    par = max(spark.sparkContext.defaultParallelism * 2, 8)
-    docs = _spread_docs(docs, spread, par)
-
-    # r9: OVERLAP the doc-spreading shuffle with the lexicon/scorer job
-    # (guide §2.6 — Spark happily runs concurrent jobs; actions are only
-    # sequential because the driver calls them sequentially). The map
-    # stage's input shuffle does not depend on the sidecar, so a driver
-    # thread materializes it (localCheckpoint) while the main thread
-    # builds the lexicon and writes the sidecar; the correction stage
-    # then reads the already-shuffled partitions. Same rows, same
-    # partitioning (the checkpoint pins the exact repartition output the
-    # stage would otherwise compute inline) → byte-identical output.
-    # UDF mode only: the catalyst path materializes `extracted` itself.
+    # The per-doc stage gets the one spread decision (plans/parallelism),
+    # range-partitioned on the doc hash as the north rule asks
+    # (BASELINE.json), which also breaks the skewed-host clustering of the
+    # url space (SURVEY.md §4.1). When the spread fires in udf mode, a
+    # driver thread materializes its shuffle while this thread builds the
+    # lexicon and the scorer, which hides the shuffle behind that job; the
+    # udf stage then reads the checkpointed partitions (catalyst mode
+    # checkpoints its extracted rows itself). A multi-split or
+    # unknown-size input is used as given: nothing is shuffled or pinned.
     # If the lexicon or scorer build raises, the checkpoint job is
     # cancelled before the exception leaves this call.
-    overlap = _BackgroundCheckpoint(spark, docs) if mode == "udf" else None
+    n = spread_partitions(docs, CPU_TASK_BYTES)
+    overlap = None
+    if n is not None:
+        docs = docs.repartitionByRange(n, F.xxhash64("doc_id"))
+        if mode == "udf":
+            overlap = _BackgroundCheckpoint(spark, docs)
     try:
         lexicon_df = build_lexicon(
             spark, lexicon_input, COMMON_WORDS, bucketed=(mode == "catalyst"),
@@ -198,12 +171,14 @@ def run_pipeline_from_docs(
         # boundary twice (guide §4.1). Byte-identical to
         # render_and_extract + run_beam_udf — the parity suite asserts it.
         lexicon_bc = spark.sparkContext.broadcast(lex_words)
+        if overlap is not None:
+            docs = overlap.result()
         corrected = render_extract_correct(
-            overlap.result(), scorer_bc, lexicon_bc, max_distance=max_distance, roulette_seed=roulette_seed
+            docs, scorer_bc, lexicon_bc, max_distance=max_distance, roulette_seed=roulette_seed
         )
     else:
         enabled = (F.col("lang") == "en") & (F.col("kind") != "pdf_stub")
-        extracted = extract(webpages(docs)).localCheckpoint(eager=True)  # materialize once for both branches
+        extracted = render_and_extract(docs).localCheckpoint(eager=True)  # materialize once for both branches
         correctable = extracted.filter(enabled)
         from .functions.text import sentence_words
 

@@ -24,6 +24,10 @@ only in that case:
   scan tasks. A caller whose filter is the expensive part stages it
   through a generator above the spread (see ``bloom_join.bloom_prefilter``).
 
+The flagship (``pipeline.run_pipeline_from_docs``) makes the same decision
+through ``spread_partitions``, but range-partitions its docs on the doc
+hash and materializes them on a background thread.
+
 The row multiset never changes; only the partitioning does. A caller
 must therefore consume the rows in an order-independent way: exact
 aggregates (integer counts, DECIMAL sums, extrema) or per-row work, never
@@ -71,16 +75,24 @@ def size_estimate(df: DataFrame) -> int | None:
     return size if 0 < size != sentinel else None
 
 
-def spread(df: DataFrame, bytes_per_task: int, sized_on: DataFrame | None = None) -> DataFrame:
-    """``df.repartition(target)`` when the input is known to be under-split
-    for its size, else ``df`` itself (module docstring). ``sized_on``: the
-    frame to read the estimate and the split count from, e.g. the scan
-    feeding a join, whose own estimate is a cardinality product."""
+def spread_partitions(df: DataFrame, bytes_per_task: int, sized_on: DataFrame | None = None) -> int | None:
+    """The partition count ``spread`` repartitions ``df`` to, or None when
+    the input is not known to be under-split for its size (module
+    docstring). ``sized_on``: the frame to read the estimate and the split
+    count from, e.g. the scan feeding a join, whose own estimate is a
+    cardinality product."""
     basis = df if sized_on is None else sized_on
     est = size_estimate(basis)
     if est is None:
-        return df
+        return None
     target = min(2 * df.sparkSession.sparkContext.defaultParallelism, est // bytes_per_task)
     if target < 2 or basis.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
+        return None
+    return target
+
+
+def spread(df: DataFrame, bytes_per_task: int, sized_on: DataFrame | None = None) -> DataFrame:
+    """``df.repartition(n)`` for ``n = spread_partitions(...)``, else ``df``
+    itself."""
+    n = spread_partitions(df, bytes_per_task, sized_on)
+    return df if n is None else df.repartition(n)

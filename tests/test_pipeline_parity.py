@@ -22,17 +22,37 @@ def _docs_df(spark, docs_rows):
     )
 
 
-@pytest.mark.parametrize("case", ["udf", "catalyst", "no_shared_path"])
-def test_pipeline_byte_identity(spark, docs_rows, golden, case, monkeypatch):
+def _docs_scan(spark, docs_rows, tmp_path):
+    """The fixture docs as a one-file parquet scan: a known size over one
+    split, so the flagship spreads it and runs the overlap checkpoint."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from post_ocr_corretion_spark.plans.parallelism import CPU_TASK_BYTES, spread_partitions
+
+    path = str(tmp_path / "docs.parquet")
+    rows = [{k: r[k] for k in ("doc_id", "text", "lang")} for r in docs_rows]
+    # uncompressed, so that 80 docs span more than two CPU_TASK_BYTES
+    pq.write_table(pa.Table.from_pylist(rows), path, compression="none")
+    docs = spark.read.parquet(path)
+    assert spread_partitions(docs, CPU_TASK_BYTES) is not None
+    return docs
+
+
+@pytest.mark.parametrize("case", ["udf", "catalyst", "no_shared_path", "file_scan"])
+def test_pipeline_byte_identity(spark, docs_rows, golden, case, monkeypatch, tmp_path):
     """``no_shared_path``: udf mode on a (faked) non-local master with no
-    shared sidecar location, so the scorer is the driver-side fit."""
+    shared sidecar location, so the scorer is the driver-side fit.
+    ``file_scan``: udf mode over an under-split parquet scan, the path
+    that spreads the docs and overlaps the shuffle with the lexicon job."""
     from post_ocr_corretion_spark.operators import scorer_fit
     from post_ocr_corretion_spark.pipeline import run_pipeline_from_docs
 
     if case == "no_shared_path":
         monkeypatch.setattr(scorer_fit, "resolve_sidecar_path", lambda *a, **k: None)
     mode = "catalyst" if case == "catalyst" else "udf"
-    df = run_pipeline_from_docs(spark, _docs_df(spark, docs_rows), mode=mode)
+    docs = _docs_scan(spark, docs_rows, tmp_path) if case == "file_scan" else _docs_df(spark, docs_rows)
+    df = run_pipeline_from_docs(spark, docs, mode=mode)
     rows = df.collect()
     assert len(rows) == len(golden)
     for r in rows:
@@ -166,7 +186,7 @@ def test_flagship_auto_bloom_switch(spark, docs_rows, monkeypatch):
     assert mismatches == [], mismatches
 
 
-def test_failed_scorer_build_leaves_no_overlap_job(spark, docs_rows, monkeypatch):
+def test_failed_scorer_build_leaves_no_overlap_job(spark, docs_rows, monkeypatch, tmp_path):
     """A lexicon build that raises while the overlap thread's checkpoint
     job runs must not orphan that job: it is cancelled before the
     exception reaches the caller."""
@@ -189,7 +209,8 @@ def test_failed_scorer_build_leaves_no_overlap_job(spark, docs_rows, monkeypatch
         raise RuntimeError("lexicon build failed")
 
     monkeypatch.setattr(pipeline, "build_lexicon", failing_build_lexicon)
-    docs = _docs_df(spark, docs_rows).mapInPandas(slow, "doc_id long, text string, lang string")
+    # over a file scan the frame keeps a known size, so the spread fires
+    docs = _docs_scan(spark, docs_rows, tmp_path).mapInPandas(slow, "doc_id long, text string, lang string")
     with pytest.raises(RuntimeError, match="lexicon build failed"):
         pipeline.run_pipeline_from_docs(spark, docs)
     # the job-end event reaches the status tracker through the listener

@@ -47,8 +47,8 @@ def test_textstats_prunes_to_consumed_columns(spark):
 
 
 def test_flagship_udf_mode_shape(spark):
-    """The throughput path is exactly ONE Python stage over the
-    pre-shuffled (checkpointed) docs and ZERO further exchanges
+    """The throughput path over an under-split scan is exactly ONE Python
+    stage over the pre-shuffled (checkpointed) docs and ZERO further exchanges
     (r9: render+extract+correct fused into a single mapInPandas; the
     doc-spreading shuffle is materialized CONCURRENTLY with the
     lexicon/scorer job by the overlap thread, so the final plan reads
@@ -64,31 +64,6 @@ def test_flagship_udf_mode_shape(spark):
     assert len(re.findall(r"^\(\d+\) MapInPandas", plan, re.M)) == 1
     assert len(re.findall(r"^\(\d+\) Exchange\b", plan, re.M)) == 0
     assert re.search(r"Scan ExistingRDD", plan)
-
-
-def test_range_spread_uses_range_partitioning_and_matches_hash(spark, docs_rows):
-    """North rule: repartitionByRange on the url/doc hash — the range
-    spread must show rangepartitioning in the plan and produce output
-    identical to the hash spread."""
-    from post_ocr_corretion_spark.pipeline import run_pipeline_from_docs
-    from post_ocr_corretion_spark.plans.audit import formatted_plan
-
-    docs = spark.createDataFrame(
-        [(r["doc_id"], r["text"], r["lang"]) for r in docs_rows[:30]],
-        "doc_id long, text string, lang string",
-    )
-    # the spread shuffle is materialized by the overlap thread, so the
-    # final pipeline plan reads a checkpoint; pin the partitioning on
-    # the factored spread frame itself (exactly what the thread runs)
-    from post_ocr_corretion_spark.pipeline import _spread_docs
-
-    assert "rangepartitioning" in formatted_plan(_spread_docs(docs, "range", 8)).lower()
-    assert "rangepartitioning" not in formatted_plan(_spread_docs(docs, "hash", 8)).lower()
-    rng = run_pipeline_from_docs(spark, docs, spread="range")
-    cols = ["url", "extracted_text", "corrected_text"]
-    a = {r.url: r for r in rng.select(cols).collect()}
-    b = {r.url: r for r in run_pipeline_from_docs(spark, docs, spread="hash").select(cols).collect()}
-    assert a == b
 
 
 def test_no_row_wise_python_in_any_registry_query(spark):
@@ -401,6 +376,7 @@ def test_spread_leaves_frames_of_unknown_size_alone(spark):
     """A 1-split frame with a non-file leaf reports the
     ``spark.sql.defaultSizeInBytes`` sentinel as its size; spreading on
     it would round-robin its whole payload on a guess."""
+    from post_ocr_corretion_spark.pipeline import run_pipeline_from_docs
     from post_ocr_corretion_spark.plans.parallelism import CPU_TASK_BYTES, size_estimate, spread
 
     rows = [(i, "word " * 200) for i in range(400)]
@@ -414,6 +390,14 @@ def test_spread_leaves_frames_of_unknown_size_alone(spark):
         assert df.rdd.getNumPartitions() == 1, name
         assert size_estimate(df) is None, name
         assert count_exchanges(spread(df, CPU_TASK_BYTES)) == 0, name
+    # the flagship neither shuffles nor checkpoints such a frame: its one
+    # Python stage runs over the input's own single partition
+    docs = spark.createDataFrame(
+        [(i, t, "en") for i, t in rows], "doc_id long, text string, lang string"
+    ).coalesce(1)
+    flagship = run_pipeline_from_docs(spark, docs)
+    assert count_exchanges(flagship) == 0
+    assert flagship.rdd.getNumPartitions() == 1
 
 
 def test_spread_splits_an_under_split_file_scan(spark):
@@ -436,7 +420,8 @@ def test_spread_splits_an_under_split_file_scan(spark):
 
 def test_multi_split_corpus_is_never_spread(spark, tmp_path):
     """A corpus that already has 2×cores splits gets no spread exchange,
-    on the token, n-gram and pair-metric paths alike.
+    on the token, n-gram and pair-metric paths alike, and the flagship
+    neither shuffles nor checkpoints it.
 
     Spark sizes file splits at min(128 MB, total / defaultParallelism),
     so any corpus under cores × 128 MB reads as about 1×cores splits,
@@ -444,6 +429,7 @@ def test_multi_split_corpus_is_never_spread(spark, tmp_path):
     file here, as a corpus above that size gets one per 128 MB."""
     from post_ocr_corretion_spark.datagen.wordlist import COMMON_WORDS
     from post_ocr_corretion_spark.operators.lexicon import build_lexicon
+    from post_ocr_corretion_spark.pipeline import run_pipeline
 
     n = 2 * spark.sparkContext.defaultParallelism
     spark.read.parquet(f"{SF}/documents.parquet").repartition(n).write.parquet(
@@ -460,5 +446,8 @@ def test_multi_split_corpus_is_never_spread(spark, tmp_path):
         }
         for name, df in frames.items():
             assert "RoundRobinPartitioning" not in formatted_plan(df), name
+        flagship = run_pipeline(spark, str(tmp_path))
+        assert count_exchanges(flagship) == 0
+        assert "Scan ExistingRDD" not in formatted_plan(flagship)
     finally:
         spark.conf.unset("spark.sql.files.minPartitionNum")
