@@ -36,7 +36,7 @@ Beam width and candidate count come from evolutionary_argument.json
 """
 from __future__ import annotations
 
-from .candidates import get_alternative_word
+from .candidates import DeletionIndex, get_alternative_word
 from .scoring import NGramScorer
 from .textops import add_last_punctuation, sentence_words
 
@@ -111,19 +111,23 @@ def candidate_batch(
     scorer: NGramScorer,
     lexicon: frozenset[str] | set[str],
     max_distance: int = 1,
-    delidx: dict | None = None,
+    delidx: DeletionIndex | None = None,
+    prob_fn=None,
 ) -> list[tuple[str, float, float]]:
     """The pinned, ordered candidate batch for one error word (original
     case, as it appears in the sentence): sorted (word, score) pairs from
     ``get_alternative_word(err_word.lower())``, each with its own word
     prob, then +punct variants in the same order.  ``delidx`` (optional,
     from candidates.build_deletion_index) swaps the membership-probe
-    candidate search for index lookups — identical results, tested."""
+    candidate search for index lookups — identical results, tested.
+    ``prob_fn`` overrides ``scorer.word_prob`` as in ``correct_sentence``
+    (the Spark UDF path injects its memoized one)."""
+    prob_fn = prob_fn or scorer.word_prob
     base = sorted(get_alternative_word(err_word.lower(), lexicon, max_distance, delidx=delidx))
-    batch = [(w, s, scorer.word_prob(w)) for w, s in base]
+    batch = [(w, s, prob_fn(w)) for w, s in base]
     punct = add_last_punctuation(err_word)
     if punct:
-        batch += [(w + punct, s, scorer.word_prob(w + punct)) for w, s in base]
+        batch += [(w + punct, s, prob_fn(w + punct)) for w, s in base]
     return batch
 
 
@@ -150,7 +154,7 @@ def correct_sentence(
     replacement, and the final answer is max-by-score with FIRST-in-list
     tie-break (the reference's ``max``), not text-asc."""
     prob_fn = prob_fn or scorer.word_prob
-    cand_fn = cand_fn or (lambda w: candidate_batch(w, scorer, lexicon, max_distance))
+    cand_fn = cand_fn or (lambda w: candidate_batch(w, scorer, lexicon, max_distance, prob_fn=prob_fn))
     words = sentence_words(text)
     n = len(words)
     if n == 0:

@@ -28,6 +28,10 @@ matched; results dedup on the (word, score) pair.
 """
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import numpy as np
+
 from .textops import remove_punctuation
 
 WORDCHAR = "abcdefghijklmnopqrstuvwxyz0123456789_"
@@ -61,42 +65,119 @@ def distance1_matches(w: str, lexicon: frozenset[str] | set[str]) -> set[tuple[s
     return out
 
 
-def build_deletion_index(lexicon) -> dict[str, list[tuple[int, str, str]]]:
-    """SymSpell-style deletion index over the lexicon: delkey → list of
-    (deleted_pos, word, deleted_char).  The executor-local analog of
-    operators/lexicon.deletion_neighborhood — ONE pass over the vocabulary
-    replaces the per-error-word O(len·|WORDCHAR|) membership probing of
-    ``distance1_matches`` with O(len) dict lookups (5× measured on the
-    flagship hot path).  Memory is Σ len(w) entries (vocabulary-bounded;
+class DeletionIndex(NamedTuple):
+    """SymSpell-style deletion index: one entry per (word, deleted
+    position), sorted by the hash of the deletion key."""
+
+    keys: np.ndarray  # uint64, sorted: hash of v[:j] + v[j + 1:]
+    rows: np.ndarray  # int32: v's row in ``words``
+    pos: np.ndarray  # int32: j
+    words: list[str]
+
+
+# The key hash is hash(s) = Σ_t ord(s[t])·P^(t+1) mod 2^64.
+_P = 0x9E3779B97F4A7C15
+_MASK = (1 << 64) - 1
+
+
+def _deletion_hashes(cps: np.ndarray) -> np.ndarray:
+    """hash(v[:j] + v[j + 1:]) at [r, j] for m words of one length n,
+    given as an m×n code-point matrix.  A deletion at j keeps the prefix's
+    powers and shifts the suffix's down by one, so every column comes from
+    one prefix and one suffix cumsum (uint64 arithmetic wraps mod 2^64)."""
+    n = cps.shape[1]
+    pw = [1]
+    for _ in range(n):
+        pw.append(pw[-1] * _P & _MASK)
+    pw = np.array(pw, dtype=np.uint64)
+    c = cps.astype(np.uint64)
+    kept = c * pw[1:]  # c_t·P^(t+1)
+    head = np.cumsum(kept, axis=1) - kept  # Σ_{t<j}
+    shifted = c * pw[:-1]  # c_t·P^t
+    tail = shifted.sum(axis=1, keepdims=True) - np.cumsum(shifted, axis=1)  # Σ_{t>j}
+    return head + tail
+
+
+def _probe_hashes(w: str) -> list[int]:
+    """hash(w[:j] + w[j + 1:]) for j < len(w), then hash(w): the same
+    sums as ``_deletion_hashes`` in one O(len) pass over Python integers,
+    which beat numpy's per-call cost on a single short word."""
+    head = [0]  # head[j] = Σ_{t<j} c_t·P^(t+1), reduced at the end
+    shifted = []  # c_t·P^t
+    p = 1
+    h = 0
+    for ch in w:
+        c = ord(ch)
+        shifted.append(c * p)
+        p = p * _P & _MASK
+        h += c * p
+        head.append(h)
+    tail = 0  # Σ_{t>j} c_t·P^t
+    for j in range(len(w) - 1, -1, -1):
+        head[j] = (head[j] + tail) & _MASK
+        tail += shifted[j]
+    head[-1] &= _MASK
+    return head
+
+
+def build_deletion_index(lexicon) -> DeletionIndex:
+    """SymSpell-style deletion index over the lexicon: the key v[:j] +
+    v[j + 1:] of every word v and position j, stored as three numpy
+    arrays sorted by key hash (hash, word row, j) beside the word list —
+    16 bytes an entry.  The executor-local analog of
+    operators/lexicon.deletion_neighborhood, hashed vectorized one
+    word-length bucket at a time: candidate generation becomes O(len)
+    hash probes instead of the O(len·|WORDCHAR|) membership probing of
+    ``distance1_matches``.  Memory is Σ len(w) entries (vocabulary-bounded;
     at 10^8+ vocabularies use the Catalyst equi-join mode instead)."""
-    idx: dict[str, list[tuple[int, str, str]]] = {}
-    for v in lexicon:
-        for j in range(len(v)):
-            idx.setdefault(v[:j] + v[j + 1 :], []).append((j, v, v[j]))
-    return idx
+    words = list(lexicon)
+    lens = np.fromiter(map(len, words), dtype=np.int64, count=len(words))
+    cps = np.frombuffer("".join(words).encode("utf-32-le", "surrogatepass"), dtype=np.uint32)
+    starts = np.cumsum(lens) - lens
+    by_len = np.argsort(lens, kind="stable")
+    sorted_lens = lens[by_len]
+    keys = [np.empty(0, dtype=np.uint64)]
+    rows = [np.empty(0, dtype=np.int32)]
+    pos = [np.empty(0, dtype=np.int32)]
+    for n in np.unique(sorted_lens[sorted_lens > 0]).tolist():
+        r = by_len[np.searchsorted(sorted_lens, n) : np.searchsorted(sorted_lens, n, "right")]
+        keys.append(_deletion_hashes(cps[starts[r][:, None] + np.arange(n)]).ravel())
+        rows.append(np.repeat(r.astype(np.int32), n))
+        pos.append(np.tile(np.arange(n, dtype=np.int32), len(r)))
+    keys = np.concatenate(keys)
+    order = np.argsort(keys)
+    return DeletionIndex(keys[order], np.concatenate(rows)[order], np.concatenate(pos)[order], words)
 
 
-def distance1_matches_indexed(
-    w: str, lexicon, idx: dict[str, list[tuple[int, str, str]]]
-) -> set[tuple[str, float]]:
+def distance1_matches_indexed(w: str, lexicon, idx: DeletionIndex) -> set[tuple[str, float]]:
     """``distance1_matches`` computed against a prebuilt deletion index —
     identical result set (tested for equality against both the direct
-    formulation and the brute force)."""
+    formulation and the brute force).  The n + 1 probes — w minus each
+    position, then w itself — are hashed and looked up in one
+    searchsorted, and a hit counts only when its word minus its position
+    IS the probe, so a hash collision never changes the set."""
     out: set[tuple[str, float]] = set()
     n = len(w)
-    for i in range(n):
-        d = w[:i] + w[i + 1 :]
-        for j, v, ch in idx.get(d, ()):
-            # v = w with position i replaced by ch (== substitution at i)
-            if j == i and ch in WORDCHAR_SET:
-                out.add((v, P_SUB))
+    probes = [w[:i] + w[i + 1 :] for i in range(n)]
+    for d in probes:
         if d and d in lexicon:
-            out.add((d, P_DEL))
-    # insertion before i (i = 0..n-1, never at the end): deleting v[j]
-    # yields w with j ≤ n-1
-    for j, v, ch in idx.get(w, ()):
-        if j <= n - 1 and ch in WORDCHAR_SET:
-            out.add((v, P_INS))
+            out.add((d, P_DEL))  # deletion of i
+    probes.append(w)
+    keys, rows, pos, words = idx
+    end = len(keys)
+    hashes = _probe_hashes(w)
+    starts = keys.searchsorted(np.array(hashes, dtype=np.uint64)).tolist()
+    for i, (probe, h, k) in enumerate(zip(probes, hashes, starts)):
+        while k < end and keys.item(k) == h:
+            j = pos.item(k)
+            # i < n: v is w with position i replaced by v[j] (substitution
+            # at i); i == n: deleting v[j] yields w, an insertion before
+            # j ≤ n - 1 (never at the end)
+            if j == i if i < n else j < n:
+                v = words[rows.item(k)]
+                if v[j] in WORDCHAR_SET and v[:j] + v[j + 1 :] == probe:
+                    out.add((v, P_SUB if i < n else P_INS))
+            k += 1
     return out
 
 
@@ -123,7 +204,7 @@ def get_alternative_word(
     lexicon: frozenset[str] | set[str],
     max_distance: int = 1,
     words_for_generation: int = 15,
-    delidx: dict[str, list[tuple[int, str, str]]] | None = None,
+    delidx: DeletionIndex | None = None,
 ) -> set[tuple[str, float]]:
     """correctionSentences.py:265-275 with the pinned decisions.
     ``word`` arrives lowercased (caller mirrors :261).

@@ -17,8 +17,10 @@ deterministic semantics shared by the oracle and the Spark pandas UDFs:
 - ``sentence_score(words)``: mean word prob (A8, BERTEvaluator.py:28-31).
 - ``wrong_indexes(words)``: positions with p < 0.5 (M2).
 
-Scale note: on a cluster the scorer state is one (V+1)² float32 matrix plus
-the lexicon hash set, broadcast once per executor (SURVEY.md §4 item 3); at
+Scale note: on a cluster the scorer state is one V×V (41×41) float64
+log-prob matrix plus the lexicon hash set, broadcast once per executor
+(SURVEY.md §4 item 3).  The local fit counts every word's bigrams in one
+vectorized numpy pass (``_bigram_counts``), not a Python loop per word; at
 10^12-document scale the membership set is replaced by a Bloom filter with
 the same pinned semantics modulo a documented false-positive rate.
 """
@@ -41,9 +43,27 @@ TAU = -4.0
 K = 1.5
 
 
+# code point → index for ASCII; every code point ≥ 128 maps to 0 (OTHER)
+_ASCII_INDEX = np.array([_CHAR_INDEX.get(chr(c), 0) for c in range(128)], dtype=np.int64)
+
+
 def _encode(word: str) -> np.ndarray:
-    idx = np.fromiter((_CHAR_INDEX.get(c, 0) for c in word), dtype=np.int64, count=len(word))
-    return np.concatenate(([1], idx, [1]))  # boundary-padded
+    get = _CHAR_INDEX.get
+    return np.array([1, *[get(c, 0) for c in word], 1], dtype=np.int64)  # boundary-padded
+
+
+def _bigram_counts(words) -> np.ndarray:
+    """V×V bigram counts of the boundary-padded words, in one pass: the
+    same pairs as ``_encode`` per word.  The words are laid end to end
+    with ONE boundary between neighbours — ``1 w0 1 w1 1 … 1`` — so each
+    adjacent pair belongs to exactly one word's padded window (an empty
+    word contributes its (1, 1) pair, an empty lexicon no pair)."""
+    words = list(words)
+    lens = np.fromiter(map(len, words), dtype=np.int64, count=len(words))
+    cps = np.frombuffer("".join(words).encode("utf-32-le", "surrogatepass"), dtype=np.uint32)
+    idx = np.where(cps < 128, _ASCII_INDEX[cps & 127], 0)
+    seq = np.insert(idx, np.concatenate(([0], np.cumsum(lens))), 1)  # a 1 before each word and at the end
+    return np.bincount(seq[:-1] * V + seq[1:], minlength=V * V).reshape(V, V)
 
 
 class NGramScorer:
@@ -64,10 +84,7 @@ class NGramScorer:
             raise ValueError("membership injection requires an explicit counts matrix (operators/scorer_fit.py)")
         self.lexicon = membership if membership is not None else frozenset(lexicon)
         if counts is None:
-            counts = np.ones((V, V), dtype=np.float64)  # add-one smoothing
-            for w in lexicon:
-                e = _encode(w)
-                np.add.at(counts, (e[:-1], e[1:]), 1.0)
+            counts = np.ones((V, V), dtype=np.float64) + _bigram_counts(lexicon)  # add-one smoothing
         self.log_prob = np.log(counts / counts.sum(axis=1, keepdims=True))
 
     def _mean_lp(self, word: str) -> float:

@@ -223,11 +223,14 @@ def _worker_fns(scorer, lexicon, max_distance: int):
     object ids are stable keys).  Round-1 kept these caches per task, so
     every task re-scored the same vocabulary and re-probed candidates from
     scratch; hoisting them to module level plus the SymSpell deletion index
-    (core/candidates.build_deletion_index) makes candidate generation and
-    word scoring a once-per-worker cost — 2.3× single-core on the flagship
-    hot path, bit-identical results (the cached values are exactly what the
-    per-task code computed).  Only the current (scorer, lexicon) pair is
-    kept: a new pipeline run frees the previous run's memo and index."""
+    (core/candidates.build_deletion_index: three sorted numpy arrays keyed
+    by deletion-key hash, built vectorized on the first candidate miss)
+    makes candidate generation and word scoring a once-per-worker cost —
+    2.3× single-core on the flagship hot path, bit-identical results (the
+    cached values are exactly what the per-task code computed; candidate
+    batches score through the same prob memo).  Only the current (scorer,
+    lexicon) pair is kept: a new pipeline run frees the previous run's memo
+    and index."""
     return _WORKER_STATE.get(
         (id(scorer), id(lexicon), max_distance), lambda: _memo_fns(scorer, lexicon, max_distance)
     )
@@ -272,7 +275,7 @@ def _memo_fns(scorer, lexicon, max_distance: int):
             if len(cand_cache) >= CAND_CAP:
                 cand_cache.clear()
             batch = candidate_batch(
-                w, scorer, lexicon, max_distance, delidx=delidx_box[0] or None
+                w, scorer, lexicon, max_distance, delidx=delidx_box[0] or None, prob_fn=prob_fn
             )
             cand_cache[w] = batch
         return batch

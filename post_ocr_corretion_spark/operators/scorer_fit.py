@@ -380,8 +380,9 @@ class SidecarScorer:
     ONCE from the parquet sidecar word set — the driver never materializes
     the lexicon or the fit.  Bit-identical to the driver fit everywhere:
     the bigram counts are integer sums (exact in float64 regardless of
-    iteration order), so every worker derives the same matrix.  Per-worker
-    fit cost is O(vocab); above AUTO_BLOOM_VOCAB_THRESHOLD words
+    iteration order), so every worker derives the same matrix.  The
+    per-worker fit is one vectorized numpy pass over the word set (its
+    cost is the sidecar read); above AUTO_BLOOM_VOCAB_THRESHOLD words
     ``build_scorer_broadcast`` switches to ``scorer_from_spark``
     (Spark-aggregated counts + Bloom membership) instead."""
 

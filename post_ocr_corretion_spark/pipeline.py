@@ -21,8 +21,11 @@ Non-``en`` pages and stubbed real-PDF pages pass through deterministically
 
 Scale notes (SURVEY.md §4): the scorer is built by
 operators/scorer_fit.build_scorer_broadcast. The lexicon rides a parquet
-sidecar and each Python worker fits the bigram model from it once — the
-driver never materializes the word list. Above AUTO_BLOOM_VOCAB_THRESHOLD
+sidecar and each Python worker fits the bigram model from it once, in one
+vectorized numpy pass — the driver never materializes the word list. The
+worker's SymSpell deletion index is three sorted numpy arrays keyed by
+deletion-key hash (16 bytes per (word, position)), also built vectorized.
+Above AUTO_BLOOM_VOCAB_THRESHOLD
 words the bigram counts come from a Spark aggregation (bit-identical to
 the local fit) and membership is a Bloom filter (documented fpp trade).
 Candidate generation runs on DISTINCT error words (vocabulary-bounded),

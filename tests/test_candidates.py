@@ -131,3 +131,19 @@ def test_indexed_matches_equal_direct(fixture_lexicon):
         assert get_alternative_word(w, fixture_lexicon, delidx=idx) == get_alternative_word(
             w, fixture_lexicon
         ), w
+
+
+def test_colliding_hashes_leave_candidate_sets_unchanged(monkeypatch, fixture_lexicon):
+    """With the hash multiplier at 0 every deletion key and every probe
+    hashes to 0, so each probe hits every index entry: the candidate sets
+    stay exact only because a hit is verified against the probe string."""
+    from post_ocr_corretion_spark.core import candidates
+
+    monkeypatch.setattr(candidates, "_P", 0)
+    lexicon = frozenset(sorted(fixture_lexicon)[:200]) | {"a", "ab", "abc", "naïve", "x|y", "ken", "kens"}
+    idx = candidates.build_deletion_index(lexicon)
+    assert len(idx.keys) == sum(map(len, lexicon)) and not idx.keys.any()
+    probes = [w.lower() for w in ERR_WORDS] + ["naive", "naïv", "xy", "b", "abd"] + sorted(lexicon)[:60]
+    for w in probes:
+        assert candidates._probe_hashes(w) == [0] * (len(w) + 1)
+        assert candidates.distance1_matches_indexed(w, lexicon, idx) == distance1_matches(w, lexicon), w

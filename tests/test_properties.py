@@ -11,6 +11,10 @@ from hypothesis import strategies as st
 
 WORD = st.text(alphabet="abcdefgh012_'-.", min_size=0, max_size=7)
 LEX_WORD = st.text(alphabet="abcdefgh012_", min_size=1, max_size=6)
+# mostly a small alphabet so that words collide, plus any code point:
+# non-ASCII, upper case, space and punctuation outside WORDCHAR
+ANY_CHAR = st.one_of(st.sampled_from("abcdefgh012_'-. éΩ"), st.characters())
+WIDE_WORD = st.text(alphabet=ANY_CHAR, min_size=0, max_size=20)
 
 
 def _dp_levenshtein_indel(a: str, b: str) -> int:
@@ -44,17 +48,49 @@ def test_indel_ratio_matches_independent_dp(a, b):
         assert got == 1.0
 
 
+def _loop_bigram_log_prob(words) -> np.ndarray:
+    """The per-word ``np.add.at`` fit that ``NGramScorer`` replaced."""
+    from post_ocr_corretion_spark.core.scoring import V, _encode
+
+    counts = np.ones((V, V), dtype=np.float64)
+    for w in words:
+        e = _encode(w)
+        np.add.at(counts, (e[:-1], e[1:]), 1.0)
+    return np.log(counts / counts.sum(axis=1, keepdims=True))
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(st.one_of(WIDE_WORD, st.just("")), min_size=0, max_size=40))
+def test_bigram_fit_equals_per_word_loop(words):
+    """The one-pass fit is bit-identical to the per-word loop, on empty
+    words, words with spaces, non-ASCII and punctuation, duplicates (a
+    list is counted as given) and the empty lexicon."""
+    from post_ocr_corretion_spark.core.scoring import NGramScorer
+
+    assert np.array_equal(NGramScorer(words).log_prob, _loop_bigram_log_prob(words))
+    lexicon = frozenset(words)
+    assert np.array_equal(NGramScorer(lexicon).log_prob, _loop_bigram_log_prob(lexicon))
+
+
 @settings(max_examples=100, deadline=None)
-@given(WORD, st.frozensets(LEX_WORD, min_size=0, max_size=40))
-def test_deletion_index_equals_direct_probing(word, lexicon):
+@given(
+    st.one_of(WORD, WIDE_WORD),
+    st.frozensets(st.one_of(LEX_WORD, WIDE_WORD), min_size=0, max_size=40),
+    st.data(),
+)
+def test_deletion_index_equals_direct_probing(word, lexicon, data):
     from post_ocr_corretion_spark.core.candidates import (
         build_deletion_index,
         distance1_matches,
         distance1_matches_indexed,
         get_alternative_word,
+        one_op_strings,
     )
 
     w = word.lower()
+    if w:  # plant some of w's one-op neighbours so that probes hit
+        near = sorted(t for t, _ in one_op_strings(w))
+        lexicon |= data.draw(st.frozensets(st.sampled_from(near), max_size=8))
     idx = build_deletion_index(lexicon)
     if w:
         assert distance1_matches_indexed(w, lexicon, idx) == distance1_matches(w, lexicon)
