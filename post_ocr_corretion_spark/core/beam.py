@@ -6,11 +6,11 @@ Single-document reference semantics, pinned per SURVEY.md §7.0:
   (correctionSentences.py:256-263) and processed in position order;
 - the roulette-wheel selections (correctionSentences.py:296-330, seeded
   ``random.random``) are replaced by deterministic top-k with the stable
-  tie-break (score desc, then space-joined text asc) — §7.0.2.  Because
-  words contain no spaces and ' ' sorts below every word char, the joined
-  string order equals word-tuple order, and Spark's UTF8-binary string
-  comparison agrees with Python's code-point comparison — the tie-break is
-  identical on both sides;
+  tie-break (score desc, then space-joined text asc) — §7.0.2, identical
+  under Spark's UTF8-binary and Python's code-point comparison.  Text
+  order is the order of ``word + joiner`` tuples (joiner ' ', or '' for
+  the last word), NOT of word tuples: ``str.split()`` keeps control
+  characters below ' ', so ``"a\x01 b" < "a b"`` but ``"a\x01" > "a"``;
 - per old beam sentence, every candidate substitution is scored as
   normalized-candidate-score + normalized-sentence-score
   (compute_sentence_score, correctionSentences.py:235-242), and the top
@@ -31,6 +31,13 @@ then variants in the same order).  The Spark side evaluates the very same
 expressions in the same order (F.aggregate is a left fold), so doubles are
 bit-identical, not merely close.
 
+OVERLAY INVARIANT: a survivor is ``(psum, tie, subs)``: ``subs`` holds
+the words it chose at the errors processed so far, ``tie`` the same words
+with their joiners; every other word is the original.  Errors are
+distinct positions taken in increasing order, so ``p_old`` is always the
+original ``probs[idx]``, and comparing ``tie`` tuples is comparing texts.
+Only the winner is expanded back into a word list.
+
 Beam width and candidate count come from evolutionary_argument.json
 (sentences_for_generation=3, words_for_generation=15).
 """
@@ -44,18 +51,8 @@ BEAM_WIDTH = 3
 WORDS_FOR_GENERATION = 15
 
 
-class _Entry:
-    __slots__ = ("words", "probs", "psum", "text")
-
-    def __init__(self, words: list[str], probs: list[float], psum: float):
-        self.words = words
-        self.probs = probs
-        self.psum = psum
-        self.text = " ".join(words)
-
-
-def _prune(entries: list[_Entry], n: int, k: int) -> list[_Entry]:
-    return sorted(entries, key=lambda b: (-(b.psum / n), b.text))[:k]
+def _prune(beams: list[tuple], n: int, k: int) -> list[tuple]:
+    return sorted(beams, key=lambda b: (-(b[0] / n), b[1]))[:k]
 
 
 def roulette_select(items: list, k: int, eval_fn, rng) -> list:
@@ -165,50 +162,49 @@ def correct_sentence(
         psum += p
     errors = [(i, words[i]) for i in range(n) if probs[i] < 0.5]
 
-    beams = [_Entry(words, probs, psum)]
+    beams: list[tuple] = [(psum, (), ())]
     for idx, err_word in errors:
         batch = cand_fn(err_word)
         w_total = 0.0
         for _, s, _ in batch:
             w_total += s
         if rng is not None:
-            pruned = roulette_select(beams, beam_width, lambda b: b.psum / n, rng)
+            # draw indices, so equal survivors stay distinct items
+            picks = roulette_select(range(len(beams)), beam_width, lambda i: beams[i][0] / n, rng)
+            pruned = [beams[i] for i in picks]
         else:
             pruned = _prune(beams, n, beam_width)
-        # Within one batch every candidate sentence shares the prefix and
-        # suffix around idx, so full-text tie-break order equals comparing
-        # cand_word + joiner (words contain no chars ≤ ' ', guaranteed by
-        # str.split()) — entries are materialized only for the survivors.
+        # within one batch every candidate sentence shares the text around
+        # idx, so its tie-break is cand_word + joiner
         sep = " " if idx < n - 1 else ""
-        new_beams: list[_Entry] = []
-        for b in pruned:
-            p_old = b.probs[idx]
-            psums = [(b.psum - p_old) + cp for _, _, cp in batch]
+        ties = [cw + sep for cw, _, _ in batch]
+        p_old = probs[idx]
+        new_beams: list[tuple] = []
+        for psum, tie, subs in pruned:
+            psums = [(psum - p_old) + cp for _, _, cp in batch]
             s_total = 0.0
             for ps in psums:
                 s_total += ps / n
             scored = [
-                (-(cs / w_total + (ps / n) / s_total), cw + sep, cw, cp, ps)
-                for (cw, cs, cp), ps in zip(batch, psums)
+                (-(cs / w_total + (ps / n) / s_total), t, cw, ps)
+                for (cw, cs, _), t, ps in zip(batch, ties, psums)
             ]
             if rng is not None:
                 # reference selected_sentences (:230-233): roulette over the
                 # candidate batch, weighted by the total score
-                top = roulette_select(scored, beam_width, lambda t: -t[0], rng)
+                top = roulette_select(scored, beam_width, lambda c: -c[0], rng)
             else:
-                scored.sort(key=lambda t: (t[0], t[1]))
+                scored.sort()  # equal (score, tie) ⇒ equal tuples
                 top = scored[:beam_width]
-            for _, _, cw, cp, ps in top:
-                new_beams.append(
-                    _Entry(
-                        b.words[:idx] + [cw] + b.words[idx + 1 :],
-                        b.probs[:idx] + [cp] + b.probs[idx + 1 :],
-                        ps,
-                    )
-                )
+            for _, t, cw, ps in top:
+                new_beams.append((ps, tie + (t,), subs + (cw,)))
         beams = new_beams
     if rng is not None:
         # reference get_best_sentence (:293-294): max by score, ties go to
         # the FIRST in list order
-        return max(beams, key=lambda b: b.psum / n).words
-    return _prune(beams, n, 1)[0].words
+        best = max(beams, key=lambda b: b[0] / n)
+    else:
+        best = _prune(beams, n, 1)[0]
+    for (idx, _), cw in zip(errors, best[2]):
+        words[idx] = cw
+    return words

@@ -25,6 +25,10 @@ pdfminer-style reading-order recovery.  REAL ``%PDF`` bytes are a stub:
 pdfminer is not available in this environment (``extract_document``
 returns empty text and flags ``pdf_stub``) — clearly-marked stub per the
 round-1 brief.
+
+A null ``html`` (a fetch with no body) is an empty page:
+operators/extract.extract_row extracts ``b""`` → ``("", [], "html")``,
+``html_bytes`` 0.
 """
 from __future__ import annotations
 

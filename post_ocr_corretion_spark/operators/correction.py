@@ -152,15 +152,15 @@ def run_beam_fold(
         # (see core/beam.py) — entries are materialized only for the
         # beam_width survivors, keeping the step expression small
         sep = F.when(pos < F.col("n") - 1, F.lit(" ")).otherwise(F.lit(""))
+        # no earlier step wrote pos (the overlay invariant of core/beam.py)
+        p_old = F.element_at(F.col("probs"), pos + 1)
 
         def expand(b):
-            p_old = F.element_at(b["probs"], pos + 1)
             with_psum = F.transform(
                 cands,
                 lambda c: F.struct(
                     c["word"].alias("word"),
                     c["score"].alias("score"),
-                    c["p"].alias("p"),
                     (b["psum"] - p_old + c["p"]).alias("psum2"),
                 ),
             )
@@ -171,7 +171,6 @@ def run_beam_fold(
                     (x["score"] / w_total + (x["psum2"] / n) / s_total).alias("total"),
                     F.concat(x["word"], sep).alias("tie"),
                     x["word"].alias("word"),
-                    x["p"].alias("p"),
                     x["psum2"].alias("psum2"),
                 ),
             )
@@ -191,18 +190,13 @@ def run_beam_fold(
                         F.array(t["word"]),
                         F.slice(b["words"], pos + 2, F.col("n") - pos - 1),
                     ).alias("words"),
-                    F.concat(
-                        F.slice(b["probs"], 1, pos),
-                        F.array(t["p"]),
-                        F.slice(b["probs"], pos + 2, F.col("n") - pos - 1),
-                    ).alias("probs"),
                     t["psum2"].alias("psum"),
                 ),
             )
 
         return F.when(cands.isNull(), beams).otherwise(F.flatten(F.transform(pruned, expand)))
 
-    init = F.array(F.struct(F.col("words"), F.col("probs"), F.col("psum")))
+    init = F.array(F.struct(F.col("words"), F.col("psum")))
     final = F.aggregate(F.coalesce(F.col("ecands"), F.array().cast(_ECANDS_TYPE)), init, step)
     best = F.element_at(
         F.array_sort(

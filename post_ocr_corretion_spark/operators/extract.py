@@ -46,8 +46,10 @@ EXTRACT_SCHEMA = T.StructType(
 )
 
 
-def extract_row(url, warc_ts, lang, doc_id, html: bytes) -> tuple:
-    """One page → one EXTRACT_SCHEMA row, as a tuple in field order."""
+def extract_row(url, warc_ts, lang, doc_id, html: bytes | None) -> tuple:
+    """One page → one EXTRACT_SCHEMA row, as a tuple in field order.  A
+    null ``html`` is an empty page (see core/extraction.py)."""
+    html = html or b""
     text, sp, kind = extract_document(html)
     return (url, warc_ts, lang, doc_id, kind, text, [{"start": s, "end": e} for s, e in sp], len(html))
 
@@ -75,7 +77,7 @@ def extract(pages: DataFrame) -> DataFrame:
         for pdf in batches:
             ids = pdf["doc_id"] if "doc_id" in pdf.columns else [None] * len(pdf)
             rows = [
-                extract_row(u, ts, lg, i, bytes(h))
+                extract_row(u, ts, lg, i, None if h is None else bytes(h))
                 for u, ts, lg, i, h in zip(pdf["url"], pdf["warc_ts"], pdf["lang"], ids, pdf["html"])
             ]
             yield columnar(rows, EXTRACT_SCHEMA)

@@ -121,3 +121,24 @@ def test_pinned_mode_extraction_golden_checksum(docs_rows):
     # authoritative /Length slicing — 75 html + 3 pdf_real + 2 pdf_fake,
     # zero stubs
     assert h.hexdigest() == "8f4e327d96bb5734c3fc82b7477d0c25"
+
+
+def test_null_html_is_an_empty_page(spark):
+    """A null ``html`` beside a normal page: the null row extracts as an
+    empty html page instead of failing the task."""
+    from datetime import datetime
+
+    from post_ocr_corretion_spark.operators.extract import extract
+
+    ts = datetime(2024, 1, 1)
+    pages = spark.createDataFrame(
+        [("https://a/1", ts, "en", HTML), ("https://a/2", ts, "en", None)],
+        "url string, warc_ts timestamp, lang string, html binary",
+    )
+    rows = {r.url: r for r in extract(pages).collect()}
+    text, spans, kind = extract_document(HTML)
+    ok = rows["https://a/1"]
+    assert (ok.kind, ok.extracted_text, ok.html_bytes) == (kind, text, len(HTML))
+    assert [(s.start, s.end) for s in ok.spans] == spans
+    empty = rows["https://a/2"]
+    assert (empty.kind, empty.extracted_text, list(empty.spans), empty.html_bytes) == ("html", "", [], 0)

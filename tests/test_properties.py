@@ -168,6 +168,121 @@ def test_roulette_invariants(weights, k, seed):
     assert all(x in items for x in out)
 
 
+def _copy_beam(text, prob_fn, cand_fn, beam_width=3, rng=None):
+    """The copy-based beam that the overlay survivors replaced: every
+    survivor holds its own words and probs lists and its joined text."""
+    from post_ocr_corretion_spark.core.beam import roulette_select
+
+    class Entry:
+        def __init__(self, words, probs, psum):
+            self.words, self.probs, self.psum = words, probs, psum
+            self.text = " ".join(words)
+
+    def prune(entries, k):
+        return sorted(entries, key=lambda b: (-(b.psum / n), b.text))[:k]
+
+    words = text.split()
+    n = len(words)
+    if n == 0:
+        return []
+    probs = [prob_fn(w) for w in words]
+    psum = 0.0
+    for p in probs:
+        psum += p
+    beams = [Entry(words, probs, psum)]
+    for idx in [i for i in range(n) if probs[i] < 0.5]:
+        batch = cand_fn(words[idx])
+        w_total = 0.0
+        for _, s, _ in batch:
+            w_total += s
+        if rng is not None:
+            pruned = roulette_select(beams, beam_width, lambda b: b.psum / n, rng)
+        else:
+            pruned = prune(beams, beam_width)
+        sep = " " if idx < n - 1 else ""
+        new_beams = []
+        for b in pruned:
+            psums = [(b.psum - b.probs[idx]) + cp for _, _, cp in batch]
+            s_total = 0.0
+            for ps in psums:
+                s_total += ps / n
+            scored = [
+                (-(cs / w_total + (ps / n) / s_total), cw + sep, cw, cp, ps)
+                for (cw, cs, cp), ps in zip(batch, psums)
+            ]
+            if rng is not None:
+                top = roulette_select(scored, beam_width, lambda t: -t[0], rng)
+            else:
+                scored.sort(key=lambda t: (t[0], t[1]))
+                top = scored[:beam_width]
+            for _, _, cw, cp, ps in top:
+                new_beams.append(
+                    Entry(
+                        b.words[:idx] + [cw] + b.words[idx + 1 :],
+                        b.probs[:idx] + [cp] + b.probs[idx + 1 :],
+                        ps,
+                    )
+                )
+        beams = new_beams
+    if rng is not None:
+        return max(beams, key=lambda b: b.psum / n).words
+    return prune(beams, 1)[0].words
+
+
+# words over a tiny alphabet, so that words are often prefixes of each
+# other, with "\x01" (kept by str.split, sorts below " ") and optional
+# trailing sentence punctuation
+BEAM_WORD = st.builds(
+    lambda w, p: w + p,
+    st.text(alphabet="ab\x01", min_size=1, max_size=3),
+    st.sampled_from(["", "", ".", ",", "!", "?", ";"]),
+)
+# few levels: in-lexicon probs tie often; three of five flag an error
+BEAM_PROB = st.sampled_from([0.125, 0.25, 0.375, 0.75, 1.0])
+
+
+@settings(max_examples=400, deadline=None)
+@given(
+    st.lists(BEAM_WORD, min_size=1, max_size=8),
+    st.lists(st.sampled_from([" ", " ", "\n", "  "]), min_size=8, max_size=8),
+    st.integers(min_value=0, max_value=2**32),
+    st.data(),
+)
+def test_overlay_beam_equals_copy_beam(words, gaps, seed, data):
+    """``correct_sentence`` keeps each survivor as (psum, tie, subs); the
+    copy-based beam kept full word and prob lists and joined texts.  Both
+    pick the same words in deterministic and seeded roulette mode, with
+    errors in any position (the last included), candidate batches that
+    repeat (word, score) pairs, tied probabilities and words that are
+    prefixes of each other or hold a control character."""
+    from post_ocr_corretion_spark.core.beam import correct_sentence
+
+    probs: dict[str, float] = {}
+    batches: dict[str, list] = {}
+
+    def prob_fn(w):
+        if w not in probs:
+            probs[w] = data.draw(BEAM_PROB)
+        return probs[w]
+
+    def cand_fn(w):
+        if w not in batches:
+            pairs = data.draw(
+                st.lists(st.tuples(BEAM_WORD, st.sampled_from([0.25, 0.5, 1.0])), min_size=1, max_size=6)
+            )
+            if data.draw(st.booleans()):
+                pairs += pairs[: data.draw(st.integers(1, len(pairs)))]  # repeated candidates
+            batches[w] = [(cw, s, prob_fn(cw)) for cw, s in pairs]
+        return batches[w]
+
+    text = "".join(g + w for g, w in zip(gaps, words))
+    want = _copy_beam(text, prob_fn, cand_fn)
+    assert correct_sentence(text, None, None, prob_fn=prob_fn, cand_fn=cand_fn) == want
+    want = _copy_beam(text, prob_fn, cand_fn, rng=random.Random(seed))
+    got = correct_sentence(text, None, None, prob_fn=prob_fn, cand_fn=cand_fn, rng=random.Random(seed))
+    assert got == want
+
+
 @settings(max_examples=60, deadline=None)
 @given(st.text(alphabet="abcde", max_size=20))
 def test_segmenter_decode_is_total_and_lossless(text):
