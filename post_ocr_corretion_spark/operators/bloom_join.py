@@ -26,7 +26,8 @@ no join to analyze.
 Size bound: the literal array holds m/64 longs; at fpp 1% that is ~1.2
 probe-words per key, so ~10^6 keys ≈ 1.2 MB of literal — fine for
 codegen. Beyond that, ship the filter as a broadcast variable probed by
-an Arrow-batched UDF (SidecarBloom), trading codegen for boundlessness.
+an Arrow-batched UDF (a SidecarBloom handle, which each worker unpickles
+to the BloomFilter), trading codegen for boundlessness.
 """
 from __future__ import annotations
 

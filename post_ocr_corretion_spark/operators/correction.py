@@ -211,26 +211,13 @@ def run_beam_fold(
 _WORKER_STATE = CurrentFit()
 
 
-def _worker_fns(scorer, lexicon, max_distance: int):
-    """Executor-local memoization that PERSISTS across tasks (the Python
-    worker process is reused; Spark caches broadcast values per worker, so
-    object ids are stable keys).  Round-1 kept these caches per task, so
-    every task re-scored the same vocabulary and re-probed candidates from
-    scratch; hoisting them to module level plus the SymSpell deletion index
-    (core/candidates.build_deletion_index: three sorted numpy arrays keyed
-    by deletion-key hash, built vectorized on the first candidate miss)
-    makes candidate generation and word scoring a once-per-worker cost —
-    2.3× single-core on the flagship hot path, bit-identical results (the
-    cached values are exactly what the per-task code computed; candidate
-    batches score through the same prob memo).  Only the current (scorer,
-    lexicon) pair is kept: a new pipeline run frees the previous run's memo
-    and index."""
-    return _WORKER_STATE.get(
-        (id(scorer), id(lexicon), max_distance), lambda: _memo_fns(scorer, lexicon, max_distance)
-    )
-
-
 def _memo_fns(scorer, lexicon, max_distance: int):
+    """The worker's memo for one (scorer, lexicon): word probabilities,
+    candidate batches and the SymSpell deletion index
+    (core/candidates.build_deletion_index, built vectorized on the first
+    candidate miss). It persists across tasks, so scoring and candidate
+    generation are once-per-worker costs (2.3× single-core on the
+    flagship hot path) with bit-identical results."""
     from ..core.beam import candidate_batch
     from ..core.candidates import build_deletion_index
 
@@ -274,7 +261,7 @@ def _memo_fns(scorer, lexicon, max_distance: int):
             cand_cache[w] = batch
         return batch
 
-    return prob_fn, cand_fn
+    return scorer, lexicon, prob_fn, cand_fn
 
 
 def _worker_corrector(scorer_bc, lexicon_bc, max_distance: int, roulette_seed: int | None):
@@ -284,11 +271,17 @@ def _worker_corrector(scorer_bc, lexicon_bc, max_distance: int, roulette_seed: i
     pass-through (split words).  ``roulette_seed`` flips W2 to the
     reference's seeded roulette-wheel selection; each document derives its
     rng from (seed, text), so the result is deterministic and independent
-    of partitioning."""
+    of partitioning.
+
+    The one memo is keyed on the broadcasts (one object per id in a
+    worker) and reads their ``.value`` only when it rebuilds, so a new run
+    frees the last run's memo and index before its model loads."""
     from ..core.beam import correct_sentence, roulette_rng
 
-    scorer, lexicon = scorer_bc.value, lexicon_bc.value
-    prob_fn, cand_fn = _worker_fns(scorer, lexicon, max_distance)
+    scorer, lexicon, prob_fn, cand_fn = _WORKER_STATE.get(
+        (scorer_bc, lexicon_bc, max_distance),
+        lambda: _memo_fns(scorer_bc.value, lexicon_bc.value, max_distance),
+    )
 
     def correct(text: str, enabled=True) -> list[str]:
         if not enabled:

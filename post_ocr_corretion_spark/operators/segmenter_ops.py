@@ -9,9 +9,12 @@ Arrow-batched UDF.
 """
 from __future__ import annotations
 
+import glob
+import os
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -19,58 +22,45 @@ from pyspark.sql import types as T
 from ..core.segmenter import ViterbiSegmenter
 from ..plans.parallelism import CPU_TASK_BYTES, spread
 from .lexicon import corpus_word_frequencies
-from .scorer_fit import CurrentFit
+from .scorer_fit import AUTO_BLOOM_VOCAB_THRESHOLD, CurrentFit, SidecarHandle, resolve_sidecar_path
 from .segmentation import prepare_sequences
 
+# the segmenter's own slot: a session that alternates segmentation and
+# correction keeps one model of each instead of reloading both
 _SEG_CACHE = CurrentFit()
 
 
-class SidecarSegmenter:
-    """Lazy Viterbi segmenter backed by a parquet (word, freq) sidecar —
-    same zero-driver-materialization pattern as scorer_fit.SidecarLexicon:
-    the frequency table is written distributively and each Python worker
-    builds the cost table once, locally, and keeps only the latest one.
-    Pickles as just the path (unique per fit). Deterministic: costs
-    depend only on per-word counts and exact integer totals, never on
-    load order."""
+def _read_segmenter(path: str) -> ViterbiSegmenter:
+    counts: dict[str, int] = {}
+    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
+        t = pq.read_table(f, columns=["word", "freq"])
+        for w, c in zip(t.column("word").to_pylist(), t.column("freq").to_pylist()):
+            counts[w] = c
+    return ViterbiSegmenter(counts)
 
-    def __init__(self, path: str):
-        self.path = path
 
-    def _read(self) -> ViterbiSegmenter:
-        import glob
-        import os
+def _load_segmenter(path: str, version: str | None) -> ViterbiSegmenter:
+    return _SEG_CACHE.get((path, version), lambda: _read_segmenter(path))
 
-        import pyarrow.parquet as pq
 
-        counts: dict[str, int] = {}
-        for f in sorted(glob.glob(os.path.join(self.path, "*.parquet"))):
-            t = pq.read_table(f, columns=["word", "freq"])
-            for w, c in zip(t.column("word").to_pylist(), t.column("freq").to_pylist()):
-                counts[w] = c
-        return ViterbiSegmenter(counts)
+class SidecarSegmenter(SidecarHandle):
+    """Handle to a parquet (word, freq) sidecar, the same pattern as
+    scorer_fit.SidecarLexicon: the frequency table is written
+    distributively and the handle unpickles on each Python worker to the
+    ViterbiSegmenter, whose cost table is built once, locally, and kept
+    only while it is the latest. Deterministic: costs depend only on
+    per-word counts and exact integer totals, never on load order."""
 
-    def _seg(self) -> ViterbiSegmenter:
-        return _SEG_CACHE.get(self.path, self._read)
-
-    def segment(self, text: str) -> list[str]:
-        return self._seg().segment(text)
-
-    def segment_text(self, text: str) -> str:
-        return self._seg().segment_text(text)
-
-    def __reduce__(self):
-        return (SidecarSegmenter, (self.path,))
+    load = staticmethod(_load_segmenter)
 
 
 def build_segmenter_broadcast(spark: SparkSession, docs: DataFrame):
-    """The unigram table rides a parquet sidecar, loaded lazily per
-    worker — the driver never materializes the vocabulary. The sidecar
-    location follows scorer_fit.resolve_sidecar_path (shared-storage conf
-    → local tempdir → driver-fit fallback on non-local masters whose
-    executors could not read a driver tempdir; ADVICE r2)."""
-    from .scorer_fit import AUTO_BLOOM_VOCAB_THRESHOLD, resolve_sidecar_path
-
+    """The unigram table rides a parquet sidecar whose handle each
+    worker unpickles to the segmenter — the driver never materializes
+    the vocabulary. The sidecar location follows
+    scorer_fit.resolve_sidecar_path (shared-storage conf → local tempdir
+    → driver-fit fallback on non-local masters whose executors could not
+    read a driver tempdir; ADVICE r2)."""
     path = resolve_sidecar_path(spark, prefix="segmenter_sidecar")
     if path is None:
         freqs = corpus_word_frequencies(docs)

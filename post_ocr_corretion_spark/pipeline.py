@@ -21,8 +21,10 @@ Non-``en`` pages and stubbed real-PDF pages pass through deterministically
 
 Scale notes (SURVEY.md §4): the scorer is built by
 operators/scorer_fit.build_scorer_broadcast. The lexicon rides a parquet
-sidecar and each Python worker fits the bigram model from it once, in one
-vectorized numpy pass — the driver never materializes the word list. The
+sidecar; the scorer and lexicon broadcasts carry handles to it that each
+Python worker unpickles to the NGramScorer and its word set, fitted once
+in one vectorized numpy pass — the driver never materializes the word
+list, and the beam calls the model directly. The
 worker's SymSpell deletion index is three sorted numpy arrays keyed by
 deletion-key hash (16 bytes per (word, position)), also built vectorized.
 Above AUTO_BLOOM_VOCAB_THRESHOLD

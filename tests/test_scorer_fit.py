@@ -3,6 +3,9 @@ counts give a bit-identical model; the Bloom membership is deterministic,
 never false-negative, and executor-side hashing matches core/bloom.py."""
 from __future__ import annotations
 
+import os
+from types import SimpleNamespace
+
 import numpy as np
 
 from post_ocr_corretion_spark.core.bloom import BloomFilter
@@ -25,9 +28,9 @@ def test_distributed_counts_bit_identical(spark, fixture_lexicon):
 
 
 def test_sidecar_lexicon_exact_and_picklable(spark, fixture_lexicon):
-    """The parquet-sidecar membership proxy: exact set semantics, loads
-    lazily from the distributed write, and pickles as just the path (what
-    a broadcast ships to executors)."""
+    """The parquet-sidecar lexicon handle pickles as just the path (what a
+    broadcast ships to executors) and unpickles to the exact word set of
+    the distributed write."""
     import pickle
 
     from post_ocr_corretion_spark.operators.scorer_fit import write_lexicon_sidecar
@@ -35,6 +38,7 @@ def test_sidecar_lexicon_exact_and_picklable(spark, fixture_lexicon):
     side = write_lexicon_sidecar(_lex_df(spark, fixture_lexicon))
     clone = pickle.loads(pickle.dumps(side))
     assert len(pickle.dumps(side)) < 500  # ships the path, not the words
+    assert type(clone) is frozenset
     assert set(clone) == set(fixture_lexicon)
     assert len(clone) == len(set(fixture_lexicon))
     some = next(iter(fixture_lexicon))
@@ -102,9 +106,9 @@ def test_distributed_bloom_blocks_bit_identical(spark, fixture_lexicon):
 
 
 def test_bloom_sidecar_lazy_and_picklable(spark, fixture_lexicon, tmp_path):
-    """The bitmap sidecar proxy: pickles as just the path (what a
-    broadcast ships), workers assemble the identical filter lazily, and
-    membership has no false negatives."""
+    """The bitmap sidecar handle: pickles as just the path (what a
+    broadcast ships), unpickles to the identical filter assembled from
+    the sidecar, and membership has no false negatives."""
     import pickle
 
     from post_ocr_corretion_spark.operators.scorer_fit import SidecarBloom, write_bloom_sidecar
@@ -112,16 +116,17 @@ def test_bloom_sidecar_lazy_and_picklable(spark, fixture_lexicon, tmp_path):
     m_bits, k = 4096, 5
     df = _lex_df(spark, fixture_lexicon)
     side = write_bloom_sidecar(df, m_bits, k, str(tmp_path / "bloom"))
+    assert isinstance(side, SidecarBloom) and not isinstance(side, BloomFilter)
     clone = pickle.loads(pickle.dumps(side))
-    assert isinstance(clone, SidecarBloom) and isinstance(clone, BloomFilter)
+    assert type(clone) is BloomFilter
     assert len(pickle.dumps(side)) < 500  # ships the path, not the bitmap
     want = BloomFilter(m_bits, k)
     for w in fixture_lexicon:
         want.add(w)
     assert clone.bits == want.bits and clone.m == m_bits and clone.k == k
     assert all(w in clone for w in fixture_lexicon)
-    # membership-only, like BloomFilter: correction._worker_fns keys its
-    # SymSpell-index-vs-probe decision on __iter__'s absence
+    # membership-only: correction._memo_fns keys its SymSpell-index-vs-probe
+    # decision on __iter__'s absence
     assert not hasattr(clone, "__iter__")
 
 
@@ -169,18 +174,67 @@ def test_resolve_sidecar_path_resolution_order(spark, tmp_path):
     assert p is not None and "lexicon_sidecar" in p
 
     # 3. non-local master, no conf → None (unit-faked master)
-    class _SC:
-        master = "spark://cluster:7077"
+    assert resolve_sidecar_path(_FakeSpark("spark://cluster:7077")) is None
 
-    class _Conf:
-        def get(self, key, default=None):
-            return default
 
-    class _Fake:
-        sparkContext = _SC()
-        conf = _Conf()
+class _FakeSpark:
+    """The master and the conf that resolve_sidecar_path reads; no JVM."""
 
-    assert resolve_sidecar_path(_Fake()) is None
+    def __init__(self, master: str, sidecar_dir: str | None = None):
+        self.sparkContext = SimpleNamespace(master=master)
+        self.conf = SimpleNamespace(get=lambda key, default=None: sidecar_dir or default)
+
+
+class _FakeFrame:
+    """A lexicon frame whose parquet write drops one part file; no JVM."""
+
+    write = property(lambda self: self)
+
+    def select(self, *cols):
+        return self
+
+    def coalesce(self, n):
+        return self
+
+    def mode(self, m):
+        return self
+
+    def parquet(self, path):
+        os.makedirs(path, exist_ok=True)
+        open(os.path.join(path, "part-0.parquet"), "w").close()
+
+
+def test_library_made_sidecar_dirs_are_removed_at_exit(tmp_path):
+    """The temp dirs resolve_sidecar_path (local master) and
+    write_lexicon_sidecar (no path) make are removed when the interpreter
+    exits; a conf-pinned location and an explicit path are never
+    touched."""
+    import json
+    import subprocess
+    import sys
+
+    tests_dir = os.path.dirname(os.path.abspath(__file__))
+    shared, explicit = str(tmp_path / "shared"), str(tmp_path / "explicit")
+    script = f"""
+import json, os, sys
+sys.path[:0] = [{os.path.dirname(tests_dir)!r}, {tests_dir!r}]
+from test_scorer_fit import _FakeFrame, _FakeSpark
+from post_ocr_corretion_spark.operators.scorer_fit import resolve_sidecar_path, write_lexicon_sidecar
+
+made = [resolve_sidecar_path(_FakeSpark("local[2]")), write_lexicon_sidecar(_FakeFrame()).path]
+conf = resolve_sidecar_path(_FakeSpark("local[2]", {shared!r}))
+write_lexicon_sidecar(_FakeFrame(), conf)
+write_lexicon_sidecar(_FakeFrame(), {explicit!r})
+assert all(os.path.isdir(p) for p in made)
+print(json.dumps({{"made": made, "conf": conf}}))
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, check=True, timeout=120
+    )
+    paths = json.loads(out.stdout)
+    assert [p for p in paths["made"] if os.path.exists(p)] == []
+    assert os.path.isdir(paths["conf"]) and paths["conf"].startswith(shared + "/")
+    assert os.path.isdir(explicit)
 
 
 def test_scorer_broadcast_cluster_fallback_is_driver_fit(spark, fixture_lexicon, monkeypatch):
@@ -204,20 +258,25 @@ def test_scorer_broadcast_cluster_fallback_is_driver_fit(spark, fixture_lexicon,
 def test_default_scorer_build_is_one_spark_job(spark, fixture_lexicon):
     """VERDICT r3: the default path sizes the vocabulary from the word
     sidecar's parquet footers, so the whole build is the one sidecar
-    write — no count() job."""
+    write — no count() job. The broadcast is the sidecar fit: a worker
+    unpickles it to the NGramScorer whose word set the lexicon handle
+    unpickles to."""
+    import pickle
     import uuid
 
-    from post_ocr_corretion_spark.operators.scorer_fit import SidecarScorer, build_scorer_broadcast
+    from post_ocr_corretion_spark.operators.scorer_fit import SidecarLexicon, build_scorer_broadcast
 
     lex_df = _lex_df(spark, fixture_lexicon)
     sc = spark.sparkContext
     group = f"scorer_build_{uuid.uuid4().hex}"
     sc.setJobGroup(group, "default scorer build")
     try:
-        bc, _ = build_scorer_broadcast(spark, lex_df)
+        bc, side = build_scorer_broadcast(spark, lex_df)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert isinstance(bc.value, SidecarScorer)
+    assert isinstance(side, SidecarLexicon)
+    assert type(bc.value) is NGramScorer
+    assert bc.value.lexicon is pickle.loads(pickle.dumps(side))
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
@@ -226,16 +285,19 @@ def test_auto_bloom_switch_above_threshold(spark, fixture_lexicon, monkeypatch):
     returns a Bloom-membership scorer (per-worker memory O(bloom bits));
     membership stays exact on lexicon words (no false negatives) and the
     bigram model is bit-identical to the local fit."""
+    import pickle
+
     from post_ocr_corretion_spark.operators import scorer_fit as sfmod
 
     lex_df = _lex_df(spark, fixture_lexicon)
     # below the threshold the exact sidecar path is unchanged
     _, lex = sfmod.build_scorer_broadcast(spark, lex_df)
-    assert not isinstance(lex, BloomFilter)
+    assert type(pickle.loads(pickle.dumps(lex))) is frozenset
 
     monkeypatch.setattr(sfmod, "AUTO_BLOOM_VOCAB_THRESHOLD", 0)
     bc, lex = sfmod.build_scorer_broadcast(spark, lex_df)
-    assert isinstance(lex, BloomFilter)
+    lex = pickle.loads(pickle.dumps(lex))  # what a worker sees
+    assert type(lex) is BloomFilter
     assert all(w in lex for w in fixture_lexicon)  # never false-negative
     local = NGramScorer(fixture_lexicon)
     assert np.array_equal(bc.value.log_prob, local.log_prob)
@@ -258,8 +320,9 @@ def test_auto_bloom_switch_cleans_up_word_sidecar(spark, fixture_lexicon, tmp_pa
     """ADVICE r4: the word sidecar doubles as the counting pass on the
     auto-switch branch but must not survive it as an orphan; the Bloom
     sidecar that replaces it overwrites the word parts at the same
-    location and is a lazy bitmap proxy (O(1) driver)."""
+    location and ships as a bitmap handle (O(1) driver)."""
     import os
+    import pickle
 
     from post_ocr_corretion_spark.operators import scorer_fit as sfmod
 
@@ -269,7 +332,9 @@ def test_auto_bloom_switch_cleans_up_word_sidecar(spark, fixture_lexicon, tmp_pa
     assert isinstance(lex, sfmod.SidecarBloom)
     assert os.path.exists(os.path.join(word_dir, sfmod.BLOOM_META))
     assert "word" not in _parquet_columns(word_dir)  # no orphaned word parts
-    assert all(w in lex for w in fixture_lexicon)
+    clone = pickle.loads(pickle.dumps(lex))
+    assert type(clone) is BloomFilter
+    assert all(w in clone for w in fixture_lexicon)
 
 
 def test_bloom_switch_writes_to_the_given_path_without_a_resolved_one(
@@ -279,6 +344,8 @@ def test_bloom_switch_writes_to_the_given_path_without_a_resolved_one(
     resolve_sidecar_path finds none (a non-local master with no conf):
     the Bloom scorer's bitmap lands there as a SidecarBloom instead of
     being assembled on the driver (~3.5 GB at 10^9 words)."""
+    import pickle
+
     from post_ocr_corretion_spark.operators import scorer_fit as sfmod
 
     monkeypatch.setattr(sfmod, "resolve_sidecar_path", lambda *a, **k: None)
@@ -286,7 +353,9 @@ def test_bloom_switch_writes_to_the_given_path_without_a_resolved_one(
     side_dir = str(tmp_path / "shared")
     bc, lex = sfmod.build_scorer_broadcast(spark, _lex_df(spark, fixture_lexicon), sidecar_path=side_dir)
     assert isinstance(lex, sfmod.SidecarBloom) and lex.path == side_dir
-    assert all(w in lex for w in fixture_lexicon)
+    clone = pickle.loads(pickle.dumps(lex))
+    assert type(clone) is BloomFilter
+    assert all(w in clone for w in fixture_lexicon)
     assert np.array_equal(bc.value.log_prob, NGramScorer(fixture_lexicon).log_prob)
 
 
@@ -332,3 +401,82 @@ def test_rewritten_sidecar_path_serves_each_fit(spark, tmp_path):
 
         seen = set(spark.sparkContext.parallelize(range(n), n).mapPartitions(probe).collect())
         assert seen == {(words, words)}
+
+
+def test_workers_unpickle_the_model_itself(spark, fixture_lexicon, tmp_path, monkeypatch):
+    """On an executor the broadcasts are the model objects, not proxies
+    that forward each call: the default fit gives the NGramScorer and,
+    as the lexicon, that scorer's own word set; above the Bloom threshold
+    the lexicon is the BloomFilter the scorer probes."""
+    from post_ocr_corretion_spark.operators import scorer_fit as sfmod
+
+    def worker_view(**kw):
+        scorer_bc, side = sfmod.build_scorer_broadcast(spark, _lex_df(spark, fixture_lexicon), **kw)
+        lexicon_bc = spark.sparkContext.broadcast(side)
+
+        def probe(_):
+            scorer, lex = scorer_bc.value, lexicon_bc.value
+            yield (
+                type(scorer) is NGramScorer,
+                type(lex) is frozenset,
+                type(lex) is BloomFilter,
+                scorer.lexicon is lex,
+            )
+
+        return set(spark.sparkContext.parallelize(range(2), 2).mapPartitions(probe).collect())
+
+    assert worker_view() == {(True, True, False, True)}
+    monkeypatch.setattr(sfmod, "AUTO_BLOOM_VOCAB_THRESHOLD", 0)
+    assert worker_view(sidecar_path=str(tmp_path / "bloom")) == {(True, False, True, True)}
+
+
+def test_a_new_fit_frees_the_old_model_before_reading_its_words(tmp_path, monkeypatch):
+    """Peak memory: a worker moving from fit A to fit B frees A's memo,
+    deletion index and model before it reads B's words, so two fits never
+    sit in one worker at once. The corrector keys its memo on the
+    broadcasts and reads their values only when it rebuilds."""
+    import gc
+    import pickle
+    import weakref
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from post_ocr_corretion_spark.operators import correction
+    from post_ocr_corretion_spark.operators import scorer_fit as sfmod
+
+    class _Broadcast:
+        """A worker's broadcast: ``.value`` unpickles what was shipped."""
+
+        def __init__(self, handle):
+            self._blob = pickle.dumps(handle)
+
+        @property
+        def value(self):
+            return pickle.loads(self._blob)
+
+    def broadcasts(name, words):
+        path = tmp_path / name
+        path.mkdir()
+        pq.write_table(pa.table({"word": words}), str(path / "part-0.parquet"))
+        return _Broadcast(sfmod.SidecarScorer(str(path), name)), _Broadcast(sfmod.SidecarLexicon(str(path), name))
+
+    a_scorer, a_lexicon = broadcasts("a", ["alpha", "beta", "gamma"])
+    b_scorer, b_lexicon = broadcasts("b", ["delta", "epsilon", "zeta"])
+    correct = correction._worker_corrector(a_scorer, a_lexicon, 1, None)
+    correct("alphq beta gamma")  # fills the memo and builds the deletion index
+    fit_a = weakref.ref(a_scorer.value)
+    del correct
+
+    alive_at_read = []
+    read_words = sfmod._read_words
+
+    def checked_read(path):
+        gc.collect()
+        alive_at_read.append(fit_a() is not None)
+        return read_words(path)
+
+    monkeypatch.setattr(sfmod, "_read_words", checked_read)
+    correct = correction._worker_corrector(b_scorer, b_lexicon, 1, None)
+    assert correct("delta epsilom zeta") == ["delta", "epsilon", "zeta"]
+    assert alive_at_read == [False]

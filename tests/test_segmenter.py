@@ -66,14 +66,20 @@ def test_eval_operator(spark, docs_rows):
 def test_sidecar_segmenter_keeps_only_the_latest_fit(tmp_path):
     """A Python worker serves one segmenter fit at a time: loading a
     second sidecar frees the first, so a long session does not keep
-    every run's cost table."""
+    every run's cost table. A handle unpickles (as on a worker) to the
+    ViterbiSegmenter itself."""
     import gc
+    import pickle
     import weakref
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from post_ocr_corretion_spark.core.segmenter import ViterbiSegmenter
     from post_ocr_corretion_spark.operators.segmenter_ops import SidecarSegmenter
+
+    def on_worker(handle):
+        return pickle.loads(pickle.dumps(handle))
 
     segs = []
     for i, words in enumerate([["the", "cat"], ["a", "mat"]]):
@@ -81,9 +87,12 @@ def test_sidecar_segmenter_keeps_only_the_latest_fit(tmp_path):
         path.mkdir()
         pq.write_table(pa.table({"word": words, "freq": [5, 3]}), str(path / "part-0.parquet"))
         segs.append(SidecarSegmenter(str(path)))
-    assert segs[0].segment_text("thecat") == "the cat"
-    first = weakref.ref(segs[0]._seg())
-    assert segs[1].segment_text("amat") == "a mat"
+    seg = on_worker(segs[0])
+    assert type(seg) is ViterbiSegmenter
+    assert seg.segment_text("thecat") == "the cat"
+    first = weakref.ref(seg)
+    del seg
+    assert on_worker(segs[1]).segment_text("amat") == "a mat"
     gc.collect()
     assert first() is None
-    assert segs[1]._seg() is segs[1]._seg()
+    assert on_worker(segs[1]) is on_worker(segs[1])
