@@ -1,14 +1,18 @@
 """Arrow-batched pandas UDFs — the only Python that runs in the hot path.
 
-Everything else in the engine is Catalyst expressions; these three are the
-M1/M4/M5-class ops SURVEY.md §4 reserves for Arrow batches:
+Everything else in the engine is Catalyst expressions; the UDFs here are
+the M1/M5-class ops SURVEY.md §4 reserves for Arrow batches:
 
-- word scoring (replaces BERT inference, M1): scorer state is broadcast
-  once per executor and reused across batches;
+- word scoring (replaces BERT inference, M1), one array of words per row:
+  a document's words at detection (operators/correction.with_detection)
+  and a candidate batch's words (operators/candidates.candidate_batches).
+  Scorer state is broadcast once per executor and reused across batches;
 - exact ``Levenshtein.ratio`` (M5): Spark's built-in levenshtein() has
-  different substitution cost (SURVEY.md §2.4 A12);
-- HTML/PDF extraction (north rule): per-document parse, Arrow-batched via
-  mapInPandas in operators/extract.py.
+  different substitution cost (SURVEY.md §2.4 A12), plus CER/WER for the
+  eval path.
+
+HTML/PDF extraction (north rule), the other per-document parse, is
+Arrow-batched via mapInPandas in operators/extract.py.
 """
 from __future__ import annotations
 
@@ -21,20 +25,8 @@ from pyspark.sql import types as T
 from ..core.levenshtein import cer, indel_ratio, wer
 
 
-def make_word_prob_udf(scorer_bc):
-    """word → P(correct), scorer broadcast (core.scoring.NGramScorer)."""
-
-    @F.pandas_udf(T.DoubleType())
-    def word_prob(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        scorer = scorer_bc.value
-        for s in it:
-            yield s.map(scorer.word_prob)
-
-    return word_prob
-
-
 def make_word_probs_array_udf(scorer_bc):
-    """array<string> words → array<double> probs, one pass per document —
+    """array<string> words → array<double> probs, one pass per row —
     no shuffle, memoized per batch (documents repeat words heavily)."""
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))

@@ -15,7 +15,7 @@ against the lexicon's deletion-neighborhood table (operators/lexicon.py):
 
 plus the unconditional (w, 1.0) / (w_nopunct, 1.0) candidates
 (correctionSentences.py:269).  Everything is Catalyst; the only Python is
-the word-prob pandas UDF over DISTINCT candidate words.
+the word-prob pandas UDF, which scores each batch's words as one array.
 
 Output ``cand_agg``: one row per error word with the pinned ORDERED batch
 (sorted base candidates, then +punct variants in the same order — see
@@ -24,6 +24,10 @@ core/beam.py float-parity contract) and its left-fold score normalizer:
     err_word: string               (lowercased error word, as keyed)
     cands:    array<struct<word, score, p>>
     w_total:  double
+
+The pair list is read once: one ``groupBy("err_word")`` collects and
+sorts the base entries, and the +punct variants (suffix taken from
+err_word) and the word probabilities derive from that row, with no join.
 
 Scale: err-side is DISTINCT error words (vocabulary-bounded — dedup before
 generation is the big win at 10^12 docs); lex_del is the big side,
@@ -37,7 +41,7 @@ from pyspark.sql import functions as F
 
 from ..core.candidates import P_DEL, P_INS, P_SUB, WORDCHAR
 from ..functions.text import add_last_punctuation, remove_punctuation
-from ..functions.udfs import make_word_prob_udf
+from ..functions.udfs import make_word_probs_array_udf
 
 _WORDCHARS = list(WORDCHAR)
 
@@ -192,58 +196,31 @@ def candidate_batches(
         pairs = candidate_pairs_d2(err_words, lexicon)
     else:
         pairs = candidate_pairs(err_words, lexicon, lex_del)
-    # r9: materialize the candidate pair list once — the batch assembly
-    # references it three times (base rows, +punct variants, and the
-    # distinct-word prob table derives from their union), and without
-    # the checkpoint each reference re-ran the whole edit-join chain
-    # (guide §5: cache on reuse; the pair list is vocabulary-bounded).
-    # Values unchanged.
-    pairs = pairs.localCheckpoint(eager=True)
-    punct = err_words.select("err_word", add_last_punctuation(F.col("err_word")).alias("punct"))
-    variants = (
-        pairs.join(punct.filter(F.col("punct") != ""), "err_word")
+    base = F.col("base")
+    punct = add_last_punctuation(F.col("err_word"))
+    # each +punct variant is made from its entry of the SORTED BASE batch
+    # (core/beam.candidate_batch appends them in base order); sorting on
+    # the concatenated variant diverges when one base word is a strict
+    # prefix of another and the punct char sorts below the next base char
+    # (ADVICE r1: 'wrd;' > 'wrd5;' while 'wrd' < 'wrd5'), which would
+    # break bit-exact parity. punct depends only on err_word, so a batch
+    # keeps all of its variants or none.
+    variants = F.filter(
+        F.transform(base, lambda b: F.struct(F.concat(b["word"], punct).alias("word"), b["score"].alias("score"))),
+        lambda _: punct != "",
+    )
+    word_probs = make_word_probs_array_udf(scorer_bc)
+    return (
+        pairs.groupBy("err_word")
+        .agg(F.sort_array(F.collect_list(F.struct("word", "score"))).alias("base"))
+        .select("err_word", F.concat(base, variants).alias("entries"))
+        .withColumn("probs", word_probs(F.transform("entries", lambda e: e["word"])))
         .select(
             "err_word",
-            F.concat(F.col("word"), F.col("punct")).alias("word"),
-            "score",
-            # carry the base word: variants are ordered by the SORTED BASE
-            # batch (core/beam.candidate_batch appends them in base order),
-            # and sorting on the concatenated variant diverges when one
-            # base word is a strict prefix of another and the punct char
-            # sorts below the next base char (ADVICE r1: 'wrd;' > 'wrd5;'
-            # while 'wrd' < 'wrd5') — which would break bit-exact parity.
-            F.col("word").alias("base_word"),
-        )
-    )
-    base_tagged = pairs.withColumn("is_variant", F.lit(False)).withColumn("base_word", F.col("word"))
-    var_tagged = variants.withColumn("is_variant", F.lit(True))
-    all_rows = base_tagged.unionByName(var_tagged)
-
-    word_prob = make_word_prob_udf(scorer_bc)
-    probs = (
-        all_rows.select("word").distinct().withColumn("p", word_prob(F.col("word")))
-    )
-    scored = all_rows.join(probs, "word")
-
-    entry = F.struct(F.col("word"), F.col("score"), F.col("p"))
-    # variant entries sort on the BASE word first (see comment above)
-    var_entry = F.struct(F.col("base_word"), F.col("score"), F.col("word"), F.col("p"))
-    agg = (
-        scored.groupBy("err_word")
-        .agg(
-            F.sort_array(F.collect_list(F.when(~F.col("is_variant"), entry))).alias("base_arr"),
-            F.sort_array(F.collect_list(F.when(F.col("is_variant"), var_entry))).alias("var_arr"),
-        )
-        .select(
-            "err_word",
-            F.concat(
-                F.col("base_arr"),
-                F.transform(
-                    F.col("var_arr"),
-                    lambda v: F.struct(
-                        v["word"].alias("word"), v["score"].alias("score"), v["p"].alias("p")
-                    ),
-                ),
+            F.zip_with(
+                "entries",
+                "probs",
+                lambda e, p: F.struct(e["word"].alias("word"), e["score"].alias("score"), p.alias("p")),
             ).alias("cands"),
         )
         .withColumn(
@@ -251,4 +228,3 @@ def candidate_batches(
             F.aggregate(F.col("cands"), F.lit(0.0), lambda acc, c: acc + c["score"]),
         )
     )
-    return agg

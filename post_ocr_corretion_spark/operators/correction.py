@@ -14,8 +14,8 @@ Two Spark engines run that one loop:
   is context-free per word, a substitution updates the sentence mean
   INCREMENTALLY, so the whole beam loop is one Catalyst left fold over
   nested arrays per document (array_sort/transform/aggregate), fed by the
-  candidate-batch table (operators/candidates.candidate_batches) through
-  one broadcast equi-join.
+  candidate-batch table (operators/candidates.candidate_batches) as one
+  broadcast map from error word to batch.
 
 Float parity with core/beam.py is bit-exact: identical expression shapes,
 identical left folds (see the FLOAT-PARITY CONTRACT there).
@@ -85,11 +85,6 @@ def distinct_error_words(detected: DataFrame) -> DataFrame:
     ).distinct()
 
 
-_ECANDS_TYPE = (
-    "array<struct<pos:int,cands:array<struct<word:string,score:double,p:double>>,w_total:double>>"
-)
-
-
 def run_beam_fold(
     detected: DataFrame,
     cand_agg: DataFrame,
@@ -97,35 +92,28 @@ def run_beam_fold(
 ) -> DataFrame:
     """The ENTIRE beam loop as ONE Catalyst expression — no driver loop.
 
-    The candidate batches for every error of a document are attached ONCE
-    (explode → one broadcast equi-join → collect_list sorted by
-    position), and the loop becomes ``F.aggregate(ecands, initial_beam,
-    step)`` — a left fold evaluated at ROW level, so each document runs
-    exactly its own number of beam steps, with a single shuffle (the
-    per-doc collect) and a single plan.  The step mirrors the loop body
-    of core/beam.correct_sentence (same ops, same left folds), so floats
-    are bit-identical — tested per document against that reference."""
-    state = detected.withColumn("_rid", F.monotonically_increasing_id()).localCheckpoint(
-        eager=True
-    )  # _rid is materialized INTO the checkpoint → stable across the two scans below
-    e = state.select("_rid", F.explode("errors").alias("e"))
-    joined = e.join(
-        F.broadcast(cand_agg.withColumnRenamed("err_word", "cand_key")),
-        F.col("e.key") == F.col("cand_key"),
-        "left",
+    ``cand_agg`` becomes one row holding a map err_word → (cands,
+    w_total), cross-joined to every document as a broadcast; each error
+    reads its batch from that map (``ecands``), and the loop becomes
+    ``F.aggregate(ecands, initial_beam, step)`` — a left fold evaluated at
+    ROW level, so each document runs exactly its own number of beam steps
+    and no document row is shuffled. ``cand_agg`` was already broadcast
+    whole, so its size bound is unchanged: it is vocabulary-bounded, and
+    a map lookup scans its keys. An error with no batch reads a NULL map
+    value (also under ANSI) and leaves the beam as it is. The step
+    mirrors the loop body of core/beam.correct_sentence (same ops, same
+    left folds), so floats are bit-identical — tested per document
+    against that reference."""
+    batches = cand_agg.agg(
+        F.map_from_entries(
+            F.collect_list(F.struct("err_word", F.struct("cands", "w_total")))
+        ).alias("_batches")
     )
-    per_doc = joined.groupBy("_rid").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col("e.pos").alias("pos"),
-                    F.col("cands").alias("cands"),
-                    F.col("w_total").alias("w_total"),
-                )
-            )
-        ).alias("ecands")
+    state = detected.crossJoin(F.broadcast(batches))
+    ecands = F.transform(
+        F.col("errors"),
+        lambda e: F.struct(e["pos"].alias("pos"), F.element_at(F.col("_batches"), e["key"]).alias("batch")),
     )
-    state = state.join(per_doc, "_rid", "left")
 
     n = F.col("n").cast("double")
 
@@ -137,8 +125,8 @@ def run_beam_fold(
 
     def step(beams, ec):
         pos = ec["pos"]
-        cands = ec["cands"]
-        w_total = ec["w_total"]
+        cands = ec["batch"]["cands"]
+        w_total = ec["batch"]["w_total"]
         pruned = F.slice(
             F.array_sort(
                 beams,
@@ -197,7 +185,7 @@ def run_beam_fold(
         return F.when(cands.isNull(), beams).otherwise(F.flatten(F.transform(pruned, expand)))
 
     init = F.array(F.struct(F.col("words"), F.col("psum")))
-    final = F.aggregate(F.coalesce(F.col("ecands"), F.array().cast(_ECANDS_TYPE)), init, step)
+    final = F.aggregate(ecands, init, step)
     best = F.element_at(
         F.array_sort(
             final,
@@ -205,7 +193,7 @@ def run_beam_fold(
         ),
         1,
     )
-    return state.withColumn("corrected_words", best["words"]).drop("ecands", "_rid")
+    return state.withColumn("corrected_words", best["words"]).drop("_batches")
 
 
 _WORKER_STATE = CurrentFit()

@@ -9,8 +9,6 @@ Arrow-batched UDF.
 """
 from __future__ import annotations
 
-import glob
-import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -22,7 +20,13 @@ from pyspark.sql import types as T
 from ..core.segmenter import ViterbiSegmenter
 from ..plans.parallelism import CPU_TASK_BYTES, spread
 from .lexicon import corpus_word_frequencies
-from .scorer_fit import AUTO_BLOOM_VOCAB_THRESHOLD, CurrentFit, SidecarHandle, resolve_sidecar_path
+from .scorer_fit import (
+    AUTO_BLOOM_VOCAB_THRESHOLD,
+    CurrentFit,
+    SidecarHandle,
+    _sidecar_parts,
+    resolve_sidecar_path,
+)
 from .segmentation import prepare_sequences
 
 # the segmenter's own slot: a session that alternates segmentation and
@@ -32,7 +36,7 @@ _SEG_CACHE = CurrentFit()
 
 def _read_segmenter(path: str) -> ViterbiSegmenter:
     counts: dict[str, int] = {}
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
+    for f in _sidecar_parts(path, "segmenter"):
         t = pq.read_table(f, columns=["word", "freq"])
         for w, c in zip(t.column("word").to_pylist(), t.column("freq").to_pylist()):
             counts[w] = c

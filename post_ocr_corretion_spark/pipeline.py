@@ -11,8 +11,9 @@ SURVEY.md §3.1) re-expressed over the north-rule web table:
   scorer + lexicon broadcast ──►  render → extract → beam per document
         │                                   │
         │ catalyst: deletion neighborhood,  │  catalyst: extract → detection
-        │ candidate batches (equi-joins,    │  (one pandas-UDF pass) → beam
-        └─► distinct error words only) ───► │  fold (one Catalyst expression)
+        │ candidate batches (equi-joins,    │  (one pandas-UDF pass, the one
+        │ distinct error words only, one    │  checkpoint) → beam fold (one
+        └─► broadcast map word → batch) ──► │  Catalyst expression)
                                             ▼
                      (url, extracted_text, spans, corrected_text, …)
 
@@ -39,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .datagen.wordlist import COMMON_WORDS
-from .functions.text import join_words_quirk, join_words_readable
+from .functions.text import join_words_quirk, join_words_readable, sentence_words
 from .operators.candidates import candidate_batches
 from .operators.correction import (
     distinct_error_words,
@@ -141,7 +142,7 @@ def run_pipeline_from_docs(
     # driver thread materializes its shuffle while this thread builds the
     # lexicon and the scorer, which hides the shuffle behind that job; the
     # udf stage then reads the checkpointed partitions (catalyst mode
-    # checkpoints its extracted rows itself). A multi-split or
+    # checkpoints its detected rows itself). A multi-split or
     # unknown-size input is used as given: nothing is shuffled or pinned.
     # If the lexicon or scorer build raises, the checkpoint job is
     # cancelled before the exception leaves this call.
@@ -182,25 +183,28 @@ def run_pipeline_from_docs(
             docs, scorer_bc, lexicon_bc, max_distance=max_distance, roulette_seed=roulette_seed
         )
     else:
+        # detection runs once over every extracted row, and that frame is
+        # the catalyst engine's one materialization: the error words, the
+        # candidate batches and the fold all read it. A page that is not
+        # corrected is detected over empty text, so it has no words and
+        # no errors, nothing is scored for it, and it takes its split
+        # words at the end.
         enabled = (F.col("lang") == "en") & (F.col("kind") != "pdf_stub")
-        extracted = render_and_extract(docs).localCheckpoint(eager=True)  # materialize once for both branches
-        correctable = extracted.filter(enabled)
-        from .functions.text import sentence_words
-
-        passthrough = extracted.filter(~enabled).withColumn(
-            "corrected_words", sentence_words(F.col("extracted_text"))
+        detected = with_detection(
+            render_and_extract(docs).withColumn(
+                "detect_text", F.when(enabled, F.col("extracted_text")).otherwise("")
+            ),
+            scorer_bc,
+            text_col="detect_text",
+        ).localCheckpoint(eager=True)
+        cand_agg = candidate_batches(
+            distinct_error_words(detected), lexicon_df, deletion_neighborhood(lexicon_df), scorer_bc,
+            max_distance=max_distance,
         )
-        lex_del = deletion_neighborhood(lexicon_df)
-        detected = with_detection(correctable, scorer_bc)
-        err_words = distinct_error_words(detected)
-        cand_agg = candidate_batches(err_words, lexicon_df, lex_del, scorer_bc, max_distance=max_distance).cache()
-        cand_agg.count()  # materialize before the fold
-        # the beam as one Catalyst expression: one broadcast join, one
-        # shuffle, no driver loop (operators/correction.run_beam_fold)
-        beamed = run_beam_fold(detected, cand_agg)
-        corrected = beamed.drop(
-            "words", "probs", "psum", "n", "errors"
-        ).unionByName(passthrough)
+        corrected = run_beam_fold(detected, cand_agg).withColumn(
+            "corrected_words",
+            F.when(enabled, F.col("corrected_words")).otherwise(sentence_words(F.col("extracted_text"))),
+        )
     return corrected.select(
         "url",
         "warc_ts",

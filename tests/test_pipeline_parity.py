@@ -124,6 +124,61 @@ def test_run_beam_fold_equals_reference(spark, docs_rows, fixture_scorer):
     assert fold == reference
 
 
+def test_run_beam_fold_keeps_words_without_a_batch(spark, docs_rows, fixture_scorer):
+    """An error whose key has no row in ``cand_agg`` reads a NULL batch
+    from the broadcast map and leaves the beam as it is: with no batches
+    every document keeps its words, and with some keys missing the
+    documents whose errors all miss keep theirs while the others fold as
+    with every batch. A missing map key reads NULL with ANSI on or off."""
+    from pyspark.sql import functions as F
+
+    from post_ocr_corretion_spark.datagen.webpages import ocr_noise_text
+    from post_ocr_corretion_spark.datagen.wordlist import COMMON_WORDS
+    from post_ocr_corretion_spark.operators.candidates import candidate_batches
+    from post_ocr_corretion_spark.operators.correction import (
+        distinct_error_words,
+        run_beam_fold,
+        with_detection,
+    )
+    from post_ocr_corretion_spark.operators.lexicon import build_lexicon, deletion_neighborhood
+
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for setting in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", setting)
+            missing = F.element_at(F.create_map(F.lit("a"), F.lit(1)), F.lit("b"))
+            assert spark.range(1).select(missing).first()[0] is None, setting
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+    rows = [(i, ocr_noise_text(r["text"], i)) for i, r in enumerate(docs_rows[:12])]
+    noisy = spark.createDataFrame(rows, "doc_id long, text string").withColumn("extracted_text", F.col("text"))
+    lex_df = build_lexicon(spark, noisy, COMMON_WORDS)
+    scorer_bc = spark.sparkContext.broadcast(fixture_scorer)
+    detected = with_detection(noisy, scorer_bc).localCheckpoint(eager=True)
+    cand_agg = candidate_batches(
+        distinct_error_words(detected), lex_df, deletion_neighborhood(lex_df), scorer_bc
+    ).localCheckpoint(eager=True)
+
+    def fold(batches):
+        out = run_beam_fold(detected, batches).select("doc_id", "words", "errors", "corrected_words")
+        return {r.doc_id: r for r in out.collect()}
+
+    full = fold(cand_agg)
+    assert all(r.corrected_words == r.words for r in fold(cand_agg.filter(F.lit(False))).values())
+    keys = {d: {e.key for e in r.errors} for d, r in full.items()}
+    # drop the batches of one document that the full fold changes
+    dropped = keys[next(d for d, r in full.items() if r.corrected_words != r.words)]
+    partial = fold(cand_agg.filter(~F.col("err_word").isin(sorted(dropped))))
+    kept = [d for d, k in keys.items() if k and k <= dropped]
+    folded = [d for d, k in keys.items() if not k & dropped]
+    assert kept and folded
+    for d in kept:
+        assert partial[d].corrected_words == partial[d].words, d
+    for d in folded:
+        assert partial[d].corrected_words == full[d].corrected_words, d
+
+
 def test_render_and_extract_equals_extract_of_webpages(spark, docs_rows):
     """The fused render+extract stage is byte-identical to rendering the
     webpages table and extracting it, every column including html_bytes."""

@@ -451,3 +451,62 @@ def test_multi_split_corpus_is_never_spread(spark, tmp_path):
         assert "Scan ExistingRDD" not in formatted_plan(flagship)
     finally:
         spark.conf.unset("spark.sql.files.minPartitionNum")
+
+
+def test_catalyst_fold_shuffles_no_document_row(spark, docs_rows, fixture_scorer):
+    """run_beam_fold reads each error's batch from one broadcast map. Over
+    materialized inputs, the plan it adds holds no row id and no shuffle
+    of the documents: its only exchanges are the broadcast and, beneath
+    it, the single-partition gather that builds the one map row from the
+    (vocabulary-bounded) batch table."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from post_ocr_corretion_spark.datagen.wordlist import COMMON_WORDS
+    from post_ocr_corretion_spark.operators.candidates import candidate_batches
+    from post_ocr_corretion_spark.operators.correction import (
+        distinct_error_words,
+        run_beam_fold,
+        with_detection,
+    )
+    from post_ocr_corretion_spark.operators.lexicon import build_lexicon, deletion_neighborhood
+
+    docs = spark.createDataFrame(
+        [(r["doc_id"], r["text"]) for r in docs_rows[:8]], "doc_id long, text string"
+    ).withColumn("extracted_text", F.col("text"))
+    lex_df = build_lexicon(spark, docs, COMMON_WORDS)
+    scorer_bc = spark.sparkContext.broadcast(fixture_scorer)
+    detected = with_detection(docs, scorer_bc).localCheckpoint(eager=True)
+    cand_agg = candidate_batches(
+        distinct_error_words(detected), lex_df, deletion_neighborhood(lex_df), scorer_bc
+    ).localCheckpoint(eager=True)
+    fold = run_beam_fold(detected, cand_agg)
+    plan = formatted_plan(fold)
+    assert "monotonically_increasing_id" not in plan
+    exchanges = re.findall(r"^\(\d+\) (\w*Exchange)\n(?:.*\n)*?Arguments: (\w+)", plan, re.M)
+    assert sorted(exchanges) == [("BroadcastExchange", "IdentityBroadcastMode"), ("Exchange", "SinglePartition")]
+    assert set(join_strategies(fold)) == {"BroadcastNestedLoopJoin"}
+
+
+def test_catalyst_flagship_job_count(spark, docs_rows):
+    """The catalyst flagship materializes its detected rows once and runs
+    no step that only orders or pins work: on the 80 fixture docs it
+    launches at most 20 Spark jobs, including the lexicon, the scorer
+    sidecar and the collect (before the engine read its batches from a
+    broadcast map: 33)."""
+    from post_ocr_corretion_spark.pipeline import run_pipeline_from_docs
+
+    sc = spark.sparkContext
+    docs = spark.createDataFrame(
+        [(r["doc_id"], r["text"], r["lang"]) for r in docs_rows], "doc_id long, text string, lang string"
+    )
+    sc.setJobGroup("catalyst_job_count", "catalyst flagship job count")
+    try:
+        rows = run_pipeline_from_docs(spark, docs, mode="catalyst").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == len(docs_rows)
+    jobs = sc.statusTracker().getJobIdsForGroup("catalyst_job_count")
+    assert len(jobs) <= 20, len(jobs)

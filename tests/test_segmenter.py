@@ -96,3 +96,15 @@ def test_sidecar_segmenter_keeps_only_the_latest_fit(tmp_path):
     gc.collect()
     assert first() is None
     assert on_worker(segs[1]) is on_worker(segs[1])
+
+
+def test_sidecar_segmenter_with_no_parts_raises(tmp_path):
+    """A segmenter sidecar with no parquet parts (a path the workers
+    cannot see, or a failed write) raises, as the scorer's sidecar does,
+    instead of loading an empty model that segments nothing."""
+    import pickle
+
+    from post_ocr_corretion_spark.operators.segmenter_ops import SidecarSegmenter
+
+    with pytest.raises(FileNotFoundError, match="segmenter sidecar"):
+        pickle.loads(pickle.dumps(SidecarSegmenter(str(tmp_path))))
