@@ -98,8 +98,9 @@ def run_beam_fold(
     ``F.aggregate(ecands, initial_beam, step)`` — a left fold evaluated at
     ROW level, so each document runs exactly its own number of beam steps
     and no document row is shuffled. ``cand_agg`` was already broadcast
-    whole, so its size bound is unchanged: it is vocabulary-bounded, and
-    a map lookup scans its keys. An error with no batch reads a NULL map
+    whole, so its size bound is unchanged: it is vocabulary-bounded. A
+    map lookup scans the keys, so its cost grows with the number of
+    distinct error words. An error with no batch reads a NULL map
     value (also under ANSI) and leaves the beam as it is. The step
     mirrors the loop body of core/beam.correct_sentence (same ops, same
     left folds), so floats are bit-identical — tested per document

@@ -493,8 +493,7 @@ def test_catalyst_flagship_job_count(spark, docs_rows):
     """The catalyst flagship materializes its detected rows once and runs
     no step that only orders or pins work: on the 80 fixture docs it
     launches at most 20 Spark jobs, including the lexicon, the scorer
-    sidecar and the collect (before the engine read its batches from a
-    broadcast map: 33)."""
+    sidecar and the collect."""
     from post_ocr_corretion_spark.pipeline import run_pipeline_from_docs
 
     sc = spark.sparkContext
