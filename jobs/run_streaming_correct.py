@@ -14,7 +14,9 @@ the checkpoint: already-processed files are not re-read and dedup state
 is restored (exactly-once per url within the state window).
 
 ``--available-now`` drains what exists and exits (batch-ish operation,
-used by tests); omit it for a continuous 30s-trigger run.
+used by tests); omit it for a continuous 30s-trigger run. A drain that
+does not finish within 600 s is stopped and the job exits 1 without a
+success record, because the sink then holds only part of the input.
 """
 from __future__ import annotations
 
@@ -92,6 +94,8 @@ def main(argv: list[str] | None = None) -> int:
         q = writer.trigger(availableNow=True).start()
         if not q.awaitTermination(600):
             q.stop()  # never read the sink while the query still runs
+            print(f"drain did not finish within 600 s; the sink at {args.out} is partial", file=sys.stderr)
+            return 1
     else:
         q = writer.trigger(processingTime="30 seconds").start()
         q.awaitTermination()

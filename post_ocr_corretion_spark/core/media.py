@@ -7,11 +7,10 @@ the round-1 md5 stub for the formats stdlib can express).
   encoder (filter 0) used by the fixture datagen — so decode tests run
   against genuinely encoded files.
 - WAV: PCM 16-bit decode/encode via stdlib ``wave``.
-- ``resize_nearest``: deterministic nearest-neighbor image resize in
-  numpy (the "resize" stage of the multimodal pipeline).
 
-JPEG/video codecs genuinely need external libraries and stay stubbed
-(honestly marked) in operators/multimodal.py.
+Baseline JPEG decodes in core/jpeg.py. Video containers genuinely need
+external libraries and stay stubbed (honestly marked) in
+operators/multimodal.py.
 """
 from __future__ import annotations
 
@@ -134,15 +133,6 @@ def decode_png(data: bytes) -> np.ndarray:
         out[y] = cur.astype(np.uint8)
         prev = cur
     return out.reshape(height, width, channels)
-
-
-def resize_nearest(arr: np.ndarray, size: tuple[int, int]) -> np.ndarray:
-    """Deterministic nearest-neighbor resize to (h, w)."""
-    h, w = size
-    src_h, src_w = arr.shape[:2]
-    ys = (np.arange(h) * src_h // h).clip(0, src_h - 1)
-    xs = (np.arange(w) * src_w // w).clip(0, src_w - 1)
-    return arr[ys][:, xs]
 
 
 def encode_wav(samples: np.ndarray, framerate: int = 16000) -> bytes:

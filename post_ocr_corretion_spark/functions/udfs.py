@@ -8,8 +8,9 @@ the M1/M5-class ops SURVEY.md §4 reserves for Arrow batches:
   and a candidate batch's words (operators/candidates.candidate_batches).
   Scorer state is broadcast once per executor and reused across batches;
 - exact ``Levenshtein.ratio`` (M5): Spark's built-in levenshtein() has
-  different substitution cost (SURVEY.md §2.4 A12), plus CER/WER for the
-  eval path.
+  different substitution cost (SURVEY.md §2.4 A12), plus WER for the
+  eval path. CER needs no UDF: it is the built-in levenshtein() over the
+  reference length.
 
 HTML/PDF extraction (north rule), the other per-document parse, is
 Arrow-batched via mapInPandas in operators/extract.py.
@@ -22,7 +23,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..core.levenshtein import cer, indel_ratio, wer
+from ..core.levenshtein import indel_ratio, wer
 
 
 def make_word_probs_array_udf(scorer_bc):
@@ -57,14 +58,6 @@ def indel_ratio_udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Se
         yield pd.Series(
             [indel_ratio(x if x is not None else "", y if y is not None else "") for x, y in zip(a, b)]
         )
-
-
-@F.pandas_udf(T.DoubleType())
-def cer_udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-    """Character error rate (hyp, ref). Matches built-in levenshtein/len
-    but lives here so the eval path has one import point."""
-    for hyp, ref in it:
-        yield pd.Series([cer(h or "", r or "") for h, r in zip(hyp, ref)])
 
 
 @F.pandas_udf(T.DoubleType())

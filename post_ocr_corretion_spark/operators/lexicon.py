@@ -106,19 +106,6 @@ def build_lexicon(
     return out.repartition("bucket") if bucketed else out
 
 
-def write_lexicon_partitioned(lexicon: DataFrame, path: str) -> None:
-    """A3 as PHYSICAL layout: hive-partition the lexicon by ``bucket`` —
-    the reference's manual bucket dict (correctionSentences.py:43-51)
-    becomes directory layout, and a bucket-key predicate becomes
-    partition PRUNING at the scan (J1 for free — SURVEY.md §4 row 1)."""
-    lexicon.write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-
-def read_lexicon_bucket(spark: SparkSession, path: str, bucket: str) -> DataFrame:
-    """Bucket lookup that prunes to one partition directory."""
-    return spark.read.parquet(path).filter(F.col("bucket") == bucket)
-
-
 def deletion_neighborhood(lexicon: DataFrame) -> DataFrame:
     """For every lexicon word and position i: (delkey = word minus char i,
     pos = i, ch = word[i], word). Pure Catalyst (posexplode over a

@@ -2,13 +2,9 @@
 hosts, repartitionByRange on url hash, AQE-tuned shuffles").
 
 Common-Crawl-style url spaces are Zipf-skewed by host (the synthetic
-corpus pins this: h0.example.com owns half of all pages). Three tools:
+corpus pins this: h0.example.com owns half of all pages). Two tools:
 
 - ``host_of``: host extraction (pure Catalyst).
-- ``salted_repartition``: hash the key through xxhash64 before
-  repartitioning — placement is independent of the key's own
-  distribution, so a hot host can never pin a partition (per-doc map
-  stages).
 - ``salted_key``: append a bounded random-ish salt derived from a
   SECONDARY column to the hot keys only — the classic skew-join/groupBy
   salt; aggregate twice (salted then unsalted) to recombine.
@@ -24,12 +20,6 @@ from pyspark.sql import functions as F
 
 def host_of(url: Column) -> Column:
     return F.regexp_extract(url, r"^[a-z]+://([^/]+)/", 1)
-
-
-def salted_repartition(df: DataFrame, key: str, partitions: int) -> DataFrame:
-    """Repartition on xxhash64(key): uniform placement regardless of key
-    skew (hash of distinct urls is uniform even when hosts are not)."""
-    return df.repartition(partitions, F.xxhash64(key))
 
 
 def salted_key(key: Column, hot_keys: list[str], salt_source: Column, buckets: int = 16) -> Column:

@@ -29,7 +29,7 @@ not asymptotic, overhead — and it stays embarrassingly parallel.
 """
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 POS_BASE = 1 << 20  # position field width inside the packed key
@@ -89,40 +89,4 @@ def winnow_fingerprints(
                 "gram_hash"
             ),
         )
-    )
-
-
-def winnow_overlap_pairs(
-    fps: DataFrame, min_shared: int = 2, max_per_hash: int = 1000
-) -> DataFrame:
-    """(doc_a, doc_b, shared) — document pairs ranked by how many
-    winnowing fingerprints they share (the MOSS pairing step): doc
-    pairs sharing any substring of length ≥ w + k − 1 necessarily
-    appear here (each such match contributes ≥ 1 shared hash), with
-    ``shared`` a monotone overlap score. Input is winnow_fingerprints
-    output.
-
-    Scale shape: the classic inverted-index self-join — per-hash
-    DISTINCT doc lists, pairs generated ONLY within a hash's postings
-    (an equi-join on gram_hash, never all-pairs). Boilerplate hashes
-    shared by more than ``max_per_hash`` docs are dropped before the
-    join (the standard stop-gram cap: a hash in h docs costs h² pairs;
-    the cap bounds any hash's cost at max_per_hash² — same skew defense
-    as the LSH band cap, documented loss: overlaps witnessed ONLY by
-    ultra-common grams are missed, which is the desired semantics for
-    boilerplate)."""
-    posted = fps.select("gram_hash", F.col("doc_id")).distinct()
-    df = posted.groupBy("gram_hash").agg(
-        F.count(F.lit(1)).cast("long").alias("_df")
-    )
-    kept = posted.join(
-        df.filter(F.col("_df") <= max_per_hash).select("gram_hash"), "gram_hash"
-    )
-    a = kept.select("gram_hash", F.col("doc_id").alias("doc_a"))
-    b = kept.select("gram_hash", F.col("doc_id").alias("doc_b"))
-    pairs = a.join(b, "gram_hash").filter(F.col("doc_a") < F.col("doc_b"))
-    return (
-        pairs.groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("shared"))
-        .filter(F.col("shared") >= min_shared)
     )

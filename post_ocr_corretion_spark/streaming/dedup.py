@@ -8,10 +8,6 @@ state keyed by a hash bucket of the url (bounded key cardinality — state
 size scales with distinct urls per bucket, and buckets spread uniformly
 because the key is a hash, not the skewed host).
 
-At 10^12-url scale the in-state set becomes a Bloom filter per bucket
-(core/bloom.py — same trade as the scorer membership); the operator
-shape (grouping, state schema, output schema) is unchanged.
-
 ``first_seen_urls(..., ttl_seconds=N)`` bounds the state on unbounded url
 spaces (VERDICT r1 item 6): each state entry carries its last-seen event
 timestamp, entries older than ``max(batch ts) − ttl`` are evicted before
@@ -179,78 +175,6 @@ def first_seen_pages(pages: DataFrame, ttl_seconds: int | None = None) -> DataFr
         stateStructType=TTL_STATE_SCHEMA if ttl_seconds is not None else STATE_SCHEMA,
         outputMode="append",
         timeoutConf=timeout,
-    )
-
-
-BLOOM_STATE_SCHEMA = "bits binary, m int, k int"
-BLOOM_OUTPUT_SCHEMA = "url string, bucket int, saturated boolean"
-
-# a Bloom filter's design point is ≤50% bits set (at optimal k, exactly
-# the fill reached by the n it was sized for); past it the fpp blows
-# through (1/2)^k and fresh urls start silently dropping — so the
-# operator FLAGS it per emitted row instead of degrading silently
-# (VERDICT r3 item 8)
-BLOOM_SATURATION_FILL = 0.5
-
-
-def _make_bloom_dedup_fn(m_bits: int, k: int):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ..core.bloom import BloomFilter
-
-        if state.exists:
-            raw, m, kk = state.get
-            bf = BloomFilter(m, kk, bytearray(raw))
-        else:
-            bf = BloomFilter(m_bits, k)
-        fresh: list[str] = []
-        for pdf in pdfs:
-            for url in pdf["url"]:
-                if url not in bf:
-                    bf.add(url)
-                    fresh.append(url)
-        state.update((bytes(bf.bits), bf.m, bf.k))
-        # set-bit count over the packed bit array: one popcount per batch
-        # (m/8 bytes), the saturation check the sizing contract promises
-        fill = float(np.unpackbits(np.frombuffer(bytes(bf.bits), dtype=np.uint8)).sum()) / bf.m
-        saturated = fill > BLOOM_SATURATION_FILL
-        yield pd.DataFrame(
-            {
-                "url": fresh,
-                "bucket": [key[0]] * len(fresh),
-                "saturated": [saturated] * len(fresh),
-            }
-        )
-
-    return fn
-
-
-def first_seen_urls_bloom(
-    pages: DataFrame, m_bits: int = 1 << 20, k: int = 7, n_buckets: int = N_BUCKETS
-) -> DataFrame:
-    """The 10^12-url variant: per-bucket state is a FIXED-SIZE Bloom
-    filter (``m_bits`` bits), so total state is exactly
-    n_buckets × m_bits/8 bytes no matter how many urls stream through.
-    Guarantees: a url emitted once is NEVER re-emitted (no false
-    negatives — the md5 bit positions of an added url stay set); the
-    price is a documented false-positive rate (a never-seen url can be
-    wrongly dropped) that grows with fill factor — size m_bits for the
-    expected distinct-urls-per-bucket at fpp, exactly like the scorer's
-    membership filter (core/bloom.py).  Emitted rows carry a
-    ``saturated`` flag: true once the bucket's filter exceeds its design
-    fill (>50% bits set — the point past which fpp blows through the
-    (1/2)^k spec and fresh urls start silently dropping), so an
-    undersized filter is observable downstream instead of silent."""
-    bucketed = pages.select("url").withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    )
-    return bucketed.groupBy("bucket").applyInPandasWithState(
-        _make_bloom_dedup_fn(m_bits, k),
-        outputStructType=BLOOM_OUTPUT_SCHEMA,
-        stateStructType=BLOOM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

@@ -1,9 +1,11 @@
-"""Event-time tumbling-window aggregation as a streaming query.
+"""Event-time session windows over the events table, batch and stream.
 
-Batch/stream parity: ``windowed_counts`` builds the same logical plan for
-a static DataFrame and a streaming one (Structured Streaming's core
-promise); the test runs the stream with ``availableNow`` over the events
-parquet and asserts the result equals the batch query.
+``session_agg`` is the one session-window aggregation: the `sessionize`
+registry query runs it on a static DataFrame, and ``session_stats`` runs
+it on a streaming one (``stream_events``) with a watermark so that closed
+sessions finalize. One logical plan serves both (Structured Streaming's
+core promise); the test drains the stream with ``availableNow`` and
+asserts it equals the batch result.
 """
 from __future__ import annotations
 
@@ -13,42 +15,6 @@ from pyspark.sql import functions as F
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 )
-
-
-def windowed_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Tumbling event-time windows with a watermark for late data."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return (
-        src.groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            "event_type",
-            "n",
-        )
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    window: str = "2 hours",
-    slide: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """SLIDING event-time windows (each event lands in window/slide
-    buckets) — ONE definition for the batch `sliding_window` registry
-    query's aggregation shape and the streaming form (the parity test
-    drives both). Columns: (window_start, event_type, n)."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return (
-        src.groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            "event_type",
-            "n",
-        )
-    )
 
 
 def session_agg(events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
@@ -80,19 +46,3 @@ def session_stats(events: DataFrame, gap: str = "30 minutes", watermark: str = "
 def stream_events(spark: SparkSession, events_dir: str) -> DataFrame:
     """FileStreamSource over a DIRECTORY of events parquet files."""
     return spark.readStream.schema(EVENTS_SCHEMA).parquet(events_dir)
-
-
-def run_available_now(spark: SparkSession, events_dir: str, checkpoint_dir: str) -> list:
-    """Drain the source with the availableNow trigger into a memory sink;
-    returns the collected rows (complete mode — windowed counts)."""
-    q = (
-        windowed_counts(stream_events(spark, events_dir))
-        .writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.sql("SELECT * FROM win_counts").collect()

@@ -1,7 +1,7 @@
-"""Physical-plan audit helpers.
+"""Physical-plan audit helpers for the plan-lock tests.
 
-Used by tests to LOCK IN plan properties (a regression that un-prunes a
-scan or de-broadcasts a join fails CI, not just a benchmark)."""
+They LOCK IN plan properties: a regression that un-prunes a scan or
+de-broadcasts a join fails the suite, not just a benchmark."""
 from __future__ import annotations
 
 import re

@@ -24,15 +24,12 @@ def test_cer_wer_values():
 def test_udf_parity(spark):
     from pyspark.sql import functions as F
 
-    from post_ocr_corretion_spark.functions.udfs import cer_udf, wer_udf
+    from post_ocr_corretion_spark.functions.udfs import wer_udf
 
     pairs = [("kitten", "sitting"), ("a b c", "a x c"), ("", "")]
     df = spark.createDataFrame(pairs, "h string, r string")
-    rows = df.select(
-        cer_udf(F.col("h"), F.col("r")).alias("c"), wer_udf(F.col("h"), F.col("r")).alias("w")
-    ).collect()
+    rows = df.select(wer_udf(F.col("h"), F.col("r")).alias("w")).collect()
     for (h, r), row in zip(pairs, rows):
-        assert abs(row.c - cer(h, r)) < 1e-12
         assert abs(row.w - wer(h, r)) < 1e-12
 
 

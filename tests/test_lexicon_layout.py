@@ -1,38 +1,6 @@
-"""A3/J1 as physical layout: partition-by-bucket write + partition-pruned
-bucket lookup."""
+"""The lexicon's distributed dictionary encode against a global
+row_number()."""
 from __future__ import annotations
-
-import re
-
-from post_ocr_corretion_spark.datagen.wordlist import COMMON_WORDS
-from post_ocr_corretion_spark.operators.lexicon import (
-    build_lexicon,
-    read_lexicon_bucket,
-    write_lexicon_partitioned,
-)
-from post_ocr_corretion_spark.plans.audit import formatted_plan
-
-
-def test_bucket_partition_pruning(spark, docs_rows, tmp_path):
-    docs = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for r in docs_rows], "doc_id long, text string"
-    )
-    lex = build_lexicon(spark, docs, COMMON_WORDS)
-    path = str(tmp_path / "lexicon")
-    write_lexicon_partitioned(lex, path)
-
-    full = {(r.word, r.bucket) for r in spark.read.parquet(path).collect()}
-    assert full == {(r.word, r.bucket) for r in lex.collect()}
-
-    some_bucket = next(iter(full))[1]
-    pruned = read_lexicon_bucket(spark, path, some_bucket)
-    got = {r.word for r in pruned.collect()}
-    want = {w for w, b in full if b == some_bucket}
-    assert got == want
-
-    plan = formatted_plan(pruned)
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "bucket" in m.group(1)  # the predicate reached the scan as a partition filter
 
 
 def test_dict_encode_distributed_equals_global_rank(spark):

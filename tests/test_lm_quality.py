@@ -67,7 +67,7 @@ def test_fit_folds_vocab_into_the_unigram_scan(spark):
     rescan the corpus parquet; |V| and the unigram rows must equal the
     retired two-scan formulation exactly."""
     from post_ocr_corretion_spark.operators.lm_quality import _doc_bigrams
-    from post_ocr_corretion_spark.plans.audit import formatted_plan
+    from plan_audit import formatted_plan
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     bigrams, unigrams, vocab = bigram_lm_fit(docs)

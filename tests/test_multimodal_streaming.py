@@ -1,5 +1,5 @@
-"""Multimodal: REAL PNG/WAV decode (core/media.py), fake fallback for
-formats needing external codecs, and Structured Streaming parity."""
+"""Multimodal: REAL PNG/WAV decode (core/media.py) and the fake fallback
+for formats needing external codecs."""
 from __future__ import annotations
 
 import pytest
@@ -112,19 +112,6 @@ def test_wav_roundtrip_and_features():
     assert f[0] == 500 and f[2] == 8000
 
 
-def test_resize_nearest():
-    import numpy as np
-
-    from post_ocr_corretion_spark.core.media import resize_nearest
-
-    img = np.arange(24, dtype=np.uint8).reshape(4, 6)
-    up = resize_nearest(img, (8, 12))
-    assert up.shape == (8, 12)
-    assert (up[::2, ::2] == img).all()
-    down = resize_nearest(img, (2, 3))
-    assert down.shape == (2, 3)
-
-
 def test_real_decodes_flow_through_spark(spark):
     """PNG/JPEG/WAV blobs report their real decoder and real stats; only
     video falls back to the fake."""
@@ -164,26 +151,6 @@ def test_extract_features_plumbing(spark):
     # determinism: a second run yields identical features
     again = {r.blob_id: r.features for r in extract_features(blobs).collect()}
     assert all(again[i] == by_id[i].features for i in range(12))
-
-
-def test_streaming_matches_batch(spark, tmp_path):
-    from post_ocr_corretion_spark.streaming.windows import run_available_now, windowed_counts
-
-    import os
-
-    sf = "/root/testdata/sf0.001"
-    events_dir = tmp_path / "events"
-    events_dir.mkdir()
-    os.symlink(f"{sf}/events.parquet", events_dir / "events.parquet")
-    got = {
-        (r.window_start, r.event_type): r.n
-        for r in run_available_now(spark, str(events_dir), str(tmp_path / "ckpt"))
-    }
-    batch = {
-        (r.window_start, r.event_type): r.n
-        for r in windowed_counts(spark.read.parquet(f"{sf}/events.parquet")).collect()
-    }
-    assert got == batch and len(got) > 0
 
 
 def test_corrupt_real_format_bytes_fall_back_not_crash():

@@ -2,7 +2,7 @@
 from __future__ import annotations
 
 import __spark_entry__ as em
-from post_ocr_corretion_spark.plans.audit import (
+from plan_audit import (
     assert_columns_pruned,
     count_exchanges,
     formatted_plan,
@@ -33,7 +33,7 @@ def test_band_join_is_join_free_window(spark):
     count — the plan must contain a Window over the events scan and NO
     join at all (the old BroadcastHashJoin materialized every in-band
     pair before aggregating)."""
-    from post_ocr_corretion_spark.plans.audit import formatted_plan
+    from plan_audit import formatted_plan
 
     plan = formatted_plan(em.queries()["j3_band_join"](spark, SF))
     assert "Window" in plan
@@ -58,7 +58,7 @@ def test_flagship_udf_mode_shape(spark):
     import re
 
     from post_ocr_corretion_spark.pipeline import run_pipeline
-    from post_ocr_corretion_spark.plans.audit import formatted_plan
+    from plan_audit import formatted_plan
 
     plan = formatted_plan(run_pipeline(spark, "/root/testdata/sf0.001"))
     assert len(re.findall(r"^\(\d+\) MapInPandas", plan, re.M)) == 1
@@ -75,7 +75,7 @@ def test_no_row_wise_python_in_any_registry_query(spark):
     (test_flagship_udf_mode_shape) and cost ~10 s each to build, so the
     sweep skips them; streaming entries can't explain on a batch session
     and prove the same property in their own suites."""
-    from post_ocr_corretion_spark.plans.audit import formatted_plan
+    from plan_audit import formatted_plan
 
     sf = "/root/testdata/sf0.001"
     skip = {
@@ -114,7 +114,7 @@ def test_d5_gated_plan_has_no_single_task_sort(spark):
     distributed plan's only window is partitioned by pid."""
     import re
 
-    from post_ocr_corretion_spark.plans.audit import formatted_plan
+    from plan_audit import formatted_plan
 
     plan = formatted_plan(em.queries()["d5_word_ids"](spark, SF))
     assert "SinglePartition" not in plan, "single-task exchange in the d5 plan"
@@ -129,7 +129,7 @@ def test_d5_gated_plan_has_no_single_task_sort(spark):
 def test_sessionize_plans_native_session_window(spark):
     """The sessionize entry must use Spark's native session-window
     aggregation (no per-row Python, one shuffle on the grouping key)."""
-    from post_ocr_corretion_spark.plans.audit import formatted_plan
+    from plan_audit import formatted_plan
 
     plan = formatted_plan(em.queries()["sessionize"](spark, SF))
     assert "session_window" in plan
@@ -140,7 +140,7 @@ def test_pii_redact_is_shuffle_free_and_pruned(spark):
     """redact_pii composes into the scan: per-row regexp work only —
     ZERO exchanges — and the documents scan never deserializes the
     unused columns."""
-    from post_ocr_corretion_spark.plans.audit import count_exchanges
+    from plan_audit import count_exchanges
 
     df = em.queries()["pii_redact"](spark, SF)
     assert count_exchanges(df) == 0
@@ -164,7 +164,7 @@ def test_substring_spans_plan_shape(spark):
     reads only (doc_id, text)."""
     import re
 
-    from post_ocr_corretion_spark.plans.audit import formatted_plan
+    from plan_audit import formatted_plan
 
     df = em.queries()["repeated_ngram_spans"](spark, SF)
     plan = formatted_plan(df)
@@ -177,7 +177,7 @@ def test_substring_spans_plan_shape(spark):
 def test_substring_clean_is_pure_catalyst(spark):
     """The scrub form keeps token filtering in an exists() HOF — no
     Python eval of any kind in the plan."""
-    from post_ocr_corretion_spark.plans.audit import formatted_plan
+    from plan_audit import formatted_plan
 
     plan = formatted_plan(em.queries()["substring_dedup_clean"](spark, SF))
     assert "EvalPython" not in plan and "MapInPandas" not in plan
@@ -188,7 +188,7 @@ def test_shuffle_shards_has_no_global_sort(spark):
     no SinglePartition exchange, every window partitioned."""
     import re
 
-    from post_ocr_corretion_spark.plans.audit import formatted_plan
+    from plan_audit import formatted_plan
 
     plan = formatted_plan(em.queries()["shuffle_shards"](spark, SF))
     assert "SinglePartition" not in plan
@@ -202,7 +202,7 @@ def test_pq_encode_is_map_only(spark):
     from pyspark.sql import functions as F
 
     from post_ocr_corretion_spark.operators.pq import pq_encode
-    from post_ocr_corretion_spark.plans.audit import count_exchanges, formatted_plan
+    from plan_audit import count_exchanges, formatted_plan
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -217,7 +217,7 @@ def test_r6_tpch_shapes_broadcast_and_lower_subqueries(spark):
     """q8/q9 broadcast every dimension; q20's nested INs lower to
     left-semi joins; q21's EXISTS/NOT EXISTS lower to one semi- and one
     anti-join — never a cartesian."""
-    from post_ocr_corretion_spark.plans.audit import formatted_plan
+    from plan_audit import formatted_plan
 
     for name in ["tpch_q8_market_share", "tpch_q9_product_profit"]:
         assert "BroadcastHashJoin" in join_strategies(em.queries()[name](spark, SF)), name
@@ -236,7 +236,7 @@ def test_ordered_dup_windows_never_partition_by_raw_gram(spark):
     window spec that carries gh must also carry the time bucket."""
     import re
 
-    from post_ocr_corretion_spark.plans.audit import formatted_plan
+    from plan_audit import formatted_plan
 
     plan = formatted_plan(em.queries()["dup_windows_ordered"](spark, SF))
     specs = re.findall(r"windowspecdefinition\((.*?)specifiedwindowframe", plan)
@@ -249,7 +249,7 @@ def test_ordered_dup_windows_never_partition_by_raw_gram(spark):
 def test_url_canonicalize_is_pure_projection(spark):
     """Canonicalization is a zero-exchange Catalyst expression chain —
     regexps and array HOFs inside whole-stage codegen, no Python."""
-    from post_ocr_corretion_spark.plans.audit import count_exchanges, formatted_plan
+    from plan_audit import count_exchanges, formatted_plan
 
     df = em.queries()["url_canonicalize"](spark, SF)
     assert count_exchanges(df) == 0
@@ -261,7 +261,7 @@ def test_mixture_sample_never_shuffles_the_corpus(spark):
     """The weight/total tables ride broadcast joins back onto the
     corpus; the only exchange feeds the tiny per-source count aggregate
     (a two-column projection), never the full rows."""
-    from post_ocr_corretion_spark.plans.audit import formatted_plan, join_strategies
+    from plan_audit import formatted_plan, join_strategies
 
     df = em.queries()["mixture_sample"](spark, SF)
     strategies = join_strategies(df)
@@ -275,7 +275,7 @@ def test_mixture_sample_never_shuffles_the_corpus(spark):
 def test_cms_probe_broadcasts_the_sketch(spark):
     """Estimation joins candidates against the d×w sketch — the sketch
     side must broadcast (it is bounded by construction)."""
-    from post_ocr_corretion_spark.plans.audit import join_strategies
+    from plan_audit import join_strategies
 
     assert "BroadcastHashJoin" in join_strategies(
         em.queries()["cms_heavy_hitters"](spark, SF)
@@ -286,7 +286,7 @@ def test_bm25_broadcasts_stats_and_df(spark):
     """The per-term df table and the single-row corpus stats broadcast;
     the token stream is filtered to the query terms BEFORE any shuffle
     (isin shows up as a pushed/early filter, not post-join)."""
-    from post_ocr_corretion_spark.plans.audit import formatted_plan, join_strategies
+    from plan_audit import formatted_plan, join_strategies
 
     df = em.queries()["bm25_rank"](spark, SF)
     assert "BroadcastHashJoin" in join_strategies(df)
@@ -297,7 +297,7 @@ def test_quality_filter_is_pure_catalyst_and_keyed_joins(spark):
     """The composite quality filter plans NO Python stage of any kind
     (every rule is Catalyst expressions over the component aggregates)
     and composes via KEYED joins only — never a cartesian product."""
-    from post_ocr_corretion_spark.plans.audit import formatted_plan
+    from plan_audit import formatted_plan
 
     plan = formatted_plan(em.queries()["quality_filter"](spark, SF))
     assert "BatchEvalPython" not in plan
@@ -315,7 +315,7 @@ def test_incremental_dedup_prunes_state_and_semi_joins(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from post_ocr_corretion_spark.operators.dedup import dedup_keep_incremental
-    from post_ocr_corretion_spark.plans.audit import (
+    from plan_audit import (
         assert_columns_pruned,
         formatted_plan,
     )

@@ -24,7 +24,7 @@ def test_profile_stats_exact(spark):
 def test_profile_single_scan(spark):
     """The melt reads the source once: exactly one scan node in the
     plan regardless of profiled column count."""
-    from post_ocr_corretion_spark.plans.audit import formatted_plan
+    from plan_audit import formatted_plan
 
     import re
 

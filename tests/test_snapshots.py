@@ -111,7 +111,7 @@ def test_partitioned_snapshot_prunes(spark, tmp_path):
     filtering on the partition column shows partition pruning in the
     plan and rows are intact."""
     from post_ocr_corretion_spark.io.snapshots import SnapshotWriter
-    from post_ocr_corretion_spark.plans.audit import formatted_plan
+    from plan_audit import formatted_plan
 
     w = SnapshotWriter(str(tmp_path))
     df = spark.createDataFrame(

@@ -118,36 +118,3 @@ def test_session_window_batch_stream_parity(spark, tmp_path):
     streamed = {tuple(r) for r in spark.sql("SELECT * FROM sess_stats").collect()}
     batch = {tuple(r) for r in session_stats(batch_df).collect()}
     assert streamed == batch and len(batch) > 0
-
-
-def test_sliding_window_batch_stream_parity(spark, tmp_path):
-    """sliding_counts (overlapping 2h-every-1h windows — each event in
-    two buckets): the streaming drain equals the batch result; the batch
-    semantics are oracle-checked vs the two-shift UNION formulation via
-    the `sliding_window` registry query."""
-    import shutil
-
-    from post_ocr_corretion_spark.streaming.windows import sliding_counts, stream_events
-
-    src = str(tmp_path / "events_dir")
-    shutil.os.makedirs(src)
-    batch_df = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    batch_df.coalesce(1).write.mode("append").parquet(src)
-
-    q = (
-        sliding_counts(stream_events(spark, src))
-        .writeStream.format("memory")
-        .queryName("slide_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    streamed = {tuple(r) for r in spark.sql("SELECT * FROM slide_counts").collect()}
-    batch = {tuple(r) for r in sliding_counts(batch_df).collect()}
-    assert streamed == batch and len(batch) > 0
-    # sliding really multiplies buckets: more window rows than tumbling
-    from post_ocr_corretion_spark.streaming.windows import windowed_counts
-
-    assert len(batch) > windowed_counts(batch_df).count()

@@ -97,52 +97,6 @@ def test_ttl_evicts_and_still_dedups_within_window(spark, tmp_path):
     assert spark.read.parquet(sink).count() == 90
 
 
-def test_bloom_dedup_bounded_state_no_false_negatives(spark, tmp_path):
-    """Bloom-state dedup: fixed-size state, urls never re-emitted across
-    drains (no false negatives), and at a sane fill factor nearly all
-    first sightings get through."""
-    from post_ocr_corretion_spark.streaming.dedup import first_seen_urls_bloom
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    sink = str(tmp_path / "sink")
-
-    def drain():
-        q = (
-            first_seen_urls_bloom(
-                spark.readStream.schema(URL_SCHEMA).parquet(src), m_bits=1 << 14, k=7
-            )
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    urls = [f"https://h{i % 5}.example.com/bloom/p{i}" for i in range(300)]
-    spark.createDataFrame([(u,) for u in urls], URL_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    drain()
-    out1 = [r.url for r in spark.read.parquet(sink).collect()]
-    assert len(out1) == len(set(out1))  # never a duplicate
-    # at 300 urls over 64 buckets × 16 Kib bits the filter is nearly
-    # empty — fp losses should be zero or negligible
-    assert len(out1) >= 295
-
-    # re-deliver everything plus 50 new urls: repeats NEVER re-emit
-    more = urls + [f"https://hx.example.com/bloom/n{i}" for i in range(50)]
-    spark.createDataFrame([(u,) for u in more], URL_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    drain()
-    out2 = [r.url for r in spark.read.parquet(sink).collect()]
-    assert len(out2) == len(set(out2))  # no false negatives ever
-    assert 45 <= len(out2) - len(out1) <= 50  # the new urls (minus fp losses)
-
-
 def test_full_row_ttl_dedup(spark, tmp_path):
     """first_seen_pages with ttl: full rows pass through, within-window
     repeats suppressed, expired urls re-emit with their payload."""
@@ -353,26 +307,6 @@ def test_native_drop_duplicates_within_watermark(spark, tmp_path):
     spark.createDataFrame(urls[:5], TS_SCHEMA).coalesce(1).write.mode("append").parquet(src)
     drain()
     assert spark.read.parquet(sink).count() == 10
-
-
-def test_bloom_saturation_flag():
-    """VERDICT r3 item 8: an undersized Bloom filter must FLAG saturation
-    (set-bit fraction past the 50% design fill) on emitted rows instead
-    of silently dropping fresh urls at a blown fpp."""
-    import pandas as pd
-
-    from post_ocr_corretion_spark.streaming.dedup import _make_bloom_dedup_fn
-
-    fn = _make_bloom_dedup_fn(m_bits=64, k=7)
-    st = _FakeState()
-    # 3 urls × 7 hashes ≤ 21 of 64 bits: under design fill
-    small = pd.DataFrame({"url": [f"u{i}" for i in range(3)]})
-    out1 = pd.concat(list(fn((0,), iter([small]), st)), ignore_index=True)
-    assert not out1["saturated"].any()
-    # +100 urls drive the 64-bit filter far past 50% set bits
-    big = pd.DataFrame({"url": [f"v{i}" for i in range(100)]})
-    out2 = pd.concat(list(fn((0,), iter([big]), st)), ignore_index=True)
-    assert len(out2) > 0 and out2["saturated"].all()
 
 
 def test_ttl_sweep_not_armed_before_entry_expiry(spark, tmp_path):

@@ -42,3 +42,28 @@ def test_streaming_job_exactly_once_and_parity(spark, tmp_path):
     }
     for r in sink.select("url", "corrected_text").collect():
         assert r.corrected_text == batch[r.url], r.url
+
+
+def test_timed_out_drain_exits_nonzero(spark, tmp_path, monkeypatch, capsys):
+    """A drain that does not finish in time is stopped; the job must not
+    report the partial sink as a complete run."""
+    import sys
+    from pathlib import Path
+
+    from conftest import SF_SMOKE as sf
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
+    from run_streaming_correct import main
+
+    from post_ocr_corretion_spark.sources.webpages import read_documents, webpages
+
+    src, out, ckpt = str(tmp_path / "src"), str(tmp_path / "out"), str(tmp_path / "ckpt")
+    docs = read_documents(spark, sf).filter(F.col("doc_id") < 5)
+    webpages(docs).coalesce(1).write.parquet(src)
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda self, timeout=None: False)
+    args = ["--src", src, "--out", out, "--checkpoint", ckpt, "--lexicon-sf", sf, "--available-now"]
+    assert main(args) != 0
+    captured = capsys.readouterr()
+    assert "rows_in_sink" not in captured.out
+    assert "partial" in captured.err

@@ -64,46 +64,3 @@ def test_short_docs_emit_nothing(spark):
         [(0, "0123456789")], "doc_id long, text string"  # 10 < k + w - 1
     )
     assert winnow_fingerprints(docs).count() == 0
-
-
-def test_overlap_pairs_find_plagiarized_pair_only(spark):
-    from post_ocr_corretion_spark.operators.winnowing import winnow_overlap_pairs
-
-    rng = random.Random(7)
-    common = "a long shared passage that both documents copied verbatim"
-    docs = spark.createDataFrame(
-        [
-            (0, "".join(rng.choice("qrs") for _ in range(60)) + common),
-            (1, common + "".join(rng.choice("tuv") for _ in range(60))),
-            (2, "".join(rng.choice("wxyz ") for _ in range(120))),
-        ],
-        "doc_id long, text string",
-    )
-    fps = winnow_fingerprints(docs)
-    out = winnow_overlap_pairs(fps, min_shared=2).collect()
-    assert [(r["doc_a"], r["doc_b"]) for r in out] == [(0, 1)]
-    assert out[0]["shared"] >= 2
-
-
-def test_overlap_pairs_hot_hash_cap_drops_boilerplate(spark):
-    from post_ocr_corretion_spark.operators.winnowing import winnow_overlap_pairs
-
-    # 5 docs all ending in identical boilerplate: hashes selected deep
-    # inside the shared region appear in all 5 postings and are dropped
-    # by a cap of 4 (boundary-straddling windows can still select a
-    # boiler gram in only SOME docs — those legitimately survive), so
-    # the capped overlap mass must collapse relative to the uncapped one
-    boiler = "standard footer text appended to every page"
-    docs = spark.createDataFrame(
-        [(i, f"unique{i:03d}head " * 3 + boiler) for i in range(5)],
-        "doc_id long, text string",
-    )
-    fps = winnow_fingerprints(docs)
-    uncapped = winnow_overlap_pairs(fps, min_shared=1, max_per_hash=5).collect()
-    capped = winnow_overlap_pairs(fps, min_shared=1, max_per_hash=4).collect()
-    assert len(uncapped) == 10  # all pairs share the boilerplate
-    assert sum(r["shared"] for r in capped) < sum(r["shared"] for r in uncapped) / 2
-    # and every hash common to ALL docs is provably gone from the capped join
-    assert max((r["shared"] for r in capped), default=0) < min(
-        r["shared"] for r in uncapped
-    )
