@@ -1388,10 +1388,11 @@ def q_a15_dataset_analysis(spark, sf):
     """A15 (analisys.py:34-51): corpus-level uncommon-word ratio against
     the shipped word list (the NLTK stand-in)."""
     from post_ocr_corretion_spark.datagen.wordlist import COMMON_WORDS
+    from post_ocr_corretion_spark.session import local_frame
 
     d = _t(spark, sf, "documents")
     words = d.select(F.explode(F.split("text", " ", -1)).alias("w")).filter(F.length("w") > 0)
-    lex = spark.createDataFrame([(w,) for w in sorted(set(COMMON_WORDS))], "lw string")
+    lex = local_frame(spark, [(w,) for w in sorted(set(COMMON_WORDS))], "lw string")
     flagged = words.join(F.broadcast(lex), words.w == lex.lw, "left")
     return flagged.agg(
         F.count(F.lit(1)).alias("total_words"),
@@ -2582,6 +2583,8 @@ def q_cms_counts(spark, sf):
     is what the exact groupBy-count oracle checks. The sketch decode is a
     driver-side read of one bounded artifact (like the IVF centroid
     fit), not a data-sized collect."""
+    from post_ocr_corretion_spark.session import local_frame
+
     ev = _t(spark, sf, "events")
     blob = bytes(
         ev.agg(
@@ -2596,7 +2599,7 @@ def q_cms_counts(spark, sf):
     )
     keys = sorted(r.event_type for r in ev.select("event_type").distinct().collect())
     rows = [(k, int(jcms.estimateCount(k))) for k in keys]
-    return spark.createDataFrame(rows, "event_type string, n long")
+    return local_frame(spark, rows, "event_type string, n long")
 
 
 def q_unpivot_stats(spark, sf):

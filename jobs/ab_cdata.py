@@ -2,10 +2,12 @@
 HEAD scan_blocks vs the r5 commit's scan_blocks, alternated in ONE
 process over the identical sf0.001 page corpus (500 rendered pages)."""
 import importlib.util
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 import pyarrow.parquet as pq  # noqa: E402
 
 from post_ocr_corretion_spark.core.extraction import BLOCK_TAGS, PRUNE_TAGS  # noqa: E402
@@ -19,7 +21,7 @@ def load(path, name):
     return mod
 
 wt = sys.argv[1] if len(sys.argv) > 1 else "/tmp/r5wt"  # git worktree of the baseline commit
-head = load("/root/repo/post_ocr_corretion_spark/core/fasthtml.py", "fh_head")
+head = load(os.path.join(ROOT, "post_ocr_corretion_spark/core/fasthtml.py"), "fh_head")
 r5 = load(f"{wt}/post_ocr_corretion_spark/core/fasthtml.py", "fh_r5")
 
 t = pq.read_table("/root/testdata/sf0.001/documents.parquet").to_pylist()

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _sym_string(word: Column) -> Column:
     """'abc' → '<a><b><c>' (one regexp_replace; DuckDB:
@@ -125,8 +127,8 @@ def bpe_fit(
         lft, rgt, cnt = top[0]["lft"], top[0]["rgt"], top[0]["cnt"]
         merges.append((step, lft, rgt, lft + rgt, int(cnt)))
         syms = _apply_merge(syms, lft, rgt).localCheckpoint()
-    return spark.createDataFrame(
-        merges, "step int, lft string, rgt string, merged string, cnt long"
+    return local_frame(
+        spark, merges, "step int, lft string, rgt string, merged string, cnt long"
     )
 
 

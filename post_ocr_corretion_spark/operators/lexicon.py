@@ -9,6 +9,10 @@ neighborhood table that operators/candidates.py equi-joins against —
 a SymSpell-style formulation with identical pinned semantics
 (core/candidates.py docstring) and no per-row regex compilation.
 
+The English word list enters as an Arrow local relation
+(session.local_frame), a ``LocalTableScan`` leaf of the lexicon job: no
+Python task and no Python worker pool besides the flagship's fused stage.
+
 Scale: the neighborhood table has sum(len(word)) rows (~7× lexicon).
 It is computed once per corpus, is hash-partitioned on ``delkey`` (the
 join key), and every downstream join is an equi-join — broadcastable when
@@ -22,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import bucket_key, clean_text, remove_punctuation, words_on_space
 from ..plans.parallelism import TOKEN_TASK_BYTES, spread
+from ..session import local_frame
 
 
 def corpus_words(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -80,8 +85,9 @@ def build_lexicon(
     with the A3 bucket column. Columns: word, bucket.  ``bucketed=False``
     skips the bucket repartition shuffle — the layout only pays off for
     the Catalyst candidate equi-joins; the UDF-mode pipeline just writes
-    the word column to the scorer sidecar."""
-    base = spark.createDataFrame([(w,) for w in sorted(set(base_words))], "word string")
+    the word column to the scorer sidecar. ``base_words`` become a local
+    relation (session.local_frame), so the job runs no Python task."""
+    base = local_frame(spark, [(w,) for w in sorted(set(base_words))], "word string")
     # r9: ONE distinct over the raw token stream ∪ base words — the old
     # corpus_words(docs).union(base).distinct() aggregated twice (an
     # extra exchange + stage chain over the vocabulary for the same set:

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..session import local_frame
 from .pq import Codebooks, _assign_and_residual, _sub, ivfpq_fit
 from .similarity import _centroid_scores, cosine, dot
 
@@ -51,7 +52,8 @@ def _lists_df(spark, Rs: list[Rotation], cbs: list[Codebooks]) -> DataFrame:
         )
         for l in range(len(Rs))
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "list_id int, rt array<array<double>>, cb array<array<array<double>>>",
     )

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 BLOB_SCHEMA = T.StructType(
     [
         T.StructField("blob_id", T.LongType(), False),
@@ -201,6 +203,6 @@ def synthetic_blobs(spark, n: int = 32) -> DataFrame:
     (gradient patterns; every other image blob is JPEG, core/jpeg.py) and
     REAL WAV clips (sine-ish integer waves); video stays an opaque fake
     container (codecs out of scope)."""
-    return spark.createDataFrame(
-        [(i, kind, media, meta) for i, kind, media, meta, _ in _blob_rows(n)], BLOB_SCHEMA
+    return local_frame(
+        spark, [(i, kind, media, meta) for i, kind, media, meta, _ in _blob_rows(n)], BLOB_SCHEMA
     )

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..session import local_frame
 from .similarity import cosine, dot
 
 Codebooks = list[list[list[float]]]  # [m][ksub][d/m]
@@ -138,7 +139,7 @@ def pq_fit(
         *[_argmin_code_col(F.col(vec_col), F.element_at(F.col("_cb"), s + 1), s, sub_d) for s in range(m)]
     )
     for _ in range(iters):
-        cb_df = spark.createDataFrame([(cb,)], "_cb: array<array<array<double>>>")
+        cb_df = local_frame(spark, [(cb,)], "_cb: array<array<array<double>>>")
         work = emb.crossJoin(F.broadcast(cb_df))
         stats = (
             work.select(F.posexplode(assigns).alias("s", "cl"), F.col(vec_col).alias("_v"))

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from ..core.textops import BOS, EOS, MAX_SEQUENCE_LEN, PAD, SPECIAL_SYMBOLS, UNK
 from ..functions.text import char_array, clean_text, despace, mark_spaces
 from ..plans.parallelism import TOKEN_TASK_BYTES, spread
+from ..session import local_frame
 
 
 def split_to_fit(df: DataFrame, text_col: str = "seq", max_len: int = MAX_SEQUENCE_LEN) -> DataFrame:
@@ -122,8 +123,8 @@ def char_vocabulary(seqs: DataFrame, seq_col: str = "output_seq") -> DataFrame:
     indexed = chars.select(
         "token", (F.row_number().over(W.orderBy("token")) + len(SPECIAL_SYMBOLS) - 1).alias("idx")
     )
-    specials = seqs.sparkSession.createDataFrame(
-        [(s, i) for i, s in enumerate(SPECIAL_SYMBOLS)], "token string, idx int"
+    specials = local_frame(
+        seqs.sparkSession, [(s, i) for i, s in enumerate(SPECIAL_SYMBOLS)], "token string, idx int"
     )
     return specials.unionByName(indexed)
 

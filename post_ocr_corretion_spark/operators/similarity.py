@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..plans.parallelism import CPU_TASK_BYTES, spread
+from ..session import local_frame
 
 LSH_SEED = 20240616
 
@@ -355,7 +356,7 @@ def kmeans_centroids_distributed(
     )
     best = (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
     for _ in range(iters):
-        cdf = spark.createDataFrame([(C,)], "_cents: array<array<double>>")
+        cdf = local_frame(spark, [(C,)], "_cents: array<array<double>>")
         stats = (
             emb_n.crossJoin(F.broadcast(cdf))
             .select(F.explode(F.array(best)).alias("list_id"), F.col("vn").alias("_v"))

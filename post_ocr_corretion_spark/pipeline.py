@@ -32,7 +32,9 @@ Above AUTO_BLOOM_VOCAB_THRESHOLD
 words the bigram counts come from a Spark aggregation (bit-identical to
 the local fit) and membership is a Bloom filter (documented fpp trade).
 Candidate generation runs on DISTINCT error words (vocabulary-bounded),
-never per occurrence.
+never per occurrence. The shipped word list enters the lexicon job as an
+Arrow local relation (session.local_frame), so a run starts Python
+workers for its one fused stage only.
 """
 from __future__ import annotations
 

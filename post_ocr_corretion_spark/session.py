@@ -1,15 +1,23 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and the two helpers that
+hand driver-side code and data to a session.
 
-local[N] in the sandbox stands in for an N-executor cluster; every setting
-below is also the right default for a real multi-executor deployment
-(shuffle partition count scaled to cores, AQE on with skew-join splitting,
-Arrow batches sized for the pandas-UDF stages).
+local[N] stands in for an N-executor cluster; every setting below is also
+the right default for a real multi-executor deployment (shuffle partition
+count scaled to cores, AQE on with skew-join splitting, Arrow batches sized
+for the pandas-UDF stages).
+
+``ensure_package_shipped`` makes the package importable in the Python
+workers. ``local_frame`` is the one way driver-side rows become a
+DataFrame: an Arrow table the JVM scans as a local relation, with no
+Python task.
 """
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:
@@ -39,6 +47,27 @@ def ensure_package_shipped(spark: SparkSession) -> None:
                         z.write(full, os.path.relpath(full, root))
     sc.addPyFile(zpath)
     sc._pocs_pkg_shipped = True
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple], schema: StructType | str) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` typed by ``schema`` (a
+    StructType or a DDL string), handed to the JVM once as an Arrow
+    table. The plan leaf is a ``LocalTableScan``: no Python task runs to
+    build it, whatever ``spark.sql.execution.arrow.pyspark.enabled`` says.
+    ``createDataFrame`` on a Python list instead parallelizes the rows as
+    a pickled RDD, whose scan forks a Python worker pool of its own."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=field.type) for col, field in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(

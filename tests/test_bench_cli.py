@@ -6,8 +6,9 @@ session must regenerate; this test makes forgetting a suite failure)."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def test_plans_history_table_covers_every_bench_artifact():

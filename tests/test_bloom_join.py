@@ -60,8 +60,9 @@ def test_prefilter_sits_below_the_join_in_plan(spark):
     the fact side BELOW the join — pruned rows never reach the join (or,
     at scale, its exchange)."""
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as em
 
     plan = (

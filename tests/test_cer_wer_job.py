@@ -3,6 +3,7 @@ resume, counters)."""
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 from post_ocr_corretion_spark.core.levenshtein import cer, edit_distance, wer
 
@@ -36,7 +37,7 @@ def test_udf_parity(spark):
 def test_job_entry_snapshot_and_resume(spark, tmp_path, capsys):
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
     import run_extract_correct as job
 
     out = str(tmp_path / "out")
@@ -60,7 +61,7 @@ def test_job_noop_sink_same_counters(spark, tmp_path, capsys):
     observed counters as the snapshot-committed run."""
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
     import run_extract_correct as job
 
     out = str(tmp_path / "out")

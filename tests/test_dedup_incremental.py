@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -120,7 +121,7 @@ def test_transitive_chain_through_prior_drops_whole_component(spark):
 def test_incremental_job_two_batches(spark, tmp_path, capsys):
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
     import run_dedup_keep as job
 
     # synthetic sf dir: both batches in one documents.parquet, batch
@@ -182,7 +183,7 @@ def test_incremental_job_applies_post_dedup_stages(spark, tmp_path, capsys):
     counters ride the same single write action."""
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
     import run_dedup_keep as job
 
     sf = str(tmp_path / "sf")
@@ -216,7 +217,7 @@ def test_incremental_refuses_substring_scrub(tmp_path, capsys):
 
     import pytest as _pytest
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
     import run_dedup_keep as job
 
     with _pytest.raises(SystemExit) as exc:

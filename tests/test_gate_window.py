@@ -5,8 +5,9 @@ comment)."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 # the intended r8 window: the ENTIRE r5-stale remainder (47 — the
 # 2-round staleness bound hits exactly at r8), url_canonicalize (code +

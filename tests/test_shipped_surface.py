@@ -7,6 +7,9 @@ The scan reads only the AST: it collects every ``import`` and
 relative imports, and follows imports through package modules to a fixed
 point. A module that only tests import fails here; test tooling belongs
 under ``tests/``.
+
+The same AST read also pins how driver-side rows enter Spark: only
+``session.local_frame`` calls ``createDataFrame``.
 """
 from __future__ import annotations
 
@@ -75,3 +78,27 @@ def test_every_package_module_is_reached_from_a_shipped_root():
     assert not unreached, "modules no shipped root imports: " + ", ".join(
         m.removeprefix(PACKAGE + ".") for m in unreached
     )
+
+
+def test_driver_rows_enter_spark_only_through_local_frame():
+    """``createDataFrame`` on Python rows scans a pickled RDD and forks a
+    Python worker pool for it; ``session.local_frame`` hands the rows to
+    the JVM as one Arrow table. Only ``local_frame`` may call it."""
+    paths = [REPO / "__spark_entry__.py", *sorted((REPO / "jobs").glob("*.py")), *sorted((REPO / PACKAGE).rglob("*.py"))]
+    calls = []
+    for path in paths:
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = set()
+        if path == REPO / PACKAGE / "session.py":
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef) and fn.name == "local_frame":
+                    allowed.update(range(fn.lineno, fn.end_lineno + 1))
+        calls += [
+            f"{path.relative_to(REPO)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+            and node.lineno not in allowed
+        ]
+    assert not calls, "createDataFrame outside session.local_frame: " + ", ".join(sorted(calls))

@@ -9,8 +9,9 @@ from pyspark.sql import functions as F
 
 def test_streaming_job_exactly_once_and_parity(spark, tmp_path):
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
     from run_streaming_correct import main
 
     from post_ocr_corretion_spark.pipeline import run_pipeline
