@@ -27,7 +27,7 @@ SF_WORDS = (
 N_GENERATED = 400
 GEN_SEED = 20221206
 ROULETTE_SEEDS = (1, 7)
-D2_DOCS = 10  # distance-2 candidate generation costs ~0.2 s per distinct error word
+D2_DOCS = 30
 
 
 def generated_texts() -> list[str]:
