@@ -22,9 +22,13 @@ ASCII text; the reference's sentinel-letter escaping round-trip
 (:24-25,148-151) is replaced by this direct formulation — SURVEY.md §7.0).
 
 ``get_alternative_word`` mirrors correctionSentences.py:265-275: candidates
-always include (w, 1) and (w_nopunct, 1); exactly one distance-1 expansion
-runs (max distance 1, :160-161); patterns from BOTH w and w_nopunct are
-matched; results dedup on the (word, score) pair.
+always include (w, 1) and (w_nopunct, 1); patterns from BOTH w and
+w_nopunct are matched; results dedup on the (word, score) pair. At the
+pinned max distance 1 (:160-161) one round of distance-1 matching runs. At
+distance 2 (the report's §4.4 configuration) a second round matches every
+string one op away from a base, with multiplied scores: the lexicon words
+two ops away are exactly those strings' distance-1 matches, so both rounds
+use the one matcher (the deletion index, or ``distance1_matches``).
 """
 from __future__ import annotations
 
@@ -40,6 +44,9 @@ WORDCHAR_SET = frozenset(WORDCHAR)
 P_SUB = 0.7
 P_DEL = 0.15
 P_INS = 0.15
+# the reference's loop guard (correctionSentences.py:280-282): a round of
+# distance-2 expansion runs only while fewer candidates are held
+WORDS_FOR_GENERATION = 15
 
 
 def distance1_matches(w: str, lexicon: frozenset[str] | set[str]) -> set[tuple[str, float]]:
@@ -203,39 +210,47 @@ def get_alternative_word(
     word: str,
     lexicon: frozenset[str] | set[str],
     max_distance: int = 1,
-    words_for_generation: int = 15,
+    words_for_generation: int = WORDS_FOR_GENERATION,
     delidx: DeletionIndex | None = None,
 ) -> set[tuple[str, float]]:
     """correctionSentences.py:265-275 with the pinned decisions.
     ``word`` arrives lowercased (caller mirrors :261).
 
-    ``max_distance`` mirrors get_max_lev_distance: the pinned default is
-    1 (the code, correctionSentences.py:160-161); 2 (the report §4.4
-    configuration) is available behind the flag. Each extra round applies
-    one more op to the cumulative frontier with multiplied scores
-    (D7 applied to the pattern SET, :272), re-checks the loop guard
-    (≥ words_for_generation candidates stops expansion, :280-282), and
-    dedups on (word, score) pairs. Distance-1 results are identical to
-    the direct formulation in ``distance1_matches`` (tested)."""
+    ``max_distance`` mirrors get_max_lev_distance: 1 (the code,
+    correctionSentences.py:160-161) is the pinned default, 2 the report's
+    §4.4 configuration; any other value raises ValueError. Distance 1 adds
+    the distance-1 matches of both bases. Distance 2 runs two rounds, each
+    only while fewer than ``words_for_generation`` candidates are held (the
+    loop guard, :280-282): round 1 adds the bases' matches; round 2 takes
+    the round-1 frontier (the bases with score 1 and their
+    ``one_op_strings`` — D7 applied to the pattern SET, :272) and adds each
+    string's matches, the op score multiplied by each of its frontier
+    scores. The lexicon words two ops away are exactly the distance-1
+    matches of the strings one op away, so every round uses the one
+    matcher: the deletion index when ``delidx`` is given, else
+    ``distance1_matches``, which needs only ``in`` (a Bloom lexicon)."""
+    if max_distance not in (1, 2):
+        raise ValueError(f"max_distance must be 1 or 2, got {max_distance}")
+
+    def matches(s: str) -> set[tuple[str, float]]:
+        if delidx is not None:
+            return distance1_matches_indexed(s, lexicon, delidx)
+        return distance1_matches(s, lexicon)
+
     w_nopunct = remove_punctuation(word)
     candidates: set[tuple[str, float]] = {(word, 1.0), (w_nopunct, 1.0)}
-    if max_distance <= 1:
-        for base in {word, w_nopunct}:
-            if base:
-                if delidx is not None:
-                    candidates |= distance1_matches_indexed(base, lexicon, delidx)
-                else:
-                    candidates |= distance1_matches(base, lexicon)
+    bases = {b for b in (word, w_nopunct) if b}
+    if max_distance == 2 and words_for_generation <= len(candidates):
         return candidates
-
-    frontier: set[tuple[str, float]] = {(b, 1.0) for b in {word, w_nopunct} if b}
-    distance = 0
-    while max_distance > distance and words_for_generation > len(candidates):
-        grown: set[tuple[str, float]] = set()
-        for s, sc in frontier:
-            for t, op_sc in one_op_strings(s):
-                grown.add((t, sc * op_sc))
-        frontier |= grown
-        candidates |= {(t, sc) for t, sc in frontier if t and t in lexicon}
-        distance += 1
+    for b in bases:
+        candidates |= matches(b)
+    if max_distance == 1 or words_for_generation <= len(candidates):
+        return candidates
+    frontier: dict[str, set[float]] = {b: {1.0} for b in bases}
+    for b in bases:
+        for t, op in one_op_strings(b):
+            frontier.setdefault(t, set()).add(op)
+    for u, scores in frontier.items():
+        for v, op in matches(u):
+            candidates.update((v, sc * op) for sc in scores)
     return candidates

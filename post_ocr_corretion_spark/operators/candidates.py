@@ -1,5 +1,5 @@
-"""Distance-1 candidate generation as SymSpell-style equi-joins (D7/D8 +
-J1/J2, correctionSentences.py:108-151,265-275) — pinned semantics in
+"""Candidate generation as SymSpell-style equi-joins (D7/D8 + J1/J2,
+correctionSentences.py:108-151,265-275) — pinned semantics in
 core/candidates.py.
 
 The reference compiles a regex per edit pattern and scans Arrow buckets
@@ -14,8 +14,11 @@ against the lexicon's deletion-neighborhood table (operators/lexicon.py):
   inserts at the end, correctionSentences.py:143-145);
 
 plus the unconditional (w, 1.0) / (w_nopunct, 1.0) candidates
-(correctionSentences.py:269).  Everything is Catalyst; the only Python is
-the word-prob pandas UDF, which scores each batch's words as one array.
+(correctionSentences.py:269).  These joins are the only matcher: at max
+distance 2 they run a second time over the round-1 frontier (every string
+one op away from a base), each score multiplied by the frontier's.
+Everything is Catalyst; the only Python is the word-prob pandas UDF, which
+scores each batch's words as one array.
 
 Output ``cand_agg``: one row per error word with the pinned ORDERED batch
 (sorted base candidates, then +punct variants in the same order — see
@@ -32,14 +35,15 @@ err_word) and the word probabilities derive from that row, with no join.
 Scale: err-side is DISTINCT error words (vocabulary-bounded — dedup before
 generation is the big win at 10^12 docs); lex_del is the big side,
 hash-partitioned on its join keys. Catalyst broadcasts whichever side is
-small; with AQE the skew-join splitter handles hot delkeys.
+small; with AQE the skew-join splitter handles hot delkeys. At distance 2
+the err side is the round-1 frontier, about 74·len strings per error word.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..core.candidates import P_DEL, P_INS, P_SUB, WORDCHAR
+from ..core.candidates import P_DEL, P_INS, P_SUB, WORDCHAR, WORDS_FOR_GENERATION
 from ..functions.text import add_last_punctuation, remove_punctuation
 from ..functions.udfs import make_word_probs_array_udf
 
@@ -47,62 +51,23 @@ _WORDCHARS = list(WORDCHAR)
 
 
 def _deletion_keys(bases: DataFrame) -> DataFrame:
-    """(err_word, base) → (err_word, base, pos, delkey) for each position."""
+    """(err_word, base, sc) → (err_word, base, sc, pos, delkey) for each position."""
     b = F.col("base")
     return bases.select(
         "err_word",
         "base",
+        "sc",
         F.explode(F.sequence(F.lit(0), F.length(b) - 1)).alias("pos"),
     ).select(
         "err_word",
         "base",
+        "sc",
         "pos",
         F.concat(
             F.substring(b, 1, F.col("pos")),
             b.substr(F.col("pos") + 2, F.length(b) - F.col("pos") - 1),
         ).alias("delkey"),
     )
-
-
-def candidate_pairs(err_words: DataFrame, lexicon: DataFrame, lex_del: DataFrame) -> DataFrame:
-    """(err_word) → distinct (err_word, word, score) candidate pairs."""
-    bases = (
-        err_words.select("err_word", F.col("err_word").alias("base"))
-        .union(err_words.select("err_word", remove_punctuation(F.col("err_word")).alias("base")))
-        .filter(F.length("base") > 0)
-        .distinct()
-    )
-    err_del = _deletion_keys(bases)
-
-    lex_del_w = lex_del.filter(F.col("ch").isin(_WORDCHARS))
-    sub = (
-        err_del.join(lex_del_w, ["delkey", "pos"])
-        .select("err_word", "word", F.lit(P_SUB).alias("score"))
-    )
-    # insertion before i covers i = 0..len(base)-1 only — the reference
-    # never inserts at the END (correctionSentences.py:143-145), so the
-    # inserted char must not be the lexicon word's last char.
-    ins = (
-        bases.join(
-            lex_del_w,
-            (bases.base == lex_del_w.delkey) & (lex_del_w.pos < F.length(lex_del_w.word) - 1),
-        )
-        .select("err_word", "word", F.lit(P_INS).alias("score"))
-    )
-    dele = (
-        err_del.filter(F.length("delkey") > 0)
-        .join(lexicon.select("word"), err_del.delkey == F.col("word"))
-        .select("err_word", "word", F.lit(P_DEL).alias("score"))
-    )
-    unconditional = (
-        err_words.select("err_word", F.col("err_word").alias("word"), F.lit(1.0).alias("score"))
-        .union(
-            err_words.select(
-                "err_word", remove_punctuation(F.col("err_word")).alias("word"), F.lit(1.0).alias("score")
-            )
-        )
-    )
-    return sub.unionByName(ins).unionByName(dele).unionByName(unconditional).distinct()
 
 
 def _one_op_entries(s, n):
@@ -131,71 +96,76 @@ def _one_op_entries(s, n):
     return F.flatten(F.transform(F.sequence(F.lit(0), n - 1), at))
 
 
-def candidate_pairs_d2(
-    err_words: DataFrame, lexicon: DataFrame, words_for_generation: int = 15
-) -> DataFrame:
-    """Distance-2 candidate pairs — core/candidates.get_alternative_word
-    (max_distance=2) as a pure-Catalyst frontier expansion (D8 fixpoint):
-    round 1 explodes every one-op string of the bases, round 2 re-expands
-    the round-1 frontier ONLY for error words still under the
-    ``words_for_generation`` guard (the reference's loop guard,
-    correctionSentences.py:280-282), scores multiply along the path, and
-    candidates are frontier ∩ lexicon dedup'd on (word, score).
+def _matches(bases: DataFrame, lexicon: DataFrame, lex_del: DataFrame) -> DataFrame:
+    """(err_word, base, sc) → (err_word, word, score = sc·op) for every
+    lexicon word one pinned op away from ``base``: the three equi-joins."""
+    err_del = _deletion_keys(bases)
+    lex_del_w = lex_del.filter(F.col("ch").isin(_WORDCHARS))
+    sub = (
+        err_del.join(lex_del_w, ["delkey", "pos"])
+        .select("err_word", "word", (F.col("sc") * P_SUB).alias("score"))
+    )
+    # insertion before i covers i = 0..len(base)-1 only — the reference
+    # never inserts at the END (correctionSentences.py:143-145), so the
+    # inserted char must not be the lexicon word's last char.
+    ins = (
+        bases.join(
+            lex_del_w,
+            (bases.base == lex_del_w.delkey) & (lex_del_w.pos < F.length(lex_del_w.word) - 1),
+        )
+        .select("err_word", "word", (F.col("sc") * P_INS).alias("score"))
+    )
+    dele = (
+        err_del.filter(F.length("delkey") > 0)
+        .join(lexicon.select("word"), err_del.delkey == F.col("word"))
+        .select("err_word", "word", (F.col("sc") * P_DEL).alias("score"))
+    )
+    return sub.unionByName(ins).unionByName(dele)
 
-    Scale note: the frontier is O(len²·|WORDCHAR|²) rows per error word
-    and is shuffled for dedup — exact but heavyweight, the demonstration
-    path; the fused UDF mode dedups the same strings in executor memory
-    with zero shuffle and stays the throughput default (run_beam_udf)."""
+
+def candidate_pairs(
+    err_words: DataFrame, lexicon: DataFrame, lex_del: DataFrame, max_distance: int = 1
+) -> DataFrame:
+    """(err_word) → distinct (err_word, word, score) candidate pairs,
+    core/candidates.get_alternative_word as equi-joins. Distance 2 runs the
+    same joins once more over the round-1 frontier — the bases with score
+    1 and every string one op away — for the error words still under the
+    ``WORDS_FOR_GENERATION`` guard (correctionSentences.py:280-282); with
+    at most two unconditional candidates, the guard never stops round 1."""
+    if max_distance not in (1, 2):
+        raise ValueError(f"max_distance must be 1 or 2, got {max_distance}")
     w = F.col("err_word")
     bases = (
-        err_words.select("err_word", w.alias("s"))
-        .union(err_words.select("err_word", remove_punctuation(w).alias("s")))
-        .filter(F.length("s") > 0)
+        err_words.select("err_word", w.alias("base"))
+        .union(err_words.select("err_word", remove_punctuation(w).alias("base")))
+        .filter(F.length("base") > 0)
         .distinct()
         .withColumn("sc", F.lit(1.0))
     )
-    g1 = bases.select(
-        "err_word", F.explode(_one_op_entries(F.col("s"), F.length("s"))).alias("e")
-    ).select("err_word", F.col("e.t").alias("s"), F.col("e.sc").alias("sc"))
-    f1 = bases.unionByName(g1).distinct()
-
-    lex = lexicon.select("word")
-    unconditional = err_words.select(
-        "err_word", w.alias("word"), F.lit(1.0).alias("score")
-    ).union(err_words.select("err_word", remove_punctuation(w).alias("word"), F.lit(1.0).alias("score")))
-    c1 = (
-        unconditional.unionByName(
-            f1.join(lex, f1.s == lex.word).select("err_word", "word", F.col("sc").alias("score"))
-        )
-        .distinct()
+    unconditional = err_words.select("err_word", w.alias("word"), F.lit(1.0).alias("score")).union(
+        err_words.select("err_word", remove_punctuation(w).alias("word"), F.lit(1.0).alias("score"))
     )
-
-    # loop guard: a word with ≥ words_for_generation candidate PAIRS after
-    # round 1 never expands to distance 2
+    pairs = _matches(bases, lexicon, lex_del).unionByName(unconditional).distinct()
+    if max_distance == 1:
+        return pairs
     under = (
-        c1.groupBy("err_word")
+        pairs.groupBy("err_word")
         .agg(F.count(F.lit(1)).alias("n_cand"))
-        .filter(F.col("n_cand") < words_for_generation)
+        .filter(F.col("n_cand") < WORDS_FOR_GENERATION)
         .select("err_word")
     )
-    f1e = f1.join(F.broadcast(under), "err_word")
-    g2 = f1e.select(
-        "err_word",
-        "sc",
-        F.explode(_one_op_entries(F.col("s"), F.length("s"))).alias("e"),
-    ).select("err_word", F.col("e.t").alias("s"), (F.col("sc") * F.col("e.sc")).alias("sc"))
-    c2 = g2.join(lex, g2.s == lex.word).select("err_word", "word", F.col("sc").alias("score"))
-    return c1.unionByName(c2).distinct()
+    grown = bases.select(
+        "err_word", F.explode(_one_op_entries(F.col("base"), F.length("base"))).alias("e")
+    ).select("err_word", F.col("e.t").alias("base"), F.col("e.sc").alias("sc"))
+    frontier = bases.unionByName(grown).distinct().join(F.broadcast(under), "err_word")
+    return pairs.unionByName(_matches(frontier, lexicon, lex_del)).distinct()
 
 
 def candidate_batches(
     err_words: DataFrame, lexicon: DataFrame, lex_del: DataFrame, scorer_bc, max_distance: int = 1
 ) -> DataFrame:
     """Assemble the pinned ordered batch per error word (see module doc)."""
-    if max_distance >= 2:
-        pairs = candidate_pairs_d2(err_words, lexicon)
-    else:
-        pairs = candidate_pairs(err_words, lexicon, lex_del)
+    pairs = candidate_pairs(err_words, lexicon, lex_del, max_distance)
     base = F.col("base")
     punct = add_last_punctuation(F.col("err_word"))
     # each +punct variant is made from its entry of the SORTED BASE batch

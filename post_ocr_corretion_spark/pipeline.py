@@ -130,6 +130,8 @@ def run_pipeline_from_docs(
 
     if roulette_seed is not None and mode != "udf":
         raise ValueError("the seeded roulette W2 mode (correctionSentences.py:302-330) is UDF-mode only")
+    if max_distance not in (1, 2):
+        raise ValueError(f"max_distance must be 1 or 2, got {max_distance}")
 
     ensure_package_shipped(spark)
     # The lexicon job reads the raw scan: its token distinct aggregates

@@ -99,26 +99,44 @@ def test_deletion_index_equals_direct_probing(word, lexicon, data):
     )
 
 
-@settings(max_examples=60, deadline=None)
+@settings(max_examples=150, deadline=None)
 @given(
-    st.text(alphabet="abcd", min_size=1, max_size=3),
-    st.frozensets(st.text(alphabet="abcd", min_size=1, max_size=5), min_size=0, max_size=12),
+    st.one_of(
+        st.tuples(st.one_of(WORD, WIDE_WORD).map(lambda w: w[:5]), st.sampled_from(["", ".", ",", "!", "?", ";"])),
+        st.just(("", "")),
+    ),
+    st.frozensets(st.one_of(LEX_WORD, WIDE_WORD), min_size=0, max_size=12),
+    st.sampled_from([1, 2, 15, 10**9]),
+    st.booleans(),
+    st.data(),
 )
-def test_distance2_frontier_vs_bruteforce_two_ops(word, lexicon):
-    """d2 fixpoint output == unconditional ∪ (1-op ∪ 2-op strings found in
-    the lexicon with path-product scores), when the count guard is off."""
+def test_distance2_frontier_vs_bruteforce_two_ops(word_punct, lexicon, words_for_generation, indexed, data):
+    """d2 output == unconditional ∪ (1-op ∪ 2-op strings found in the
+    lexicon with path-product scores), each round run only while fewer
+    than ``words_for_generation`` candidates are held: any code point,
+    trailing punctuation, the empty word (empty ``w_nopunct``), both sides
+    of the guard, with and without the deletion index."""
     from post_ocr_corretion_spark.core.candidates import (
+        build_deletion_index,
         get_alternative_word,
         one_op_strings,
         remove_punctuation,
     )
 
-    w = word
-    got = get_alternative_word(w, lexicon, max_distance=2, words_for_generation=10**9)
+    w = "".join(word_punct).lower()
     nop = remove_punctuation(w)
+    if nop:  # plant some strings one and two ops away so that both rounds hit
+        near = sorted({t for b in {w, nop} for t, _ in one_op_strings(b)})
+        lexicon |= data.draw(st.frozensets(st.sampled_from(near), max_size=6))
+        far = sorted(t for t, _ in one_op_strings(data.draw(st.sampled_from(near))))
+        lexicon |= data.draw(st.frozensets(st.sampled_from(far), max_size=6))
+    delidx = build_deletion_index(lexicon) if indexed else None
+    got = get_alternative_word(w, lexicon, max_distance=2, words_for_generation=words_for_generation, delidx=delidx)
     want = {(w, 1.0), (nop, 1.0)}
     frontier = {(b, 1.0) for b in {w, nop} if b}
     for _ in range(2):
+        if words_for_generation <= len(want):
+            break
         grown = set()
         for s, sc in frontier:
             for t, osc in one_op_strings(s):
